@@ -165,7 +165,7 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 #       t_corpus_pipeline_e2e (dedup_near_stage), t_corpus_pipeline_
 #       incremental and t_stream_corpus_increments (lsh_index via
 #       build_state/apply_increment — ALSO touched by the r10
-#       apply_increment_detailed refactor and the per-batch unpersist,
+#       apply_increment refactor and the per-batch unpersist,
 #       so they re-prove two changes at once); plus t_minhash_signatures
 #       out of caution (its minhash_signatures path kept the distinct —
 #       plan unchanged — but exploded_shingles' signature changed);

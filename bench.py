@@ -352,8 +352,8 @@ def warm_sweep(spark, qs, names, sf_dir, cold_out=None):
 
 
 def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
-    """Measure the incremental pipeline's headline scale claim (VERDICT r9
-    item 6): ONE 20%-of-corpus increment against the materialized base
+    """Measure the incremental pipeline's headline scale claim: ONE
+    20%-of-corpus increment against the materialized base
     state vs a FULL five-table rebuild over the union. Both sides
     materialize all five stage tables via eager localCheckpoint (the
     compute a backfill/merge pays, without coupling the number to
@@ -361,7 +361,7 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
     BEFORE timing (the standing honesty split). Runs AFTER the headline
     sweeps so its cache churn cannot disturb the record.
 
-    Interpretation contract (measured r10, documented in SCALE.md §12i):
+    Interpretation contract (documented in SCALE.md §12i):
     at fixture scale the WALL ratio is ~1, NOT ≪1 — the sf0.1 corpus
     carries ~2.5 MB of text, so both sides are bound by the eager-job
     scheduling floor (~40 jobs each; the increment runs MORE jobs — five
@@ -376,18 +376,17 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
     text_rows_increment / text_rows_rebuild.
 
     The .v2 record (seven-table semantic state) runs over the EMBEDDED
-    sub-corpus with the 80/20 rule applied to the embedding id range
-    (r11, VERDICT r10 directive #3) — identical to the full split at the
-    gate SFs, and at sf0.1 the only split under which the increment's
-    semantic probes carry actual vectors (the fixture embeds only the
-    lowest 2000 of 5000 doc ids; the old split measured the empty-probe
-    path). vec_rows_* and sem_edges_added are its vector-side scale
-    terms."""
+    sub-corpus with the 80/20 rule applied to the embedding id range —
+    identical to the full split at the gate SFs, and at sf0.1 the only
+    split under which the increment's semantic probes carry actual
+    vectors (the fixture embeds only the lowest 2000 of 5000 doc ids; a
+    full-corpus split measures the empty-probe path). vec_rows_* and
+    sem_edges_added are its vector-side scale terms."""
     from pyspark.sql import functions as F
 
     from personal_data_lakehouse_spark.corpus_incremental import (
-        apply_increment_detailed,
-        build_state_detailed,
+        apply_increment,
+        build_state,
     )
     from personal_data_lakehouse_spark.plans import round9_ops
     from personal_data_lakehouse_spark.plans.registry import t as t_
@@ -406,7 +405,7 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
         try:
             cps = {
                 n: frame.localCheckpoint()
-                for n, frame in result.state.frames().items()
+                for n, frame in result.state.items()
             }
             result.release()
         finally:
@@ -415,39 +414,31 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
 
     t0 = time.perf_counter()
     inc_jobs, _ = _materialize(
-        "inc_vs_rebuild:inc", apply_increment_detailed(state, batch)
+        "inc_vs_rebuild:inc", apply_increment(state, batch)
     )
     inc_sec = time.perf_counter() - t0
 
     t0 = time.perf_counter()
     rebuild_jobs, _ = _materialize(
-        "inc_vs_rebuild:rebuild", build_state_detailed(docs)
+        "inc_vs_rebuild:rebuild", build_state(docs)
     )
     rebuild_sec = time.perf_counter() - t0
 
-    # ---- v2 (r10): the SAME contract over the seven-table semantic
-    # state — the increment's extra terms are batch-only cell assignment
-    # + stored-index probes, the rebuild's are corpus-wide embed+pair;
-    # the deterministic vector terms (vec_rows_*) scale exactly like the
-    # text terms (the v2 plan pins both batch-side scans).
+    # ---- v2: the SAME contract over the seven-table semantic state —
+    # the increment's extra terms are batch-only cell assignment +
+    # stored-index probes, the rebuild's are corpus-wide embed+pair; the
+    # deterministic vector terms (vec_rows_*) scale exactly like the text
+    # terms (the semantic plan pins both batch-side scans).
     #
-    # r11 (VERDICT r10 directive #3): v2 runs over the EMBEDDED
-    # sub-corpus (doc ids ≤ max vec_id) with the same 80/20 rule applied
-    # to the EMBEDDING id range. At the gate SFs embeddings span the
-    # whole corpus, so this is the identical split; at sf0.1 the fixture
-    # embeds only the lowest 2000 of 5000 doc ids — the old full-corpus
-    # split put every vector below the threshold and the record measured
-    # the EMPTY-probe path (vec_rows_increment: 0, the r10 caveat). The
-    # re-split loads both semantic pair generators (batch×corpus against
-    # the stored cell index AND batch×batch) at every SF; sem_edges_added
-    # proves it from the measured run itself.
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        apply_increment_v2_detailed,
-        build_state_v2_detailed,
-    )
-    from personal_data_lakehouse_spark.plans.round10_ops import (
-        _materialized_base_state_v2,
-    )
+    # v2 runs over the EMBEDDED sub-corpus (doc ids ≤ max vec_id) with
+    # the same 80/20 rule applied to the EMBEDDING id range. At the gate
+    # SFs embeddings span the whole corpus, so this is the identical
+    # split; at sf0.1 the fixture embeds only the lowest 2000 of 5000 doc
+    # ids, and a full-corpus split would put every vector below the
+    # threshold (the EMPTY-probe path). The re-split loads both semantic
+    # pair generators (batch×corpus against the stored cell index AND
+    # batch×batch) at every SF; sem_edges_added proves it from the
+    # measured run itself.
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CENTROID_IDS,
     )
@@ -468,21 +459,21 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
     n_batch2 = batch2.count()
     emb_batch = emb.filter(F.col("vec_id") >= thr2)
     n_emb_batch = emb_batch.count()
-    state2 = _materialized_base_state_v2(
-        spark, sf_dir, base2, tag="corpinc2L", lex_tag="corpincL"
+    state2 = round9_ops._materialized_base_state(
+        spark, sf_dir, base2, emb, cents, tag="corpincL"
     )
-    n_sem_base = state2.sem_edges.count()
+    n_sem_base = state2["sem_edges"].count()
 
     t0 = time.perf_counter()
     (inc2_jobs, inc2_cps) = _materialize(
         "inc_vs_rebuild:inc2",
-        apply_increment_v2_detailed(state2, batch2, emb_batch, cents),
+        apply_increment(state2, batch2, emb_batch, cents),
     )
     inc2_sec = time.perf_counter() - t0
 
     t0 = time.perf_counter()
     rebuild2_jobs, _ = _materialize(
-        "inc_vs_rebuild:rebuild2", build_state_v2_detailed(docs2, emb, cents)
+        "inc_vs_rebuild:rebuild2", build_state(docs2, emb, cents)
     )
     rebuild2_sec = time.perf_counter() - t0
     # post-timing: the semantic edges the LOADED increment actually added

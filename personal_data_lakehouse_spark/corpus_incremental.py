@@ -10,7 +10,9 @@ capstone ``corpus.corpus_pipeline``: a daily crawl delta must flow
 through the same gates and dedup decisions WITHOUT re-shingling or
 re-fingerprinting the existing corpus.
 
-The persisted state is five stage tables (``CorpusState``):
+The persisted state is ONE ``CorpusState``: a mapping from stage name
+(``STATE_KEYS``) to its table. The five LEXICAL stages are always
+present:
 
 * ``fp``        — (fp, keep_id): the exact-dedup fingerprint ledger;
 * ``shingles``  — (doc_id, shingles): the LSH Jaccard-verify side;
@@ -21,10 +23,18 @@ The persisted state is five stage tables (``CorpusState``):
   (closure, rebalance, split, pack, rollup) runs on this id+int
   skeleton, never re-reading text.
 
-The V2 state (r10) adds the SEMANTIC stage: ``cells`` (the IVF vector
-cell index over survivors' embeddings) and ``sem_edges`` (verified
-embedding-cosine near-dup edges); the derived closure then merges
-lexical ∪ semantic edges. See ``CorpusStateV2`` below.
+The two SEMANTIC stages are present exactly when the caller passes
+embeddings and centroids to ``build_state`` (and then to every
+``apply_increment``):
+
+* ``cells``     — (doc_id, e array<float>, _vn double, cell): the IVF
+  cell index over exact-kept survivors' embeddings — vector + its
+  precomputed norm stored WITH the cell id, exactly what the probe needs
+  (the online admit loop's sink carries the same columns,
+  round9_ops._V2_DEC_SCHEMA);
+* ``sem_edges`` — (id_a, id_b): verified semantic near-dup edges
+  (rounded cosine ≥ ``SEM_THRESHOLD``, id_a < id_b); the derived
+  closure then runs over lexical ∪ semantic edges.
 
 Incrementality contract (the append-only id invariant): every batch
 doc_id must EXCEED every id already in the state. Under that invariant
@@ -36,22 +46,24 @@ function that appends cannot retro-flip at the STAGE-TABLE level:
   displace a stored keeper, so the ledger only gains rows (insert-only
   MERGE), and a batch doc whose fp is already in the ledger is dropped
   exactly as the full rebuild drops it;
-* LSH banding is a pure per-document function — the stored band index
-  rows for base docs are what a rebuild would recompute; new candidate
-  pairs are exactly the pairs a rebuild would add (batch×corpus via the
-  stored index, batch×batch via self-join), so the edge table also only
-  gains rows;
+* LSH banding and cell assignment are pure per-document functions — the
+  stored band/cell rows for base docs are what a rebuild would
+  recompute; new candidate pairs are exactly the pairs a rebuild would
+  add (batch×corpus via the stored index, batch×batch via self-join),
+  so both edge tables also only gain rows;
 * what CAN flip is the DERIVED canonical decision (a batch doc bridging
-  two existing clusters merges them, re-pointing cluster minima) and
-  the rebalance thresholds (global per-source counts move) — so those
-  are recomputed from the merged SPARSE state (edge closure + skeleton
-  counts) per run, never stored as if append-stable.
+  two existing clusters — lexical, semantic, or one of each — merges
+  them, re-pointing cluster minima) and the rebalance thresholds
+  (global per-source counts move) — so those are recomputed from the
+  merged SPARSE state (edge closure + skeleton counts) per run, never
+  stored as if append-stable.
 
-Work per increment: O(batch text) for gates/fingerprints/shingles, O(new
-candidate pairs) for verification, O(total edges) for the closure (the
-adaptive ``connected_components`` — edges are the sparse edge-incident
-subgraph, not the corpus), O(survivor ids) for rebalance/split/pack. The
-100 TB corpus' TEXT is touched exactly once per document, at the
+Work per increment: O(batch text) for gates/fingerprints/shingles,
+O(batch vectors) for cell assignment, O(new candidate pairs) for
+verification, O(total edges) for the closure (the adaptive
+``connected_components`` — edges are the sparse edge-incident subgraph,
+not the corpus), O(survivor ids) for rebalance/split/pack. The 100 TB
+corpus' TEXT and vectors are touched exactly once per document, at the
 increment that ingested it.
 
 Reference parity: transforme_stock_silver.py:41-97 (incremental filter),
@@ -61,6 +73,7 @@ composed with the LLM-pipeline extension family.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,65 +97,109 @@ from personal_data_lakehouse_spark.operators.merge import merge_insert_only
 
 NEAR_THRESHOLD = 0.5  # verified-Jaccard keep bound, same as corpus.py
 
-
-@dataclass
-class CorpusState:
-    """The five persisted stage tables of an incremental corpus deploy."""
-
-    fp: DataFrame
-    shingles: DataFrame
-    bands: DataFrame
-    edges: DataFrame
-    skeleton: DataFrame
-
-    def frames(self) -> dict[str, DataFrame]:
-        return {
-            "fp": self.fp,
-            "shingles": self.shingles,
-            "bands": self.bands,
-            "edges": self.edges,
-            "skeleton": self.skeleton,
-        }
-
+SEM_THRESHOLD = 0.3
+"""Rounded-cosine keep bound for semantic edges. 0.3 (vs the standalone
+``t_semdedup_clusters``' 0.4) so the fixture exercises BOTH incremental
+pair generators naturally at both differential-gate SFs — measured over
+the exact-kept survivors: batch×corpus bridges 46 (sf0.001) / 48
+(sf0.01) and batch×batch pairs 5 / 5 at 0.3, versus 5 / 3 bridges and
+ZERO batch×batch pairs at 0.4 (the v2-admit threshold precedent,
+plans/round9_ops.py:157)."""
 
 # MERGE keys per stage table (all insert-only: see module docstring for
 # why the stored tables only ever gain rows under the append-only id
-# invariant — derived decisions that CAN flip are recomputed, not stored).
+# invariant — derived decisions that CAN flip are recomputed, not
+# stored). The lexical stages come first; the semantic ones start at
+# ``cells`` (see ``stage_names``).
 STATE_KEYS: dict[str, list[str]] = {
     "fp": ["fp"],
     "shingles": ["doc_id"],
     "bands": ["doc_id", "band"],
     "edges": ["id_a", "id_b"],
     "skeleton": ["doc_id"],
+    "cells": ["doc_id"],
+    "sem_edges": ["id_a", "id_b"],
 }
 
 
-class _LazyCorpusState(CorpusState):
-    """``CorpusState`` whose fields may be ZERO-ARG THUNKS, resolved (and
-    memoized) on first attribute access.
+def stage_names(semantic: bool) -> list[str]:
+    """The stages a state carries: all of ``STATE_KEYS`` when it has the
+    semantic stage, the lexical prefix before ``cells`` otherwise."""
+    names = list(STATE_KEYS)
+    return names if semantic else names[: names.index("cells")]
 
-    r13 optimization (guide §1.2 order-1, §7.3 planning cost — VERDICT
-    r12 directive #1): every DataFrame operation pays Catalyst analysis
-    eagerly at construction, so building all five merged-state frames
-    per increment charges consumers that read only a subset — the
-    derived-decision rollup consumes skeleton+edges, yet paid the
-    fp/shingles/bands merge analyses on every invocation. A thunk field
-    defers that cost to first access; consumers that force everything
-    (``frames()`` — the stream loop's per-batch checkpoint barrier, the
-    managed-table MERGE) behave exactly as before. The resolved frame is
-    written back to the instance, so repeated access analyses once.
 
-    Plain-``DataFrame`` fields pass through untouched, which keeps
-    ``dataclasses.replace`` working: it forces every field (via getattr)
-    and rebuilds an instance holding materialized frames.
-    """
+class CorpusState(Mapping[str, DataFrame]):
+    """The persisted stage tables of an incremental corpus deploy, keyed
+    by stage name — the lexical five, plus ``cells``/``sem_edges`` for a
+    semantic state.
 
-    def __getattribute__(self, name):
-        val = object.__getattribute__(self, name)
-        if name in STATE_KEYS and callable(val):
-            val = val()
-            object.__setattr__(self, name, val)
-        return val
+    A value may be a ZERO-ARG THUNK, resolved and memoized on first read.
+    Every DataFrame operation pays Catalyst analysis at construction, so
+    building all merged-state frames per increment would charge
+    consumers that read only a subset: the rollup reads skeleton + edges
+    (+ sem_edges), never fp/shingles/bands/cells. Consumers that read
+    everything (``items()`` — the stream loop's checkpoint barrier, the
+    managed-table MERGE) resolve each thunk once."""
+
+    def __init__(
+        self, frames: Mapping[str, DataFrame | Callable[[], DataFrame]]
+    ):
+        if list(frames) not in (stage_names(False), stage_names(True)):
+            raise ValueError(f"not a corpus state: {list(frames)}")
+        self._frames = dict(frames)
+
+    def __getitem__(self, name: str) -> DataFrame:
+        frame = self._frames[name]
+        if callable(frame):
+            frame = self._frames[name] = frame()
+        return frame
+
+    def __contains__(self, name: object) -> bool:
+        # membership must not resolve a thunk (Mapping's default does)
+        return name in self._frames
+
+    def __iter__(self):
+        return iter(self._frames)
+
+    def __len__(self) -> int:
+        return len(self._frames)
+
+
+@dataclass
+class IncrementResult:
+    """A built or merged state plus the INTERNAL frames it persisted
+    (gated corpus / exact-kept survivors / LSH doc aggregate / cell
+    index), so callers can ``unpersist()`` them once the state has been
+    materialized — a loop of increments on an unbounded stream otherwise
+    accretes one cached frame set per batch."""
+
+    state: CorpusState
+    persisted: list[DataFrame]
+
+    def release(self) -> None:
+        """Unpersist the internal caches. Call only AFTER the state has
+        been materialized (localCheckpoint / table write) — the state's
+        frames' lineage reads through these caches."""
+        for frame in self.persisted:
+            frame.unpersist()
+
+
+@dataclass
+class RollupResult:
+    """``state_rollup``'s return: the rollup frame plus the derived-stage
+    chain's internal persists (merged skeleton + canonical survivors),
+    releasable once the caller has materialized the rollup. Registered
+    queries rely on the harness clearCache contract; LOOPING callers
+    must ``release()`` after their barrier or one cached frame pair
+    accretes per call."""
+
+    rollup: DataFrame
+    persisted: list[DataFrame]
+
+    def release(self) -> None:
+        for frame in self.persisted:
+            frame.unpersist()
 
 
 def _skeleton(kept: DataFrame) -> DataFrame:
@@ -153,174 +210,11 @@ def _skeleton(kept: DataFrame) -> DataFrame:
     )
 
 
-def _verified_pairs(cand: DataFrame, threshold: float) -> DataFrame:
-    """Exact shingle-Jaccard verification over candidate rows carrying
-    both shingle arrays — the same round-then-compare expression
-    ``dedup_near_stage`` filters on, so incremental and full-rebuild
-    edges agree bit-exactly."""
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    j = F.round(inter.cast("double") / union, 6)
-    return cand.filter(j >= F.lit(threshold)).select("id_a", "id_b")
-
-
-def build_state(docs: DataFrame) -> CorpusState:
-    """Full pipeline run over the BASE corpus, returning the stage tables
-    an incremental deployment persists. One-time (or backfill) cost."""
-    return build_state_detailed(docs).state
-
-
-def build_state_detailed(docs: DataFrame) -> "IncrementResult":
-    """``build_state`` plus the handles the v2 (semantic) extension and
-    materializing callers need: ``batch_kept`` carries the exact-kept
-    survivors (here the whole base corpus' — the "batch" is the backfill),
-    ``persisted`` the internal LSH doc cache to release after the tables
-    are written."""
-    # r12 optimization (guide §1.2/§2.4): persist the gated corpus and the
-    # exact-kept survivors — ``base`` feeds the fingerprint ledger branch
-    # AND both sides of the exact-dedup join-back, ``kept`` feeds the LSH
-    # index build, the skeleton and (v2) the cell assignment; unpersisted,
-    # each branch re-ran the corpus intake/fingerprint text work. These
-    # are the intake/dedup_exact stage tables the managed pipeline writes
-    # (corpus_pipeline) — the persist is their lazy-composition form;
-    # both release via the IncrementResult barrier contract.
-    base = intake(docs).persist()
-    fp = exact_dedup(base).select("fp", "keep_id")
-    kept = dedup_exact_stage(base).persist()
-    lsh_docs, banded = lsh_index(kept)
-    shingles = lsh_docs.select("doc_id", "shingles")
-    # verified base×base edges from the same single index build
+def _band_pairs(banded: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of documents in ``banded`` that
+    collide in some LSH band bucket."""
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .join(
-            shingles.select(
-                F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
-            ),
-            "id_a",
-        )
-        .join(
-            shingles.select(
-                F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")
-            ),
-            "id_b",
-        )
-    )
-    edges = _verified_pairs(cand, NEAR_THRESHOLD)
-    state = CorpusState(
-        fp=fp,
-        shingles=shingles,
-        bands=banded.select("doc_id", "band", "bucket"),
-        edges=edges,
-        skeleton=_skeleton(kept),
-    )
-    return IncrementResult(
-        state=state, batch_kept=kept, persisted=[lsh_docs, base, kept]
-    )
-
-
-@dataclass
-class IncrementResult:
-    """``apply_increment_detailed``'s full return: the merged state plus
-    the batch's exact-kept survivors (the frame downstream semantic /
-    v2 stages index — r10) and the increment's INTERNAL persisted frames
-    (the batch LSH doc aggregate), so callers that loop increments can
-    ``unpersist()`` them once the per-batch materialization barrier has
-    passed (r9 ADVICE: the streaming loop otherwise accretes one cached
-    frame per micro-batch on an unbounded stream)."""
-
-    state: CorpusState
-    batch_kept: DataFrame
-    persisted: list[DataFrame]
-
-    def release(self) -> None:
-        """Unpersist the increment's internal caches. Call only AFTER the
-        merged state has been materialized (localCheckpoint / table
-        write) — the merged frames' lineage reads through these caches."""
-        for frame in self.persisted:
-            frame.unpersist()
-
-
-def apply_increment(
-    state: CorpusState, batch_docs: DataFrame, threshold: float = NEAR_THRESHOLD
-) -> CorpusState:
-    """Process ONE new-docs batch against the existing state and return
-    the MERGED state (all five tables via insert-only MERGE).
-
-    Only the batch's text is gated/fingerprinted/shingled; the corpus
-    side is the stored index. Idempotent: re-applying a batch whose
-    fingerprints are already in the ledger inserts nothing anywhere
-    (the replay property ``tests/test_corpus_incremental.py`` pins).
-    """
-    return apply_increment_detailed(state, batch_docs, threshold).state
-
-
-def apply_increment_detailed(
-    state: CorpusState, batch_docs: DataFrame, threshold: float = NEAR_THRESHOLD
-) -> IncrementResult:
-    """``apply_increment`` plus the handles loops and v2 stages need —
-    see ``IncrementResult``. The merged-state plans are identical to
-    ``apply_increment``'s (this IS its body; the thin wrapper above keeps
-    the one-result signature)."""
-    from personal_data_lakehouse_spark.functions.text import fingerprint
-
-    b_in = intake(batch_docs)
-    # exact dedup vs the ledger: fingerprints already present keep their
-    # stored (smaller-id) keeper; genuinely new fingerprints keep the
-    # batch-min id — together exactly the union's min-id-per-fp rule.
-    b_fpd = b_in.withColumn("fp", fingerprint("text"))
-    # r12 optimization (guide §1.2/§2.4): persist the anti-joined batch —
-    # the fp-ledger merge (via b_keep) and the survivor join both consume
-    # it, and each unpersisted consumer re-ran the batch intake gates +
-    # text fingerprint + ledger anti-join. Batch-sized; released by the
-    # IncrementResult barrier contract like the other increment caches.
-    b_new = b_fpd.join(state.fp.select("fp"), "fp", "left_anti").persist()
-    b_keep = b_new.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    # r12 optimization (guide §1.2/§2.4): persist the batch's exact-kept
-    # survivors — consumed by the LSH index build, the skeleton merge and
-    # (v2) the cell assignment; unpersisted, each consumer re-ran the
-    # intake gates + text fingerprint + ledger anti-join over the batch
-    # (~3 full batch-text passes per increment, ×batches in the stream
-    # loop). The cache is batch-sized (a daily delta), released by the
-    # standing ``IncrementResult.release()`` barrier contract.
-    b_kept = (
-        b_new.join(b_keep.select(F.col("keep_id").alias("doc_id")), "doc_id")
-        .drop("fp")
-        .persist()
-    )
-
-    # LSH: index the batch survivors only; probe stored bands for
-    # batch×corpus candidates, self-join for batch×batch.
-    b_docs, b_banded = lsh_index(b_kept)
-    b_sh = b_docs.select("doc_id", "shingles")
-    bc = (
-        state.bands.select(
-            F.col("doc_id").alias("id_a"), "band", "bucket"
-        )
-        .join(
-            b_banded.select(F.col("doc_id").alias("id_b"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        # under the append-only contract every stored id < every batch id,
-        # so this filter is a no-op — it is defense in depth against a
-        # CONTRACT VIOLATION (a replayed/overlapping batch whose ids are
-        # already in the band index) manufacturing self-edges
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    a, b = b_banded.alias("a"), b_banded.alias("b")
-    bb = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -332,225 +226,49 @@ def apply_increment_detailed(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    # bc (corpus id_a) and bb (both batch) are disjoint by the append-only
-    # id invariant, so plain unionByName — no dedup shuffle needed
-    all_sh = state.shingles.unionByName(b_sh)
-    cand = (
-        bc.unionByName(bb)
-        .join(
-            all_sh.select(
-                F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
-            ),
-            "id_a",
-        )
-        .join(
-            b_sh.select(
-                F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")
-            ),
-            "id_b",
-        )
+
+
+def _verified_pairs(
+    pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact shingle-Jaccard verification of candidate (id_a, id_b) pairs,
+    id_a's shingles looked up in ``sh_a`` and id_b's in ``sh_b`` — the
+    same round-then-compare expression ``dedup_near_stage`` filters on,
+    so incremental and full-rebuild edges agree bit-exactly."""
+    cand = pairs.join(
+        sh_a.select(
+            F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
+        ),
+        "id_a",
+    ).join(
+        sh_b.select(
+            F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")
+        ),
+        "id_b",
     )
-    new_edges = _verified_pairs(cand, threshold)
-
-    # r13 (guide §1.2/§7.3, VERDICT r12 directive #1): the merged frames
-    # are THUNKS — a consumer pays Catalyst analysis only for the tables
-    # it reads (the rollup reads skeleton+edges; the stream/MERGE paths
-    # force all five via frames() exactly as before). Same expressions,
-    # same results, deferred construction.
-    merged = _LazyCorpusState(
-        fp=lambda: merge_insert_only(state.fp, b_keep, STATE_KEYS["fp"]),
-        shingles=lambda: merge_insert_only(
-            state.shingles, b_sh, STATE_KEYS["shingles"]
-        ),
-        bands=lambda: merge_insert_only(
-            state.bands,
-            b_banded.select("doc_id", "band", "bucket"),
-            STATE_KEYS["bands"],
-        ),
-        edges=lambda: merge_insert_only(
-            state.edges, new_edges, STATE_KEYS["edges"]
-        ),
-        skeleton=lambda: merge_insert_only(
-            state.skeleton, _skeleton(b_kept), STATE_KEYS["skeleton"]
-        ),
-    )
-    # persisted: the batch LSH doc aggregate + the anti-joined batch +
-    # the batch survivors (r12)
-    return IncrementResult(
-        state=merged, batch_kept=b_kept, persisted=[b_docs, b_new, b_kept]
-    )
-
-
-@dataclass
-class RollupResult:
-    """``state_rollup_detailed``'s return: the rollup frame plus the
-    derived-stage chain's internal persists (merged skeleton + canonical
-    survivors), releasable once the caller has materialized the rollup.
-    Registered-query callers stay covered by the harness clearCache
-    contract; LOOPING callers (an increment-then-rollup-per-batch
-    driver) must ``release()`` after their barrier or one cached frame
-    pair accretes per call (the r9 ADVICE leak class)."""
-
-    rollup: DataFrame
-    persisted: list[DataFrame]
-
-    def release(self) -> None:
-        for frame in self.persisted:
-            frame.unpersist()
-
-
-def _rollup_from(
-    skeleton: DataFrame, edges: DataFrame, budget: int
-) -> RollupResult:
-    """The shared derived-decision chain over (skeleton, edges) — the
-    single body behind ``state_rollup`` and ``state_rollup_v2`` (the two
-    parity rollups cannot drift)."""
-    # r13 (VERDICT r12 directive #4, guide §2.4): persist the MERGED
-    # skeleton — both the closure's roster (the corpus-side left join in
-    # dedup_clusters) and the survivor join consume it, and each
-    # consumer's two-branch merge subtree re-scanned the skeleton
-    # artifact (4 scans per invocation in the r12 after-plan); cached,
-    # the merge executes once. id+int rows — survivor-count-sized at any
-    # corpus scale; on a cluster this is the written stage table.
-    skel = skeleton.persist()
-    labels = dedup_clusters(skel.select("doc_id"), edges)
-    # r12 optimization (guide §1.2/§2.4): persist the canonical-survivor
-    # skeleton — rebalance consumes it twice (count + keep-join branches)
-    # and the chain re-executed the merged-skeleton subtree once per
-    # branch (measured: 12 skeleton/fp/batch-documents scans in one
-    # incremental invocation; after: the merge subtree runs once).
-    survivors = skel.join(
-        labels.filter(F.col("is_canonical")).select("doc_id"), "doc_id"
-    ).persist()
-    staged = split_stage(rebalance_stage(survivors))
-    return RollupResult(
-        rollup=pipeline_rollup(
-            packed_docs(staged, budget=budget, tok_col="tok")
-        ),
-        persisted=[skel, survivors],
-    )
-
-
-def state_rollup(state: CorpusState, budget: int = 512) -> DataFrame:
-    """Recompute the DERIVED pipeline decisions from the merged state and
-    roll up the end state per (source, split) — the same hashed surface
-    as ``t_corpus_pipeline_e2e`` (``corpus.pipeline_rollup``).
-
-    Derived per run because appends CAN flip them: the near-dup closure
-    (a batch doc may bridge two existing clusters, re-pointing cluster
-    minima — previously-canonical base docs lose the flag) and the
-    temperature-rebalance thresholds (global per-source counts moved).
-    Both run on the sparse state: the closure on the edge table, the
-    rest on the id+int skeleton — no text is read here.
-
-    Internal persists (merged skeleton, canonical survivors) have no
-    release path through THIS signature — the registered queries rely on
-    the harness clearCache contract; a looping caller should use
-    ``state_rollup_detailed`` and ``release()`` after materializing."""
-    return state_rollup_detailed(state, budget).rollup
-
-
-def state_rollup_detailed(
-    state: CorpusState, budget: int = 512
-) -> RollupResult:
-    """``state_rollup`` plus the releasable persist handles (r12 ADVICE:
-    the rollup's internal persists previously leaked in increment loops)."""
-    return _rollup_from(state.skeleton, state.edges, budget)
-
-
-# ---------------------------------------------------------------------------
-# V2: the SEMANTIC (embedding) stage in the incremental state (r10,
-# VERDICT r9 "What's missing #1" / directive #2). The persisted state
-# gains the two artifacts the ONLINE admit loop already maintains
-# per-batch (plans/round9_ops.online_semdedup_admit): the vector cell
-# index and the verified semantic edge table. A daily-delta deployment
-# then gets SemDeDup in the funnel WITHOUT re-embedding or re-pairing
-# the corpus: the batch assigns its own cells, probes the stored index
-# for batch×corpus pairs (cell-local), self-joins for batch×batch, and
-# the derived closure merges lexical AND semantic edges.
-#
-# The append-only id invariant covers the semantic tables for the same
-# reason it covers the lexical ones: cell assignment is a pure
-# per-document function (stored rows are exactly what a rebuild would
-# recompute), and the cell-local pair set over (base ∪ batch) is exactly
-# stored-pairs ∪ batch×corpus ∪ batch×batch — so both tables only gain
-# rows (insert-only MERGE), while the decisions appends CAN flip (a batch
-# doc bridging a LEXICAL cluster and a SEMANTIC cluster merges them) are
-# recomputed from the merged sparse edges per run.
-
-SEM_THRESHOLD = 0.3
-"""Rounded-cosine keep bound for semantic edges. 0.3 (vs the standalone
-``t_semdedup_clusters``' 0.4) so the fixture exercises BOTH incremental
-pair generators naturally at both differential-gate SFs — measured over
-the exact-kept survivors: batch×corpus bridges 46 (sf0.001) / 48
-(sf0.01) and batch×batch pairs 5 / 5 at 0.3, versus 5 / 3 bridges and
-ZERO batch×batch pairs at 0.4 (the v2-admit threshold precedent,
-plans/round9_ops.py:157)."""
-
-
-@dataclass
-class CorpusStateV2:
-    """The v1 lexical state plus the two semantic stage tables:
-
-    * ``cells``     — (doc_id, e array<float>, _vn double, cell): the IVF
-      cell index over exact-kept survivors' embeddings — vector + its
-      precomputed norm stored WITH the cell id, exactly what the probe
-      needs (the production IVF index shape; the online admit loop's
-      sink carries the same columns, round9_ops._V2_DEC_SCHEMA);
-    * ``sem_edges`` — (id_a, id_b): verified semantic near-dup edges
-      (rounded cosine ≥ ``SEM_THRESHOLD``, id_a < id_b).
-    """
-
-    lex: CorpusState
-    cells: DataFrame
-    sem_edges: DataFrame
-
-    def frames(self) -> dict[str, DataFrame]:
-        return {
-            **self.lex.frames(),
-            "cells": self.cells,
-            "sem_edges": self.sem_edges,
-        }
-
-
-STATE_KEYS_V2: dict[str, list[str]] = {
-    **STATE_KEYS,
-    "cells": ["doc_id"],
-    "sem_edges": ["id_a", "id_b"],
-}
-
-
-class _LazyCorpusStateV2(CorpusStateV2):
-    """``CorpusStateV2`` with thunk-able ``cells``/``sem_edges`` fields —
-    the v2 counterpart of ``_LazyCorpusState`` (same contract: resolve
-    and memoize on first access; the v2 rollup reads skeleton, lexical
-    edges and sem_edges, so the cells merge is analyzed only by
-    consumers that actually read it)."""
-
-    _V2_LAZY = ("cells", "sem_edges")
-
-    def __getattribute__(self, name):
-        val = object.__getattribute__(self, name)
-        if name in _LazyCorpusStateV2._V2_LAZY and callable(val):
-            val = val()
-            object.__setattr__(self, name, val)
-        return val
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    j = F.round(inter.cast("double") / union, 6)
+    return cand.filter(j >= F.lit(threshold)).select("id_a", "id_b")
 
 
 def _doc_cells(
-    kept_ids: DataFrame, emb: DataFrame, cents: DataFrame
+    kept: DataFrame, emb: DataFrame, cents: DataFrame
 ) -> DataFrame:
-    """Cell-index rows for the given survivor ids: join doc_id ↔ the
-    embeddings table's vec_id (the fixture's 1:1 document-embedding key),
-    then the standard nearest-centroid assignment (broadcast codebook,
-    ``similarity.ivf.assign_cells`` — norms materialized once). Documents
-    without an embedding row simply contribute no semantic edges."""
+    """PERSISTED cell-index rows for the given survivors: join doc_id ↔
+    the embeddings table's vec_id (the fixture's 1:1 document-embedding
+    key), then the standard nearest-centroid assignment (broadcast
+    codebook, ``similarity.ivf.assign_cells`` — norms materialized
+    once). Persisted (coalesce-first) because the pair self-join reads
+    it twice and the cells MERGE once more. Documents without an
+    embedding row simply contribute no semantic edges."""
     from personal_data_lakehouse_spark.similarity.ivf import assign_cells
 
     vecs = emb.select(
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("e")
-    ).join(kept_ids.select("doc_id"), "doc_id")
-    return assign_cells(vecs, cents, "doc_id", "e")
+    ).join(kept.select("doc_id"), "doc_id")
+    npart = kept.sparkSession.sparkContext.defaultParallelism
+    return assign_cells(vecs, cents, "doc_id", "e").coalesce(npart).persist()
 
 
 def _sem_pairs(a_cells: DataFrame, b_cells: DataFrame) -> DataFrame:
@@ -584,140 +302,194 @@ def _sem_pairs(a_cells: DataFrame, b_cells: DataFrame) -> DataFrame:
     )
 
 
-def build_state_v2(
-    docs: DataFrame, emb: DataFrame, cents: DataFrame
-) -> CorpusStateV2:
-    """Full v2 pipeline run over the BASE corpus: the lexical five-table
-    state plus the semantic cell index and base×base semantic edges over
-    the exact-kept survivors. The cell index is persisted (coalesce-first
-    idiom) because the edge self-join consumes it twice and the state
-    returns it once more. Callers that materialize-and-move-on (bench,
-    state loops) should use ``build_state_v2_detailed`` and ``release()``
-    the build's internal persists after their checkpoint barrier."""
-    return build_state_v2_detailed(docs, emb, cents).state  # type: ignore[return-value]
-
-
-def build_state_v2_detailed(
-    docs: DataFrame, emb: DataFrame, cents: DataFrame
+def build_state(
+    docs: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
 ) -> IncrementResult:
-    """``build_state_v2`` plus the detailed contract: ``persisted``
-    carries the lexical build's internal caches AND the cell index, all
-    releasable once the caller has materialized (checkpointed/written)
-    the state — without it a build-then-discard loop accretes one cached
-    cell frame per rebuild (the r9 ADVICE class of leak)."""
-    built = build_state_detailed(docs)
-    npart = docs.sparkSession.sparkContext.defaultParallelism
-    cells = (
-        _doc_cells(built.batch_kept.select("doc_id"), emb, cents)
-        .coalesce(npart)
-        .persist()
-    )
-    state = CorpusStateV2(
-        lex=built.state,
-        cells=cells,
-        sem_edges=_sem_pairs(cells, cells),
-    )
-    return IncrementResult(
-        state=state,  # type: ignore[arg-type]
-        batch_kept=built.batch_kept,
-        persisted=built.persisted + [cells],
-    )
+    """Full pipeline run over the BASE corpus, returning the stage tables
+    an incremental deployment persists. One-time (or backfill) cost.
+
+    With ``emb``/``cents`` the state also carries the semantic stages:
+    the cell index over the exact-kept survivors and their base×base
+    semantic edges. ``persisted`` holds the build's internal caches —
+    release them after the tables are written/checkpointed."""
+    # persist the gated corpus and the exact-kept survivors — ``base``
+    # feeds the fingerprint ledger branch AND both sides of the
+    # exact-dedup join-back, ``kept`` feeds the LSH index build, the
+    # skeleton and the cell assignment; unpersisted, each branch re-ran
+    # the corpus intake/fingerprint text work
+    base = intake(docs).persist()
+    fp = exact_dedup(base).select("fp", "keep_id")
+    kept = dedup_exact_stage(base).persist()
+    lsh_docs, banded = lsh_index(kept)
+    shingles = lsh_docs.select("doc_id", "shingles")
+    frames = {
+        "fp": fp,
+        "shingles": shingles,
+        "bands": banded.select("doc_id", "band", "bucket"),
+        # verified base×base edges from the same single index build
+        "edges": _verified_pairs(
+            _band_pairs(banded), shingles, shingles, NEAR_THRESHOLD
+        ),
+        "skeleton": _skeleton(kept),
+    }
+    persisted = [lsh_docs, base, kept]
+    if emb is not None:
+        cells = _doc_cells(kept, emb, cents)
+        frames.update(cells=cells, sem_edges=_sem_pairs(cells, cells))
+        persisted.append(cells)
+    return IncrementResult(state=CorpusState(frames), persisted=persisted)
 
 
-def apply_increment_v2(
-    state: CorpusStateV2,
+def apply_increment(
+    state: Mapping[str, DataFrame],
     batch_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
-    threshold: float = NEAR_THRESHOLD,
-) -> CorpusStateV2:
-    """One new-docs batch MERGEd through the LEXICAL funnel (exactly
-    ``apply_increment``) AND the SEMANTIC stage: the batch's exact-kept
-    survivors are embedded-probed-verified against the STORED cell index
-    (batch×corpus, cell-local) and against themselves (batch×batch), and
-    all seven tables merge insert-only. Only batch text is read and only
-    batch vectors are assigned; corpus vectors are touched exactly once
-    per document's lifetime — at the increment that ingested them
-    (their stored (vector, norm, cell) rows ARE the probe side).
-
-    Idempotent like v1: a replayed batch's fingerprints are already in
-    the ledger, so ``batch_kept`` is empty and no table gains rows."""
-    return apply_increment_v2_detailed(
-        state, batch_docs, emb, cents, threshold
-    ).state
-
-
-def apply_increment_v2_detailed(
-    state: CorpusStateV2,
-    batch_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
     threshold: float = NEAR_THRESHOLD,
 ) -> IncrementResult:
-    """``apply_increment_v2`` plus the v1 detailed contract (the returned
-    ``IncrementResult.state`` is a ``CorpusStateV2``): ``persisted``
-    carries the batch LSH doc aggregate AND the batch cell index, both
-    releasable after the caller's materialization barrier."""
-    inc = apply_increment_detailed(state.lex, batch_docs, threshold)
-    npart = batch_docs.sparkSession.sparkContext.defaultParallelism
-    # persisted: consumed by the batch×corpus probe, the batch×batch
-    # self-join (twice), and the cells MERGE
-    b_cells = (
-        _doc_cells(inc.batch_kept.select("doc_id"), emb, cents)
-        .coalesce(npart)
+    """Process ONE new-docs batch against the existing state and return
+    the MERGED state (every stage table via insert-only MERGE) plus the
+    increment's internal persists (see ``IncrementResult``).
+
+    Only the batch's text is gated/fingerprinted/shingled; the corpus
+    side is the stored index. A semantic state (one with ``cells``)
+    needs the batch's ``emb`` and the ``cents`` codebook: the batch's
+    exact-kept survivors are assigned cells and probed against the
+    STORED cell index (batch×corpus, cell-local) and against themselves
+    (batch×batch); corpus vectors are never re-read — their stored
+    (vector, norm, cell) rows ARE the probe side.
+
+    Idempotent: re-applying a batch whose fingerprints are already in
+    the ledger inserts nothing anywhere (the replay property
+    ``tests/test_corpus_incremental.py`` pins)."""
+    from personal_data_lakehouse_spark.functions.text import fingerprint
+
+    if ("cells" in state) != (emb is not None):
+        raise ValueError(
+            "pass emb/cents exactly when the state has the semantic stages"
+        )
+    b_in = intake(batch_docs)
+    # exact dedup vs the ledger: fingerprints already present keep their
+    # stored (smaller-id) keeper; genuinely new fingerprints keep the
+    # batch-min id — together exactly the union's min-id-per-fp rule.
+    b_fpd = b_in.withColumn("fp", fingerprint("text"))
+    # persist the anti-joined batch: the fp-ledger merge (via b_keep)
+    # and the survivor join both consume it, and each unpersisted
+    # consumer re-ran the batch intake gates + text fingerprint + ledger
+    # anti-join
+    b_new = b_fpd.join(state["fp"].select("fp"), "fp", "left_anti").persist()
+    b_keep = b_new.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
+    # persist the batch's exact-kept survivors — consumed by the LSH
+    # index build, the skeleton merge and the cell assignment;
+    # unpersisted, each consumer re-ran the batch text work
+    b_kept = (
+        b_new.join(b_keep.select(F.col("keep_id").alias("doc_id")), "doc_id")
+        .drop("fp")
         .persist()
     )
-    # batch×corpus (stored index is the id_a side — every stored id is
-    # smaller under the append-only invariant; the helper's id_a < id_b
-    # filter doubles as the same contract-violation defense as v1's) and
-    # batch×batch. Disjoint by the invariant → plain union, no dedup.
-    # r13: thunk fields like the v1 merge block — the v2 rollup reads
-    # skeleton/edges/sem_edges, so the cells merge (and the pair-probe
-    # construction when sem_edges goes unread) is analyzed on demand.
-    merged_v2 = _LazyCorpusStateV2(
-        lex=inc.state,
-        cells=lambda: merge_insert_only(
-            state.cells, b_cells, STATE_KEYS_V2["cells"]
-        ),
-        sem_edges=lambda: merge_insert_only(
-            state.sem_edges,
-            _sem_pairs(state.cells, b_cells).unionByName(
-                _sem_pairs(b_cells, b_cells)
-            ),
-            STATE_KEYS_V2["sem_edges"],
-        ),
-    )
-    return IncrementResult(
-        state=merged_v2,  # type: ignore[arg-type]
-        batch_kept=inc.batch_kept,
-        persisted=inc.persisted + [b_cells],
-    )
 
-
-def state_rollup_v2(state: CorpusStateV2, budget: int = 512) -> DataFrame:
-    """The derived decisions over the MERGED edge set — lexical ∪ semantic
-    (UNION-distinct: a pair can be near in both senses) — then the exact
-    v1 rollup. Runs the SAME ``_rollup_from`` body as ``state_rollup``
-    on a lexical edge table unioned with the semantic edges, so the v2
-    and v1 derived stages cannot drift; the closure still runs on a
-    sparse edge table, the rest on the id+int skeleton, no text and no
-    vectors read. (r13: routed through ``_rollup_from`` directly instead
-    of ``dataclasses.replace`` — replace() forces every field of a lazy
-    merged state, re-paying the fp/shingles/bands merge analyses the
-    rollup never reads.) Internal persists: same contract as
-    ``state_rollup`` — use ``state_rollup_v2_detailed`` when looping."""
-    return state_rollup_v2_detailed(state, budget).rollup
-
-
-def state_rollup_v2_detailed(
-    state: CorpusStateV2, budget: int = 512
-) -> RollupResult:
-    """``state_rollup_v2`` plus the releasable persist handles."""
-    merged_edges = (
-        state.lex.edges.unionByName(state.sem_edges)
+    # LSH: index the batch survivors only; probe stored bands for
+    # batch×corpus candidates, self-join for batch×batch.
+    b_docs, b_banded = lsh_index(b_kept)
+    b_sh = b_docs.select("doc_id", "shingles")
+    bc = (
+        state["bands"].select(
+            F.col("doc_id").alias("id_a"), "band", "bucket"
+        )
+        .join(
+            b_banded.select(F.col("doc_id").alias("id_b"), "band", "bucket"),
+            ["band", "bucket"],
+        )
+        # under the append-only contract every stored id < every batch id,
+        # so this filter is a no-op — it is defense in depth against a
+        # CONTRACT VIOLATION (a replayed/overlapping batch whose ids are
+        # already in the band index) manufacturing self-edges
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _rollup_from(state.lex.skeleton, merged_edges, budget)
+    # bc (corpus id_a) and the batch×batch pairs are disjoint by the
+    # append-only id invariant, so plain unionByName — no dedup shuffle
+    new_edges = _verified_pairs(
+        bc.unionByName(_band_pairs(b_banded)),
+        state["shingles"].unionByName(b_sh),
+        b_sh,
+        threshold,
+    )
+
+    # per-stage insert thunks; each merged frame is a thunk too, so a
+    # consumer pays Catalyst analysis only for the tables it reads
+    inserts: dict[str, Callable[[], DataFrame]] = {
+        "fp": lambda: b_keep,
+        "shingles": lambda: b_sh,
+        "bands": lambda: b_banded.select("doc_id", "band", "bucket"),
+        "edges": lambda: new_edges,
+        "skeleton": lambda: _skeleton(b_kept),
+    }
+    persisted = [b_docs, b_new, b_kept]
+    if emb is not None:
+        b_cells = _doc_cells(b_kept, emb, cents)
+        # batch×corpus (the stored index is the id_a side — every stored
+        # id is smaller under the append-only invariant; the id_a < id_b
+        # filter doubles as the contract-violation defense above) and
+        # batch×batch. Disjoint by the invariant → plain union, no dedup.
+        inserts["cells"] = lambda: b_cells
+        inserts["sem_edges"] = lambda: _sem_pairs(
+            state["cells"], b_cells
+        ).unionByName(_sem_pairs(b_cells, b_cells))
+        persisted.append(b_cells)
+    merged = CorpusState(
+        {
+            n: lambda n=n, ins=ins: merge_insert_only(
+                state[n], ins(), STATE_KEYS[n]
+            )
+            for n, ins in inserts.items()
+        }
+    )
+    return IncrementResult(state=merged, persisted=persisted)
+
+
+def state_rollup(
+    state: Mapping[str, DataFrame], budget: int = 512
+) -> RollupResult:
+    """Recompute the DERIVED pipeline decisions from the merged state and
+    roll up the end state per (source, split) — the same hashed surface
+    as ``t_corpus_pipeline_e2e`` (``corpus.pipeline_rollup``).
+
+    Derived per run because appends CAN flip them: the near-dup closure
+    (a batch doc may bridge two existing clusters, re-pointing cluster
+    minima — previously-canonical base docs lose the flag) and the
+    temperature-rebalance thresholds (global per-source counts moved).
+    The closure runs over the lexical edges, unioned (distinct — a pair
+    can be near in both senses) with ``sem_edges`` when the state has
+    them; the rest runs on the id+int skeleton — no text and no vectors
+    are read, and fp/shingles/bands/cells are never resolved."""
+    # persist the merged skeleton — both the closure's roster (the
+    # corpus-side left join in dedup_clusters) and the survivor join
+    # consume it, and each consumer's merge subtree otherwise re-scans
+    # the skeleton artifact; id+int rows, survivor-count-sized
+    skel = state["skeleton"].persist()
+    edges = state["edges"]
+    if "sem_edges" in state:
+        edges = edges.unionByName(state["sem_edges"]).dropDuplicates(
+            ["id_a", "id_b"]
+        )
+    labels = dedup_clusters(skel.select("doc_id"), edges)
+    # persist the canonical-survivor skeleton — rebalance consumes it
+    # twice (count + keep-join branches), and unpersisted the chain
+    # re-executed the merged-skeleton subtree once per branch
+    survivors = skel.join(
+        labels.filter(F.col("is_canonical")).select("doc_id"), "doc_id"
+    ).persist()
+    staged = split_stage(rebalance_stage(survivors))
+    return RollupResult(
+        rollup=pipeline_rollup(
+            packed_docs(staged, budget=budget, tok_col="tok")
+        ),
+        persisted=[skel, survivors],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -725,39 +497,47 @@ def state_rollup_v2_detailed(
 
 
 def init_state_tables(
-    spark: SparkSession, base_docs: DataFrame, namespace: str = "corpus_inc"
+    spark: SparkSession,
+    base_docs: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+    namespace: str = "corpus_inc",
 ) -> None:
     """Materialize the base state as managed stage tables under
-    ``namespace`` (the production backfill)."""
+    ``namespace`` (the production backfill) — seven tables when
+    ``emb``/``cents`` are given, five otherwise."""
     import re
 
     if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", namespace):
         raise ValueError(f"invalid namespace {namespace!r}")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
-    built = build_state_detailed(base_docs)
-    for name, frame in built.state.frames().items():
+    built = build_state(base_docs, emb, cents)
+    for name, frame in built.state.items():
         frame.write.mode("overwrite").saveAsTable(f"{namespace}.{name}")
-    built.release()  # tables written: drop the backfill's internal cache
+    built.release()  # tables written: drop the backfill's internal caches
 
 
 def run_increment(
-    spark: SparkSession, batch_docs: DataFrame, namespace: str = "corpus_inc"
+    spark: SparkSession,
+    batch_docs: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+    namespace: str = "corpus_inc",
 ) -> dict[str, int]:
     """MERGE one batch into the persisted stage tables and return the
-    per-table row counts after the merge (the increment's funnel).
+    per-table row counts after the merge (the increment's funnel). Pass
+    ``emb``/``cents`` exactly when the tables were initialized with them.
 
     Uses ``merge_into_table`` per stage table — the reference's
     ingest_stocks.py:84-100 MERGE shape (Delta-native when delta-spark is
     on the classpath, staged-swap parquet otherwise). Idempotent: a
     replayed batch inserts nothing (every key already present).
 
-    Cache invalidation is SCOPED to this run's own persists (r10, per
-    r9 ADVICE — the previous entry-point ``clearCache()`` dropped every
-    cached frame process-wide): the only CacheManager entries an
-    increment creates are its three internal persists (the batch LSH
-    doc aggregate ``b_docs``, the ledger-anti-joined batch ``b_new``,
-    and the batch exact-kept survivors ``b_kept`` — r12 added the
-    latter two), and entries of that class were the r9 stale-plan bug — a later run's
+    Cache invalidation is SCOPED to this run's own persists (an
+    entry-point ``clearCache()`` would drop every cached frame
+    process-wide): the only CacheManager entries an increment creates
+    are its internal persists (``IncrementResult.persisted``), and
+    entries of that class are the stale-plan bug — a later run's
     structurally-identical plan matched the previous run's cached entry,
     which held pre-swap file listings of the stage tables. Releasing
     them after the localCheckpoint barrier (lineage severed, so the
@@ -768,35 +548,31 @@ def run_increment(
     classpath the transactional MERGE invalidates through its own log
     and both mechanisms are no-op safeguards.
 
-    What the Delta path would strengthen (delta-spark remains
-    uninstallable in this container — r3..r10 env gate, session.
-    delta_available): (1) the staged-swap's crash window (two renames)
-    becomes one atomic commit, so a concurrent reader can never observe
-    the table under its ``__old``/``__staging`` name; (2) the eager
-    source-read inside MERGE makes the pre-swap localCheckpoint a
-    no-op safeguard instead of a correctness requirement; (3) time
-    travel would let the replay test assert version N == version N+1
-    instead of row-set equality. The SEMANTICS proven here (insert-only
-    keyed MERGE, idempotent replay, increment == rebuild) are identical
-    on both paths."""
-    state = CorpusState(
-        **{
-            n: spark.read.table(f"{namespace}.{n}")
-            for n in STATE_KEYS
-        }
-    )
-    inc = apply_increment_detailed(state, batch_docs)
+    What the Delta path strengthens (when ``session.delta_available()``):
+    (1) the staged-swap's crash window (two renames) becomes one atomic
+    commit, so a concurrent reader can never observe the table under its
+    ``__old``/``__staging`` name; (2) the eager source-read inside MERGE
+    makes the pre-swap localCheckpoint a no-op safeguard instead of a
+    correctness requirement; (3) time travel would let the replay test
+    assert version N == version N+1 instead of row-set equality. The SEMANTICS
+    proven here (insert-only keyed MERGE, idempotent replay, increment
+    == rebuild) are identical on both paths."""
     from personal_data_lakehouse_spark.operators.merge import merge_into_table
 
+    state = CorpusState(
+        {
+            n: spark.read.table(f"{namespace}.{n}")
+            for n in stage_names(emb is not None)
+        }
+    )
+    inc = apply_increment(state, batch_docs, emb, cents)
     # Sever lineage BEFORE any table swap: the merged frames read the
     # stage tables lazily BY NAME, so swapping table 1 would silently
-    # change what frames 2..5 compute (e.g. the edge frame re-reading an
+    # change what frames 2..n compute (e.g. the edge frame re-reading an
     # already-updated fp ledger finds no new fingerprints). With Delta on
     # the classpath the native transactional MERGE reads the source
     # eagerly inside one commit and this is a no-op safeguard.
-    frames = {
-        n: f.localCheckpoint() for n, f in inc.state.frames().items()
-    }
+    frames = {n: f.localCheckpoint() for n, f in inc.state.items()}
     inc.release()  # checkpoint barrier passed: drop this run's caches
     counts: dict[str, int] = {}
     for name, frame in frames.items():
@@ -807,75 +583,6 @@ def run_increment(
             f"{namespace}.{name}",
             frame,
             STATE_KEYS[name],
-            insert_only=True,
-        )
-        counts[name] = spark.read.table(f"{namespace}.{name}").count()
-    return counts
-
-
-def init_state_tables_v2(
-    spark: SparkSession,
-    base_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
-    namespace: str = "corpus_inc2",
-) -> None:
-    """Materialize the v2 (semantic) base state as SEVEN managed stage
-    tables under ``namespace`` — the production backfill for a
-    SemDeDup-in-the-funnel deployment."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", namespace):
-        raise ValueError(f"invalid namespace {namespace!r}")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
-    built = build_state_v2_detailed(base_docs, emb, cents)
-    for name, frame in built.state.frames().items():
-        frame.write.mode("overwrite").saveAsTable(f"{namespace}.{name}")
-    built.release()  # tables written: drop the backfill's internal caches
-
-
-def run_increment_v2(
-    spark: SparkSession,
-    batch_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
-    namespace: str = "corpus_inc2",
-) -> dict[str, int]:
-    """MERGE one batch through the LEXICAL AND SEMANTIC funnel into the
-    seven persisted stage tables and return the per-table row counts —
-    ``run_increment``'s v2 sibling, completing the managed-table flavor
-    of the semantic state (batch / incremental / stream / warehouse, the
-    same four shapes the lexical state ships).
-
-    Same envelope as v1 (see ``run_increment``'s docstring for the
-    lineage-severing and cache-invalidation contract, which applies
-    verbatim): the merged frames are localCheckpoint'ed BEFORE any table
-    swap, the increment's internal persists (batch LSH doc aggregate +
-    batch cell index) release after that barrier, and with Delta on the
-    classpath ``merge_into_table`` runs the native transactional MERGE.
-    Idempotent: a replayed batch's fingerprints are all in the ledger,
-    so no table — including cells/sem_edges — gains rows."""
-    state = CorpusStateV2(
-        lex=CorpusState(
-            **{n: spark.read.table(f"{namespace}.{n}") for n in STATE_KEYS}
-        ),
-        cells=spark.read.table(f"{namespace}.cells"),
-        sem_edges=spark.read.table(f"{namespace}.sem_edges"),
-    )
-    inc = apply_increment_v2_detailed(state, batch_docs, emb, cents)
-    from personal_data_lakehouse_spark.operators.merge import merge_into_table
-
-    frames = {
-        n: f.localCheckpoint() for n, f in inc.state.frames().items()
-    }
-    inc.release()  # checkpoint barrier passed: drop this run's caches
-    counts: dict[str, int] = {}
-    for name, frame in frames.items():
-        merge_into_table(
-            spark,
-            f"{namespace}.{name}",
-            frame,
-            STATE_KEYS_V2[name],
             insert_only=True,
         )
         counts[name] = spark.read.table(f"{namespace}.{name}").count()

@@ -209,9 +209,11 @@ def lsh_index(
     exploded ``(id, band, bucket)`` band index (the probe side).
 
     This is the artifact an incremental deployment PERSISTS as stage
-    tables: a new-docs batch indexes only itself and probes these two
-    frames (``corpus_incremental.apply_increment``), so corpus text is
-    shingled exactly once per document across the corpus lifetime."""
+    tables (the ``shingles``/``bands`` stages of
+    ``corpus_incremental.CorpusState``): a new-docs batch indexes only
+    itself and probes the stored stages (``apply_increment``), so corpus
+    text is shingled exactly once per document across the corpus
+    lifetime."""
     return _banded_docs(df, text_col, id_col, k, bands, shingle_n, seed)
 
 

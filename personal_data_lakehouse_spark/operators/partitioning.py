@@ -13,12 +13,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# spread()'s partition probe, memoized (r13, guide §1.2 per-task work →
-# §7.3 planning cost): ``df.rdd.getNumPartitions()`` runs the FULL
-# physical pipeline for the probe's throwaway QueryExecution — analysis,
-# CacheManager lookup, physical planning and whole-stage codegen COMPILE
-# of the entire subtree. Measured at sf0.1: ~0.1 s on a bare scan, but
-# 0.35–0.5 s on the incremental batch funnel and 3.3 s on the e2e
+# spread()'s partition probe, memoized (planning cost):
+# ``df.rdd.getNumPartitions()`` runs the FULL physical pipeline for the
+# probe's throwaway QueryExecution — analysis, CacheManager lookup,
+# physical planning and whole-stage codegen COMPILE of the entire
+# subtree. Measured at sf0.1: ~0.1 s on a bare scan, but 0.35–0.5 s on
+# the incremental batch funnel and 3.3 s on the e2e
 # exact-dedup survivor tree — paid once per lsh_index/kernel call, per
 # invocation, per stream micro-batch (the probe's work is NOT reused by
 # the later real execution, which plans its own tree). The partition
@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 # parallelism heuristic either way, NEVER a semantics change (spread's
 # output rows are identical with or without the repartition). Frames
 # with no file leaves (checkpointed/RDD-rooted state inside streaming
-# loops) carry an empty leaf set and hit the same rule keyed on schema.
+# loops) are NOT memoized: without a leaf set the key would be the
+# schema alone, and two such frames with the same schema but different
+# partition counts would share one entry.
 _SPREAD_CACHE: dict[tuple, int] = {}
 _SPREAD_CACHE_CAP = 512
 
@@ -42,15 +44,18 @@ _SPREAD_CACHE_CAP = 512
 def probed_num_partitions(df: DataFrame) -> int:
     """``df.rdd.getNumPartitions()`` behind the memo above."""
     spark = df.sparkSession
+    key = None
     try:
-        key = (
-            tuple(sorted(df.inputFiles())),
-            df.schema.simpleString(),
-            spark.conf.get("spark.sql.shuffle.partitions"),
-            spark.sparkContext.defaultParallelism,
-        )
+        files = df.inputFiles()
+        if files:
+            key = (
+                tuple(sorted(files)),
+                df.schema.simpleString(),
+                spark.conf.get("spark.sql.shuffle.partitions"),
+                spark.sparkContext.defaultParallelism,
+            )
     except Exception:
-        key = None
+        pass
     n = _SPREAD_CACHE.get(key) if key is not None else None
     if n is None:
         n = df.rdd.getNumPartitions()

@@ -1,23 +1,23 @@
 """Round-10 registered queries: the SEMANTIC (embedding) stage landed in
 the incremental corpus state — closing r9 VERDICT "What's missing #1".
 
-The v1 capstone's persisted ``CorpusState`` was lexical only (fingerprint
-ledger + LSH index): a daily-delta deployment wanting SemDeDup in the
-funnel had to re-embed-and-re-pair the whole corpus even though the
-ONLINE form of semantic index maintenance already existed
-(``round9_ops.online_semdedup_admit``). The v2 state
-(``corpus_incremental.CorpusStateV2``) persists exactly the artifacts
-the online loop maintains per-batch — the vector cell index and the
-verified semantic edge table — and ``apply_increment_v2`` runs
-embed-probe-verify for the BATCH only, with the derived closure merging
-lexical ∪ semantic edges.
+A lexical-only incremental state (fingerprint ledger + LSH index) left
+a daily-delta deployment wanting SemDeDup in the funnel to
+re-embed-and-re-pair the whole corpus even though the ONLINE form of
+semantic index maintenance already existed
+(``round9_ops.online_semdedup_admit``). A semantic ``corpus_incremental.
+CorpusState`` (built with embeddings and centroids) persists exactly the
+artifacts the online loop maintains per-batch — the vector cell index
+and the verified semantic edge table — and ``apply_increment`` with the
+batch's embeddings runs embed-probe-verify for the BATCH only, with the
+derived closure merging lexical ∪ semantic edges.
 
 Proof technique is r9's verbatim: ONE composed full-recompute oracle
 (the r8 e2e oracle extended with the semantic edge CTEs via
 ``round8_ops.corpus_pipeline_oracle`` — inject-time composition, zero
 drift) shared by BOTH the full-recompute query and the incremental
 query, plus idempotent-replay / cross-family-bridge / increment-equals-
-rebuild pytests (tests/test_corpus_incremental_v2.py).
+rebuild pytests (tests/test_corpus_incremental.py).
 
 Reference parity: the incremental-semantic generalization of
 transforme_stock_silver.py:41-97 (watermark increment) +
@@ -30,12 +30,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 # round9_ops must be imported FIRST: this module shares its incremental
-# fixtures (the materialized lexical base state + the 80/20 id split)
+# fixtures (the materialized base state + the 80/20 id split)
 import personal_data_lakehouse_spark.plans.round9_ops as round9_ops  # noqa: E501
 from personal_data_lakehouse_spark.plans.registry import (
     REGISTRY,
     query,
-    read_parquet_cached,
     t,
 )
 
@@ -60,9 +59,8 @@ def t_corpus_pipeline_sem_e2e(spark, sf_dir):
     funnel rather than run beside it (``t_semdedup_clusters`` is the
     standalone decision): the closure unions ``corpus.dedup_near_stage``
     edges with ``corpus_incremental._sem_pairs`` edges and everything
-    downstream is the shared v1 rollup (``state_rollup`` verbatim via
-    ``state_rollup_v2`` — the two pipelines cannot drift in the derived
-    stages).
+    downstream is the shared ``state_rollup`` (the lexical and semantic
+    pipelines cannot drift in the derived stages).
 
     Scale: inherits the audited v1 shape; the semantic addition is one
     broadcast-codebook cell assignment over survivors (map-side), Σ|cell|²
@@ -77,8 +75,8 @@ def t_corpus_pipeline_sem_e2e(spark, sf_dir):
     dedup/similarity extension families.
     """
     from personal_data_lakehouse_spark.corpus_incremental import (
-        build_state_v2,
-        state_rollup_v2,
+        build_state,
+        state_rollup,
     )
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CENTROID_IDS,
@@ -88,75 +86,11 @@ def t_corpus_pipeline_sem_e2e(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     emb = t(spark, sf_dir, "embeddings")
     cents = pick_centroids(emb, _CENTROID_IDS)
-    return state_rollup_v2(build_state_v2(docs, emb, cents))
+    return state_rollup(build_state(docs, emb, cents).state).rollup
 
 
 # ---------------------------------------------------------------------------
 # The incremental v2 run against a materialized seven-table state
-
-_V2_STATE_NAMES = ("cells", "sem_edges")
-
-
-def _materialized_base_state_v2(
-    spark, sf_dir, base_docs, tag="corpinc2", lex_tag="corpinc"
-):
-    """The SEVEN stage tables of the v2 base state: the five lexical
-    artifacts are SHARED with ``t_corpus_pipeline_incremental`` (same
-    split, same build — ``round9_ops._materialized_base_state``); the two
-    semantic artifacts derive from the materialized lexical state's
-    skeleton ids + the embeddings table (no text re-read), the honesty
-    split as ever — production keeps exactly these on disk between
-    increments, so warm invocations time the INCREMENT.
-
-    *tag*/*lex_tag* namespace the artifact dirs for callers building a
-    DIFFERENT base split (bench.py's loaded-v2 measurement, r11) — the
-    registry queries' canonical 80/20 artifacts must never be served to
-    a caller that asked for another split."""
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        CorpusStateV2,
-        _doc_cells,
-        _sem_pairs,
-    )
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CENTROID_IDS,
-    )
-    from personal_data_lakehouse_spark.similarity.ivf import pick_centroids
-    from personal_data_lakehouse_spark.streaming.windows import (
-        source_fixture_dir,
-    )
-
-    lex = round9_ops._materialized_base_state(
-        spark, sf_dir, base_docs, tag=lex_tag
-    )
-    emb = t(spark, sf_dir, "embeddings")
-    cents = pick_centroids(emb, _CENTROID_IDS)
-    dirs: dict[str, str] = {}
-    missing: list[str] = []
-    for n in _V2_STATE_NAMES:
-        d, ready = source_fixture_dir(f"{tag}_{n}", sf_dir)
-        dirs[n] = d
-        if not ready:
-            missing.append(n)
-    if missing:
-        npart = spark.sparkContext.defaultParallelism
-        cells = (
-            _doc_cells(lex.skeleton.select("doc_id"), emb, cents)
-            .coalesce(npart)
-            .persist()
-        )
-        if "cells" in missing:
-            cells.write.mode("overwrite").parquet(dirs["cells"])
-        if "sem_edges" in missing:
-            _sem_pairs(cells, cells).coalesce(npart).write.mode(
-                "overwrite"
-            ).parquet(dirs["sem_edges"])
-        cells.unpersist()
-    return CorpusStateV2(
-        lex=lex,
-        cells=read_parquet_cached(spark, dirs["cells"]),
-        sem_edges=read_parquet_cached(spark, dirs["sem_edges"]),
-    )
-
 
 @query("t_corpus_pipeline_incremental_v2", oracle=None)  # shared, below
 def t_corpus_pipeline_incremental_v2(spark, sf_dir):
@@ -164,8 +98,8 @@ def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     equal to the v2 FULL RECOMPUTE (``t_corpus_pipeline_sem_e2e``'s
     oracle, shared verbatim): the base corpus (bottom ~80% of the id
     range) is a one-time materialized SEVEN-table state — the five
-    lexical tables (shared artifacts with the v1 incremental query) plus
-    the vector cell index and the semantic edge table; the new-docs
+    lexical tables (shared artifacts with the lexical incremental query)
+    plus the vector cell index and the semantic edge table; the new-docs
     batch (top ~20%) flows through intake → exact dedup (ledger
     anti-join) → lexical near-dup (batch-only shingling, stored-band
     probe) → SEMANTIC near-dup (batch-only cell assignment, STORED cell
@@ -179,8 +113,8 @@ def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     both gate SFs (measured: 48 batch×corpus + 5 batch×batch semantic
     pairs at sf0.01; see ``corpus_incremental.SEM_THRESHOLD``).
 
-    Scale: the v1 contract extended to vectors — only batch text is read
-    AND only batch vectors are assigned; corpus vectors are touched once
+    Scale: the lexical contract extended to vectors — only batch text is
+    read AND only batch vectors are assigned; corpus vectors are touched once
     per document lifetime (their stored (vector, norm, cell) rows ARE
     the probe side). Batch×corpus candidates are cell-local against the
     stored index (broadcast at fixture scale, hash join on cell at
@@ -194,8 +128,8 @@ def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     (round9_ops.online_semdedup_admit) maintains per-batch.
     """
     from personal_data_lakehouse_spark.corpus_incremental import (
-        apply_increment_v2,
-        state_rollup_v2,
+        apply_increment,
+        state_rollup,
     )
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CENTROID_IDS,
@@ -208,14 +142,17 @@ def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     base = docs.filter(F.col("doc_id") < thr)
     batch = docs.filter(F.col("doc_id") >= thr)
     cents = pick_centroids(emb, _CENTROID_IDS)
-    state = _materialized_base_state_v2(spark, sf_dir, base)
+    state = round9_ops._materialized_base_state(
+        spark, sf_dir, base, emb, cents
+    )
     # the batch's vectors arrive WITH the batch in production; here the
     # shared embeddings fixture stands in for them, pre-filtered to the
     # batch id range so the scan is parquet-pruned (PushedFilters) — the
     # O(batch) vector claim is plan-pinned alongside the text claim
-    # (tests/test_corpus_incremental_v2.py)
+    # (tests/test_corpus_incremental.py)
     emb_batch = emb.filter(F.col("vec_id") >= thr)
-    return state_rollup_v2(apply_increment_v2(state, batch, emb_batch, cents))
+    inc = apply_increment(state, batch, emb_batch, cents)
+    return state_rollup(inc.state).rollup
 
 
 def _inject_sem_pipeline_oracle() -> None:
@@ -274,30 +211,30 @@ _inject_sem_pipeline_oracle()
 @query("t_stream_corpus_increments_v2", oracle=None)  # sem e2e oracle, below
 def t_stream_corpus_increments_v2(spark, sf_dir):
     """The SEMANTIC corpus pipeline run as a LIVE STREAM OF DELTAS — the
-    v2 sibling of ``t_stream_corpus_increments``, replaying the IDENTICAL
-    three-file delivery (``round9_ops.delta_stream_source``, shared
+    semantic sibling of ``t_stream_corpus_increments``, replaying the
+    IDENTICAL three-file delivery (``round9_ops.delta_stream``, shared
     fixture: mtime order = id order under ``maxFilesPerTrigger=1``)
     against the seven-table base state, with every micro-batch MERGEd
     through the full lexical funnel AND the semantic stage
-    (``corpus_incremental.apply_increment_v2`` inside ``foreachBatch``:
+    (``corpus_incremental.apply_increment`` with the batch's embeddings:
     batch-only shingling + stored-band probe, batch-only cell assignment
     + STORED cell-index probe, insert-only MERGE into all seven tables).
-    The carried state is localCheckpoint'ed per batch (seven eager
-    checkpoints submitted concurrently — ~one job barrier of wall) so
-    neither the logical plans nor executor storage grow with stream
-    length (the batch LSH aggregate and batch cell index release after
-    the barrier). The final state's rollup must hash-equal the v2
-    FULL-RECOMPUTE oracle over all documents: three chained increments,
-    each probing band AND cell indexes that already contain the previous
-    batches' survivors, land exactly on the rebuild end state — a missed
-    cross-batch semantic bridge moves the hash.
+    ``streaming.windows.carry_state_stream`` checkpoints the carried
+    state per batch (seven eager checkpoints submitted concurrently —
+    ~one job barrier of wall) so neither the logical plans nor executor
+    storage grow with stream length (the batch LSH aggregate and batch
+    cell index release after the barrier). The final state's rollup must
+    hash-equal the v2 FULL-RECOMPUTE oracle over all documents: three
+    chained increments, each probing band AND cell indexes that already
+    contain the previous batches' survivors, land exactly on the rebuild
+    end state — a missed cross-batch semantic bridge moves the hash.
 
     Scale: per-batch work is O(batch) text + O(batch) vectors (corpus
     vectors are probe-side stored rows, touched once per document
     lifetime); the carried state is the sparse seven-table skeleton,
     checkpoint-bounded per batch; at warehouse scale the state lives as
     managed tables and the body becomes
-    ``corpus_incremental.run_increment_v2`` (the MERGE-per-batch shape,
+    ``corpus_incremental.run_increment`` (the MERGE-per-batch shape,
     replay-idempotent). The batch's vectors arrive WITH the batch in
     production; here the shared embeddings fixture stands in,
     pre-filtered at plan time to the delta id range (parquet-pruned) —
@@ -310,18 +247,15 @@ def t_stream_corpus_increments_v2(spark, sf_dir):
     S6+/P3/J1 × the §2.9 streaming extension × the similarity family.
     """
     from personal_data_lakehouse_spark.corpus_incremental import (
-        STATE_KEYS,
-        CorpusState,
-        CorpusStateV2,
-        apply_increment_v2_detailed,
-        state_rollup_v2,
+        apply_increment,
+        state_rollup,
     )
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CENTROID_IDS,
     )
     from personal_data_lakehouse_spark.similarity.ivf import pick_centroids
     from personal_data_lakehouse_spark.streaming.windows import (
-        drain_stream_foreach,
+        carry_state_stream,
         stream_work_dir,
     )
 
@@ -333,64 +267,20 @@ def t_stream_corpus_increments_v2(spark, sf_dir):
     cents = pick_centroids(emb, _CENTROID_IDS)
     emb_delta = emb.filter(F.col("vec_id") >= thr)
 
-    # the SAME materialized seven-table base state the v2 incremental
-    # query reads, and the SAME delta files the v1 stream replays
-    state0 = _materialized_base_state_v2(spark, sf_dir, base)
-    src, doc_schema = round9_ops.delta_stream_source(
-        spark, sf_dir, batch_docs
+    def step(state, batch):
+        inc = apply_increment(state, batch, emb_delta, cents)
+        return inc.state, inc.persisted
+
+    # the SAME materialized seven-table base state the semantic
+    # incremental query reads, and the SAME delta files the lexical
+    # stream replays
+    final = carry_state_stream(
+        round9_ops.delta_stream(spark, sf_dir, batch_docs),
+        stream_work_dir("corpincstream2"),
+        round9_ops._materialized_base_state(spark, sf_dir, base, emb, cents),
+        step,
     )
-    work = stream_work_dir("corpincstream2")
-    carried = {"state": state0}
-    # r13: cap carried-state partition growth per batch (see the v1
-    # stream capstone's comment — same defect, seven tables here)
-    from personal_data_lakehouse_spark.operators.partitioning import (
-        probed_num_partitions,
-    )
-
-    _caps = {
-        n: max(
-            spark.sparkContext.defaultParallelism,
-            probed_num_partitions(f),
-        )
-        for n, f in state0.frames().items()
-    }
-
-    def process_batch(batch, _bid):
-        from concurrent.futures import ThreadPoolExecutor
-
-        inc = apply_increment_v2_detailed(
-            carried["state"], batch, emb_delta, cents
-        )
-        frames = inc.state.frames()
-        with ThreadPoolExecutor(len(frames)) as ex:
-            cps = dict(
-                zip(
-                    frames,
-                    ex.map(
-                        lambda kv: kv[1]
-                        .coalesce(_caps[kv[0]])
-                        .localCheckpoint(),
-                        frames.items(),
-                    ),
-                )
-            )
-        # barrier passed → lineage severed: release the batch LSH doc
-        # aggregate AND the batch cell index (bounded storage on an
-        # unbounded stream, the v1 contract)
-        inc.release()
-        carried["state"] = CorpusStateV2(
-            lex=CorpusState(**{k: cps[k] for k in STATE_KEYS}),
-            cells=cps["cells"],
-            sem_edges=cps["sem_edges"],
-        )
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    drain_stream_foreach(stream, work, process_batch)
-    return state_rollup_v2(carried["state"])
+    return state_rollup(final).rollup
 
 
 def _inject_stream_sem_oracle() -> None:

@@ -483,12 +483,13 @@ def t_stream_decontaminate(spark, sf_dir):
     micro-batch then MERGEs its train∪val shingles into the carried
     spine (insert-only anti-join — the spine is a DISTINCT set, so
     chained merges land exactly on the one-batch merge) and appends its
-    test-doc shingles, both carried frames localCheckpoint'ed per batch
-    so the plan never grows with stream length. The final report
-    re-probes ALL test shingles against the final spine — probing after
-    the last batch is semantically REQUIRED (train text arriving in
-    batch 3 must flip an eval doc appended in batch 1), and it is the
-    identical shingle-keyed join the siblings run.
+    test-doc shingles; ``streaming.windows.carry_state_stream``
+    checkpoints both carried frames per batch so the plan never grows
+    with stream length. The final report re-probes ALL test shingles
+    against the final spine — probing after the last batch is
+    semantically REQUIRED (train text arriving in batch 3 must flip an
+    eval doc appended in batch 1), and it is the identical shingle-keyed
+    join the siblings run.
 
     Scale: per-batch shingle work is O(batch); the carried spine is the
     published train n-gram index — at warehouse scale it lives as a
@@ -503,54 +504,38 @@ def t_stream_decontaminate(spark, sf_dir):
     """
     from personal_data_lakehouse_spark.plans.round9_ops import (
         _inc_threshold,
-        delta_stream_source,
+        delta_stream,
     )
     from personal_data_lakehouse_spark.streaming.windows import (
-        drain_stream_foreach,
+        carry_state_stream,
         stream_work_dir,
     )
 
     docs = t(spark, sf_dir, "documents")
     thr = _inc_threshold(spark, sf_dir, docs)
     spine0, test0 = _decon_base_artifacts(spark, sf_dir, docs, thr)
-    src, doc_schema = delta_stream_source(
-        spark, sf_dir, docs.filter(F.col("doc_id") >= thr)
-    )
-    carried = {"spine": spine0, "test": test0}
 
-    def process_batch(batch, _bid):
+    def step(state, batch):
         b_sh = _decon_shingled(batch)
         new_spine = (
             b_sh.filter(F.col("split") != "test")
             .select("s")
             .distinct()
-            .join(carried["spine"], "s", "left_anti")
+            .join(state["spine"], "s", "left_anti")
         )
-        # sever lineage per batch (the t_stream_corpus_increments
-        # contract): an unbounded stream would otherwise grow both
-        # carried plans by one increment per batch
-        carried["spine"] = (
-            carried["spine"].unionByName(new_spine).localCheckpoint()
-        )
-        carried["test"] = (
-            carried["test"]
-            .unionByName(
-                b_sh.filter(F.col("split") == "test").select(
-                    "doc_id", "s"
-                )
-            )
-            .localCheckpoint()
-        )
+        new_test = b_sh.filter(F.col("split") == "test").select("doc_id", "s")
+        return {
+            "spine": state["spine"].unionByName(new_spine),
+            "test": state["test"].unionByName(new_test),
+        }, []
 
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    final = carry_state_stream(
+        delta_stream(spark, sf_dir, docs.filter(F.col("doc_id") >= thr)),
+        stream_work_dir("deconstream"),
+        {"spine": spine0, "test": test0},
+        step,
     )
-    drain_stream_foreach(
-        stream, stream_work_dir("deconstream"), process_batch
-    )
-    return _decon_report(carried["test"], carried["spine"])
+    return _decon_report(final["test"], final["spine"])
 
 
 # three chained spine merges land exactly on the full-recompute report —

@@ -41,8 +41,6 @@ from personal_data_lakehouse_spark.plans.registry import (
 # zero eager jobs.
 _INC_T: dict[str, int] = {}
 
-_STATE_NAMES = ("fp", "shingles", "bands", "edges", "skeleton")
-
 
 def _inc_threshold(spark, sf_dir, docs) -> int:
     thr = _INC_T.get(sf_dir)
@@ -56,48 +54,51 @@ def _inc_threshold(spark, sf_dir, docs) -> int:
     return thr
 
 
-def _materialized_base_state(spark, sf_dir, base_docs, tag="corpinc"):
-    """The five stage tables of the BASE corpus, materialized once per
-    (sf, process) as parquet — the honesty split (r8 semadmit precedent):
+def _materialized_base_state(
+    spark, sf_dir, base_docs, emb=None, cents=None, tag="corpinc"
+):
+    """The stage tables of the BASE corpus, materialized once per
+    (sf, process) as parquet — the honesty split:
     production keeps exactly these tables on disk between increments, so
     warm invocations time the INCREMENT, not a from-scratch base rebuild.
-    Pure functions of the fixture split ⇒ a complete artifact is
-    byte-identical; _SUCCESS + the FIXTURE_GEN dir tag gate reuse.
+    The stage set is ``corpus_incremental.stage_names``: the lexical
+    five, plus the semantic ``cells``/``sem_edges`` when ``emb``/``cents``
+    are given (the lexical artifacts are then shared with the lexical
+    queries). Pure functions of the fixture split ⇒ a complete artifact
+    is byte-identical; _SUCCESS + the FIXTURE_GEN dir tag gate reuse.
 
     *tag* namespaces the artifact dirs: a caller materializing a
-    DIFFERENT base split (bench.py's loaded-v2 measurement, r11) must
+    DIFFERENT base split (bench.py's loaded semantic measurement) must
     not collide with the registry queries' canonical 80/20 artifacts —
     the _SUCCESS gate checks completeness, not which split wrote it."""
     from personal_data_lakehouse_spark.corpus_incremental import (
         CorpusState,
-        build_state_detailed,
+        build_state,
+        stage_names,
     )
     from personal_data_lakehouse_spark.streaming.windows import (
         source_fixture_dir,
     )
 
+    names = stage_names(emb is not None)
     dirs: dict[str, str] = {}
     missing: list[str] = []
-    for n in _STATE_NAMES:
+    for n in names:
         d, ready = source_fixture_dir(f"{tag}_{n}", sf_dir)
         dirs[n] = d
         if not ready:
             missing.append(n)
     if missing:
-        # detailed + release (r12 ADVICE): the plain build_state wrapper
-        # dropped the IncrementResult, pinning the backfill's corpus-text
-        # caches (gated base + exact survivors + LSH doc aggregate) for
-        # the rest of the process AFTER the stage tables were already on
-        # parquet — dead weight past this write barrier.
-        built = build_state_detailed(base_docs)
-        st = built.state.frames()
+        built = build_state(base_docs, emb, cents)
         npart = spark.sparkContext.defaultParallelism
         for n in missing:
-            st[n].coalesce(npart).write.mode("overwrite").parquet(dirs[n])
+            built.state[n].coalesce(npart).write.mode("overwrite").parquet(
+                dirs[n]
+            )
+        # stage tables on parquet: the backfill's corpus-text caches are
+        # dead weight past this write barrier
         built.release()
-    return CorpusState(
-        **{n: read_parquet_cached(spark, dirs[n]) for n in _STATE_NAMES}
-    )
+    return CorpusState({n: read_parquet_cached(spark, dirs[n]) for n in names})
 
 
 @query("t_corpus_pipeline_incremental", oracle=None)  # shared with e2e below
@@ -142,7 +143,7 @@ def t_corpus_pipeline_incremental(spark, sf_dir):
     base = docs.filter(F.col("doc_id") < thr)
     batch = docs.filter(F.col("doc_id") >= thr)
     state = _materialized_base_state(spark, sf_dir, base)
-    return state_rollup(apply_increment(state, batch))
+    return state_rollup(apply_increment(state, batch).state).rollup
 
 
 def _inject_incremental_oracle() -> None:
@@ -316,11 +317,6 @@ def online_semdedup_admit(
 
     def process_batch(batch, bid):
         bs = batch.sparkSession
-        # persisted: the Spark-filtered match branch and the arrival
-        # branch of the fused per-cell pass both consume the assignment
-        # (both scans sit inside the batch's ONE write action, so the
-        # cache fills during that action — no extra job); released right
-        # after the write barrier.
         asg = assign_cells(batch, cents, "vec_id", "embedding", n=1)
         # the decisions dir IS the admit index: earlier batches' admitted
         # rows carry (cell, embedding, _vn); an admit founded its own
@@ -798,15 +794,16 @@ _inject_media_neardup_oracle()
 # Streaming corpus increments: the capstone pipeline as a LIVE DELTA STREAM
 
 
-def delta_stream_source(spark, sf_dir, batch_docs) -> tuple[str, str]:
-    """The delta stream fixture both stream-capstone queries consume:
-    the new-docs slice as THREE ascending id-range parquet files with
-    staggered mtimes (mtime order = id order, the append-only delivery
-    contract ``maxFilesPerTrigger=1`` replays). Manufactured once per
-    (sf, process) under the FIXTURE_GEN tag; returns (src_dir, the DDL
-    read schema). Shared by ``t_stream_corpus_increments`` (lexical v1)
-    and ``t_stream_corpus_increments_v2`` (semantic v2, round10_ops) so
-    the two parity claims replay the IDENTICAL delivery."""
+def delta_stream(spark, sf_dir, batch_docs):
+    """The delta stream every stream-capstone query consumes: the
+    new-docs slice as THREE ascending id-range parquet files with
+    staggered mtimes, read with ``maxFilesPerTrigger=1`` (mtime order =
+    id order — the append-only delivery contract). The files are
+    manufactured once per (sf, process) under the FIXTURE_GEN tag and
+    shared by ``t_stream_corpus_increments`` (lexical),
+    ``t_stream_corpus_increments_v2`` (semantic, round10_ops) and
+    ``t_stream_decontaminate`` (round12_ops), so the parity claims
+    replay the IDENTICAL delivery."""
     from personal_data_lakehouse_spark.streaming.windows import (
         source_fixture_dir,
     )
@@ -839,7 +836,11 @@ def delta_stream_source(spark, sf_dir, batch_docs) -> tuple[str, str]:
             os.utime(dst, (base_t + 60 * i, base_t + 60 * i))
             shutil.rmtree(tmp, ignore_errors=True)
         open(os.path.join(src, "_SUCCESS"), "w").close()
-    return src, doc_schema
+    return (
+        spark.readStream.schema(doc_schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 @query("t_stream_corpus_increments", oracle=None)  # e2e oracle shared below
@@ -854,12 +855,13 @@ def t_stream_corpus_increments(spark, sf_dir):
     as THREE id-range files (staggered mtimes, ``maxFilesPerTrigger=1``
     — ascending-id delivery, the append-only contract), and every
     micro-batch MERGEs through the full intake→exact→near funnel via
-    ``corpus_incremental.apply_increment`` inside ``foreachBatch``, the
-    carried state localCheckpoint'ed per batch so the plan never grows
-    with stream length. The final merged state's rollup must hash-equal
-    the FULL-RECOMPUTE oracle over all documents — three chained
-    increments, each probing an index that already contains the previous
-    batches' survivors, land exactly on the rebuild end state.
+    ``corpus_incremental.apply_increment`` as the step of
+    ``streaming.windows.carry_state_stream``, which checkpoints the
+    carried state per batch so the plan never grows with stream length.
+    The final merged state's rollup must hash-equal the FULL-RECOMPUTE
+    oracle over all documents — three chained increments, each probing
+    an index that already contains the previous batches' survivors, land
+    exactly on the rebuild end state.
 
     Scale: per-batch text work is O(batch) (the incremental contract,
     pinned by the batch-only-scan plan test); the carried state is the
@@ -873,15 +875,11 @@ def t_stream_corpus_increments(spark, sf_dir):
     streaming loop; SURVEY §2 S6+/P3/J1 × the §2.9 streaming extension.
     """
     from personal_data_lakehouse_spark.corpus_incremental import (
-        CorpusState,
-        apply_increment_detailed,
+        apply_increment,
         state_rollup,
     )
-    from personal_data_lakehouse_spark.operators.partitioning import (
-        probed_num_partitions,
-    )
     from personal_data_lakehouse_spark.streaming.windows import (
-        drain_stream_foreach,
+        carry_state_stream,
         stream_work_dir,
     )
 
@@ -890,70 +888,19 @@ def t_stream_corpus_increments(spark, sf_dir):
     base = docs.filter(F.col("doc_id") < thr)
     batch_docs = docs.filter(F.col("doc_id") >= thr)
 
+    def step(state, batch):
+        inc = apply_increment(state, batch)
+        return inc.state, inc.persisted
+
     # the SAME materialized base state the incremental query reads —
     # shared artifacts, zero extra manufacture
-    state0 = _materialized_base_state(spark, sf_dir, base)
-
-    src, doc_schema = delta_stream_source(spark, sf_dir, batch_docs)
-    work = stream_work_dir("corpincstream")
-    carried = {"state": state0}
-    # r13 (guide §2.2 fewer/larger partitions): each per-batch checkpoint
-    # UNIONs the carried state with the batch inserts, so the carried
-    # frames gained ~one partition-set per batch forever (measured at
-    # sf0.1: shingles 40 → 48 → 56 over three batches — unbounded on an
-    # unbounded stream, near-empty slivers dragging every later batch's
-    # barrier and the final rollup). Cap each frame at max(cores, its
-    # partition count at state-load) — coalesce never splits, so a
-    # 100 TB state that legitimately arrives with partitions ≫ cores
-    # keeps them; only the per-batch sliver growth is folded back.
-    _caps = {
-        n: max(
-            spark.sparkContext.defaultParallelism,
-            probed_num_partitions(f),
-        )
-        for n, f in state0.frames().items()
-    }
-
-    def process_batch(batch, _bid):
-        from concurrent.futures import ThreadPoolExecutor
-
-        inc = apply_increment_detailed(carried["state"], batch)
-        merged = inc.state
-        # Sever lineage per batch — an unbounded stream would otherwise
-        # grow every state frame's plan by one increment per batch — with
-        # the five EAGER checkpoints submitted CONCURRENTLY: serially
-        # they cost five job barriers (~3 s/batch measured at sf0.1);
-        # Spark's scheduler runs the five tiny jobs in parallel, so the
-        # wall cost is ~one barrier. (localCheckpoint(eager=False) was
-        # measured and rejected: it skips the barriers but leaves the
-        # LOGICAL plans untruncated until materialization, so per-batch
-        # Catalyst analysis grows with stream length — the exact failure
-        # the checkpoint exists to prevent.)
-        frames = merged.frames()
-        with ThreadPoolExecutor(len(frames)) as ex:
-            cps = dict(
-                zip(
-                    frames,
-                    ex.map(
-                        lambda kv: kv[1].coalesce(_caps[kv[0]]).localCheckpoint(),
-                        frames.items(),
-                    ),
-                )
-            )
-        # checkpoint barrier passed → lineage severed: release this
-        # batch's internal cache (the LSH doc aggregate) so executor
-        # storage stays bounded on an unbounded stream (r9 ADVICE —
-        # previously one cached frame accreted per micro-batch)
-        inc.release()
-        carried["state"] = CorpusState(**cps)
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    final = carry_state_stream(
+        delta_stream(spark, sf_dir, batch_docs),
+        stream_work_dir("corpincstream"),
+        _materialized_base_state(spark, sf_dir, base),
+        step,
     )
-    drain_stream_foreach(stream, work, process_batch)
-    return state_rollup(carried["state"])
+    return state_rollup(final).rollup
 
 
 def _inject_stream_corpus_oracle() -> None:

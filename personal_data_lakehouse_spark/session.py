@@ -26,6 +26,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """24g, capped at half the host's physical memory: a heap limit above
+    RAM lets the JVM keep growing until the kernel OOM-kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, phys // 2**21)}m"
+
+
 def delta_available() -> bool:
     """Probe for the optional delta-spark package (not in this container)."""
     try:
@@ -68,7 +75,10 @@ def get_spark(
         # rows, ~10× less serialization overhead on wide corpus scans; the
         # registry-wide lint (tests/test_plan_lint.py) forbids the row path.
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

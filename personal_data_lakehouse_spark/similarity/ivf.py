@@ -282,7 +282,7 @@ def ivf_blocked_neardup_detailed(
     ``cells.unpersist()`` once the result is consumed (r10 ADVICE: the
     internal persist previously had no release path, accreting one
     cached frame per invocation in a driver that never clearCaches —
-    the ``build_state_v2_detailed`` precedent).
+    the ``corpus_incremental.IncrementResult.release`` precedent).
 
     Pairs are generated only within a cell (id_a < id_b), scored exactly,
     and kept when round(cosine, 6) >= threshold — the embedding analogue of

@@ -18,7 +18,7 @@ Scale: watermark delay bounds the state store; keys are
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -379,6 +379,60 @@ def drain_stream_foreach(
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def carry_state_stream(
+    stream_df: DataFrame,
+    work_dir: str,
+    state0: Mapping[str, DataFrame],
+    step,
+) -> dict[str, DataFrame]:
+    """Drain ``stream_df`` while carrying a named set of frames across
+    micro-batches; returns the final carried frames.
+
+    Per micro-batch: ``step(state, batch)`` returns ``(frames,
+    persisted)`` — the merged frames and the batch's internal persists
+    they read through. Each frame is coalesced to max(cores, its
+    partition count at state load), every frame is checkpointed, and
+    then the persists are released.
+
+    * The checkpoint severs lineage: an unbounded stream would otherwise
+      grow every carried plan (and its Catalyst analysis) by one
+      increment per batch. It is EAGER because ``eager=False`` leaves
+      the logical plans untruncated until materialization.
+    * The checkpoints run CONCURRENTLY: serially they cost one job
+      barrier per frame; Spark's scheduler runs the tiny jobs in
+      parallel, so the wall cost is about one barrier.
+    * The cap exists because each checkpoint unions the carried frame
+      with the batch's inserts, adding ~one partition set per batch
+      forever. Coalesce never splits, so a state that arrives with more
+      partitions than cores keeps them.
+    * Releasing after the barrier keeps executor storage bounded on an
+      unbounded stream."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from personal_data_lakehouse_spark.operators.partitioning import (
+        probed_num_partitions,
+    )
+
+    cores = stream_df.sparkSession.sparkContext.defaultParallelism
+    caps = {n: max(cores, probed_num_partitions(f)) for n, f in state0.items()}
+    carried = dict(state0)
+
+    def process_batch(batch, _bid):
+        frames, persisted = step(carried, batch)
+        frames = dict(frames)  # resolve lazy frames on this thread
+        with ThreadPoolExecutor(len(frames)) as ex:
+            cps = ex.map(
+                lambda kv: kv[1].coalesce(caps[kv[0]]).localCheckpoint(),
+                frames.items(),
+            )
+            carried.update(zip(frames, cps))
+        for frame in persisted:
+            frame.unpersist()
+
+    drain_stream_foreach(stream_df, work_dir, process_batch)
+    return carried
 
 
 def merge_sink(

@@ -17,11 +17,12 @@ from personal_data_lakehouse_spark.corpus import (
     split_stage,
 )
 from personal_data_lakehouse_spark.corpus_incremental import (
-    STATE_KEYS,
+    CorpusState,
     apply_increment,
     build_state,
     init_state_tables,
     run_increment,
+    stage_names,
     state_rollup,
 )
 from personal_data_lakehouse_spark.plans.registry import t
@@ -39,6 +40,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _build(docs):
+    return build_state(docs).state
+
+
+def _apply(state, batch):
+    return apply_increment(state, batch).state
+
+
+def _rollup(state):
+    return state_rollup(state).rollup
+
+
 def _split(spark, thr: int):
     docs = t(spark, SF_DIR, "documents")
     return (
@@ -50,8 +63,8 @@ def _split(spark, thr: int):
 
 def test_increment_equals_full_recompute(spark):
     base, batch, docs = _split(spark, 400)
-    merged = apply_increment(build_state(base), batch)
-    assert _rows(state_rollup(merged)) == _rows(_full_recompute_rollup(docs))
+    merged = _apply(_build(base), batch)
+    assert _rows(_rollup(merged)) == _rows(_full_recompute_rollup(docs))
 
 
 def test_increment_replay_is_noop(spark):
@@ -59,10 +72,10 @@ def test_increment_replay_is_noop(spark):
     nothing in any of the five stage tables — the MERGE idempotency the
     reference's dedup-on-append contract promises."""
     base, batch, _ = _split(spark, 400)
-    once = apply_increment(build_state(base), batch)
-    frames_once = {n: _rows(f) for n, f in once.frames().items()}
-    twice = apply_increment(once, batch)
-    for name, frame in twice.frames().items():
+    once = _apply(_build(base), batch)
+    frames_once = {n: _rows(f) for n, f in once.items()}
+    twice = _apply(once, batch)
+    for name, frame in twice.items():
         assert _rows(frame) == frames_once[name], name
 
 
@@ -111,21 +124,21 @@ def test_increment_can_bridge_existing_clusters(spark):
 
     from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 
-    state = build_state(base)
+    state = _build(base)
     base_labels = {
         r["doc_id"]: (r["cluster_id"], r["is_canonical"])
         for r in dedup_clusters(
-            state.skeleton.select("doc_id"), state.edges
+            state["skeleton"].select("doc_id"), state["edges"]
         ).collect()
     }
     assert base_labels[1] == (1, True) and base_labels[2] == (1, False)
     assert base_labels[10] == (10, True) and base_labels[11] == (10, False)
 
-    merged = apply_increment(state, batch)
+    merged = _apply(state, batch)
     labels = {
         r["doc_id"]: (r["cluster_id"], r["is_canonical"])
         for r in dedup_clusters(
-            merged.skeleton.select("doc_id"), merged.edges
+            merged["skeleton"].select("doc_id"), merged["edges"]
         ).collect()
     }
     # THE MERGE: all of 1, 2, 10, 11, 100 now share one cluster id …
@@ -134,30 +147,31 @@ def test_increment_can_bridge_existing_clusters(spark):
     assert labels[10] == (1, False)
     # the merged end state still equals the full recompute over the union
     full = _full_recompute_rollup(base.unionByName(batch))
-    assert _rows(state_rollup(merged)) == _rows(full)
+    assert _rows(_rollup(merged)) == _rows(full)
 
 
 def test_managed_table_increment_and_replay(spark):
     """The warehouse flavor: init base tables, MERGE one increment, check
     the rollup equals the full recompute; replay the batch and check every
     stage table is row-identical (insert-only MERGE found nothing new)."""
-    from personal_data_lakehouse_spark.corpus_incremental import CorpusState
-
     base, batch, docs = _split(spark, 400)
     init_state_tables(spark, base, namespace="corpinc_t")
     counts1 = run_increment(spark, batch, namespace="corpinc_t")
 
     def tables():
         return CorpusState(
-            **{n: spark.read.table(f"corpinc_t.{n}") for n in STATE_KEYS}
+            {
+                n: spark.read.table(f"corpinc_t.{n}")
+                for n in stage_names(False)
+            }
         )
 
-    assert _rows(state_rollup(tables())) == _rows(_full_recompute_rollup(docs))
+    assert _rows(_rollup(tables())) == _rows(_full_recompute_rollup(docs))
 
-    before = {n: _rows(f) for n, f in tables().frames().items()}
+    before = {n: _rows(f) for n, f in tables().items()}
     counts2 = run_increment(spark, batch, namespace="corpinc_t")
     assert counts2 == counts1
-    after = {n: _rows(f) for n, f in tables().frames().items()}
+    after = {n: _rows(f) for n, f in tables().items()}
     assert after == before
 
 
@@ -198,13 +212,13 @@ def test_increment_matches_rebuild_on_random_corpora(spark):
         for cut in {0, rng.randrange(n + 1), n}:
             base = docs.filter(F.col("doc_id") < cut)
             batch = docs.filter(F.col("doc_id") >= cut)
-            merged = apply_increment(build_state(base), batch)
-            assert _rows(state_rollup(merged)) == _rows(
+            merged = _apply(_build(base), batch)
+            assert _rows(_rollup(merged)) == _rows(
                 _full_recompute_rollup(docs)
             ), (trial, cut)
-            again = apply_increment(merged, batch)
-            for name, frame in again.frames().items():
-                assert _rows(frame) == _rows(merged.frames()[name]), (
+            again = _apply(merged, batch)
+            for name, frame in again.items():
+                assert _rows(frame) == _rows(merged[name]), (
                     trial,
                     cut,
                     name,
@@ -245,5 +259,5 @@ def test_chained_increments_match_rebuild(spark):
     base = docs.filter(F.col("doc_id") < 300)
     b1 = docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
     b2 = docs.filter(F.col("doc_id") >= 400)
-    merged = apply_increment(apply_increment(build_state(base), b1), b2)
-    assert _rows(state_rollup(merged)) == _rows(_full_recompute_rollup(docs))
+    merged = _apply(_apply(_build(base), b1), b2)
+    assert _rows(_rollup(merged)) == _rows(_full_recompute_rollup(docs))

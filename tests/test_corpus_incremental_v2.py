@@ -1,19 +1,24 @@
-"""V2 (semantic-stage) incremental corpus pipeline
-(corpus_incremental.CorpusStateV2): the merged seven-table end state must
+"""Semantic-stage incremental corpus pipeline (a corpus_incremental.
+CorpusState built with embeddings): the merged seven-table end state must
 equal a full v2 recompute over the union, a replayed batch must change
 nothing, the closure must merge clusters ACROSS the lexical and semantic
 edge families, and the batch-only work claims must hold in the executed
-plan — the r9 proof technique applied to r10's semantic extension."""
+plan — the lexical suite's proof technique applied to the semantic
+stages."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.corpus_incremental import (
-    STATE_KEYS_V2,
-    apply_increment_v2,
-    build_state_v2,
-    state_rollup_v2,
+    STATE_KEYS,
+    CorpusState,
+    apply_increment,
+    build_state,
+    init_state_tables,
+    run_increment,
+    stage_names,
+    state_rollup,
 )
 from personal_data_lakehouse_spark.plans.registry import t
 from personal_data_lakehouse_spark.plans.similarity_ops import _CENTROID_IDS
@@ -23,6 +28,18 @@ from tests.conftest import SF_DIR
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _build(docs, emb, cents):
+    return build_state(docs, emb, cents).state
+
+
+def _apply(state, batch, emb, cents):
+    return apply_increment(state, batch, emb, cents).state
+
+
+def _rollup(state):
+    return state_rollup(state).rollup
 
 
 def _fixture(spark, thr: int):
@@ -40,8 +57,8 @@ def _fixture(spark, thr: int):
 
 def test_v2_increment_equals_full_recompute(spark):
     base, batch, docs, emb, cents = _fixture(spark, 400)
-    merged = apply_increment_v2(
-        build_state_v2(base, emb, cents),
+    merged = _apply(
+        _build(base, emb, cents),
         batch,
         # the batch's vectors pre-filtered to the batch range, as the
         # registered query passes them (values identical either way —
@@ -49,8 +66,8 @@ def test_v2_increment_equals_full_recompute(spark):
         emb.filter(F.col("vec_id") >= 400),
         cents,
     )
-    rebuild = build_state_v2(docs, emb, cents)
-    assert _rows(state_rollup_v2(merged)) == _rows(state_rollup_v2(rebuild))
+    rebuild = _build(docs, emb, cents)
+    assert _rows(_rollup(merged)) == _rows(_rollup(rebuild))
 
 
 def test_v2_increment_replay_is_noop(spark):
@@ -59,13 +76,11 @@ def test_v2_increment_replay_is_noop(spark):
     ledger, so no survivor reaches the semantic stage either."""
     base, batch, _, emb, cents = _fixture(spark, 400)
     emb_b = emb.filter(F.col("vec_id") >= 400)
-    once = apply_increment_v2(
-        build_state_v2(base, emb, cents), batch, emb_b, cents
-    )
-    frames_once = {n: _rows(f) for n, f in once.frames().items()}
-    assert set(frames_once) == set(STATE_KEYS_V2)
-    twice = apply_increment_v2(once, batch, emb_b, cents)
-    for name, frame in twice.frames().items():
+    once = _apply(_build(base, emb, cents), batch, emb_b, cents)
+    frames_once = {n: _rows(f) for n, f in once.items()}
+    assert set(frames_once) == set(STATE_KEYS)
+    twice = _apply(once, batch, emb_b, cents)
+    for name, frame in twice.items():
         assert _rows(frame) == frames_once[name], name
 
 
@@ -80,17 +95,15 @@ def test_v2_chained_increments_match_rebuild(spark):
     base = docs.filter(F.col("doc_id") < 300)
     b1 = docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
     b2 = docs.filter(F.col("doc_id") >= 400)
-    s1 = apply_increment_v2(
-        build_state_v2(base, emb, cents),
+    s1 = _apply(
+        _build(base, emb, cents),
         b1,
         emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)),
         cents,
     )
-    s2 = apply_increment_v2(
-        s1, b2, emb.filter(F.col("vec_id") >= 400), cents
-    )
-    rebuild = build_state_v2(docs, emb, cents)
-    assert _rows(state_rollup_v2(s2)) == _rows(state_rollup_v2(rebuild))
+    s2 = _apply(s1, b2, emb.filter(F.col("vec_id") >= 400), cents)
+    rebuild = _build(docs, emb, cents)
+    assert _rows(_rollup(s2)) == _rows(_rollup(rebuild))
 
 
 def _mk_docs(spark, rows):
@@ -139,18 +152,18 @@ def test_v2_closure_bridges_lexical_and_semantic_families(spark):
         ],
     )
     cents = pick_centroids(emb, [99])
-    state = build_state_v2(docs, emb, cents)
+    state = _build(docs, emb, cents)
 
-    assert _rows(state.lex.edges) == [(1, 2)]
-    assert _rows(state.sem_edges) == [(2, 10)]
+    assert _rows(state["edges"]) == [(1, 2)]
+    assert _rows(state["sem_edges"]) == [(2, 10)]
 
     from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 
-    merged_edges = state.lex.edges.unionByName(state.sem_edges)
+    merged_edges = state["edges"].unionByName(state["sem_edges"])
     labels = {
         r["doc_id"]: (r["cluster_id"], r["is_canonical"])
         for r in dedup_clusters(
-            state.lex.skeleton.select("doc_id"), merged_edges
+            state["skeleton"].select("doc_id"), merged_edges
         ).collect()
     }
     assert labels == {1: (1, True), 2: (1, False), 10: (1, False)}, labels
@@ -179,23 +192,23 @@ def test_v2_batch_can_bridge_semantic_clusters(spark):
 
     from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 
-    state = build_state_v2(base, emb, cents)
-    assert _rows(state.sem_edges) == []  # two semantic singletons
+    state = _build(base, emb, cents)
+    assert _rows(state["sem_edges"]) == []  # two semantic singletons
 
-    merged = apply_increment_v2(state, batch, emb, cents)
-    assert _rows(merged.sem_edges) == [(1, 100), (10, 100)]
+    merged = _apply(state, batch, emb, cents)
+    assert _rows(merged["sem_edges"]) == [(1, 100), (10, 100)]
     labels = {
         r["doc_id"]: (r["cluster_id"], r["is_canonical"])
         for r in dedup_clusters(
-            merged.lex.skeleton.select("doc_id"),
-            merged.lex.edges.unionByName(merged.sem_edges),
+            merged["skeleton"].select("doc_id"),
+            merged["edges"].unionByName(merged["sem_edges"]),
         ).collect()
     }
     # the bridge fused everything into cluster 1; base doc 10 lost the flag
     assert labels == {1: (1, True), 10: (1, False), 100: (1, False)}, labels
     # and the merged end state equals the v2 rebuild over the union
-    rebuild = build_state_v2(base.unionByName(batch), emb, cents)
-    assert _rows(state_rollup_v2(merged)) == _rows(state_rollup_v2(rebuild))
+    rebuild = _build(base.unionByName(batch), emb, cents)
+    assert _rows(_rollup(merged)) == _rows(_rollup(rebuild))
 
 
 def test_v2_increment_matches_rebuild_on_random_corpora(spark):
@@ -242,19 +255,19 @@ def test_v2_increment_matches_rebuild_on_random_corpora(spark):
             + [(1000, [1.0, 1.0, 0.0, 0.0]), (1001, [0.0, 0.0, 1.0, 1.0])],
         )
         cents = pick_centroids(emb, [1000, 1001])
-        rebuild = build_state_v2(docs, emb, cents)
+        rebuild = _build(docs, emb, cents)
         for cut in {0, rng.randrange(n + 1), n}:
             base = docs.filter(F.col("doc_id") < cut)
             batch = docs.filter(F.col("doc_id") >= cut)
-            merged = apply_increment_v2(
-                build_state_v2(base, emb, cents), batch, emb, cents
+            merged = _apply(
+                _build(base, emb, cents), batch, emb, cents
             )
-            assert _rows(state_rollup_v2(merged)) == _rows(
-                state_rollup_v2(rebuild)
+            assert _rows(_rollup(merged)) == _rows(
+                _rollup(rebuild)
             ), (trial, cut)
-            again = apply_increment_v2(merged, batch, emb, cents)
-            for name, frame in again.frames().items():
-                assert _rows(frame) == _rows(merged.frames()[name]), (
+            again = _apply(merged, batch, emb, cents)
+            for name, frame in again.items():
+                assert _rows(frame) == _rows(merged[name]), (
                     trial,
                     cut,
                     name,
@@ -275,8 +288,8 @@ def test_v2_incremental_plan_reads_only_batch_text_and_vectors(spark):
     returned plan."""
     import re
 
-    import __spark_entry__  # noqa: F401 — registers round10_ops
-    from personal_data_lakehouse_spark.plans import round10_ops
+    import __spark_entry__  # noqa: F401 — registers round9_ops
+    from personal_data_lakehouse_spark.plans import round9_ops
     from personal_data_lakehouse_spark.plans.registry import t as t_
 
     docs = t_(spark, SF_DIR, "documents")
@@ -284,12 +297,12 @@ def test_v2_incremental_plan_reads_only_batch_text_and_vectors(spark):
     cents = pick_centroids(emb, _CENTROID_IDS)
     base = docs.filter(F.col("doc_id") < 400)
     batch = docs.filter(F.col("doc_id") >= 400)
-    state = round10_ops._materialized_base_state_v2(spark, SF_DIR, base)
-    merged = apply_increment_v2(
-        state, batch, emb.filter(F.col("vec_id") >= 400), cents
+    state = round9_ops._materialized_base_state(
+        spark, SF_DIR, base, emb, cents
     )
+    merged = _apply(state, batch, emb.filter(F.col("vec_id") >= 400), cents)
     saw_doc_scan = saw_emb_scan = False
-    for name, frame in merged.frames().items():
+    for name, frame in merged.items():
         plan = frame._jdf.queryExecution().executedPlan().toString()
         for line in plan.splitlines():
             if "FileScan" not in line:
@@ -330,42 +343,28 @@ def test_v2_managed_table_increment_and_replay(spark):
     recompute; replay the batch and check every stage table — including
     cells and sem_edges — is row-identical (insert-only MERGE found
     nothing new)."""
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        STATE_KEYS,
-        CorpusState,
-        CorpusStateV2,
-        init_state_tables_v2,
-        run_increment_v2,
-    )
-
     base, batch, docs, emb, cents = _fixture(spark, 400)
     emb_batch = emb.filter(F.col("vec_id") >= 400)
-    init_state_tables_v2(spark, base, emb, cents, namespace="corpinc2_t")
-    counts1 = run_increment_v2(
+    init_state_tables(spark, base, emb, cents, namespace="corpinc2_t")
+    counts1 = run_increment(
         spark, batch, emb_batch, cents, namespace="corpinc2_t"
     )
 
     def tables():
-        return CorpusStateV2(
-            lex=CorpusState(
-                **{
-                    n: spark.read.table(f"corpinc2_t.{n}")
-                    for n in STATE_KEYS
-                }
-            ),
-            cells=spark.read.table("corpinc2_t.cells"),
-            sem_edges=spark.read.table("corpinc2_t.sem_edges"),
+        return CorpusState(
+            {
+                n: spark.read.table(f"corpinc2_t.{n}")
+                for n in stage_names(True)
+            }
         )
 
-    rebuild = build_state_v2(docs, emb, cents)
-    assert _rows(state_rollup_v2(tables())) == _rows(
-        state_rollup_v2(rebuild)
-    )
+    rebuild = _build(docs, emb, cents)
+    assert _rows(_rollup(tables())) == _rows(_rollup(rebuild))
 
-    before = {n: _rows(f) for n, f in tables().frames().items()}
-    counts2 = run_increment_v2(
+    before = {n: _rows(f) for n, f in tables().items()}
+    counts2 = run_increment(
         spark, batch, emb_batch, cents, namespace="corpinc2_t"
     )
     assert counts2 == counts1
-    after = {n: _rows(f) for n, f in tables().frames().items()}
+    after = {n: _rows(f) for n, f in tables().items()}
     assert after == before

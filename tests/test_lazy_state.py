@@ -1,23 +1,21 @@
-"""r13: lazily-constructed merged-state frames must (a) build identical
-frames to the eager merges, (b) defer construction of tables a consumer
-never reads, and (c) keep the stream/MERGE paths (frames(), replace)
-working unchanged. Plus the new rollup release handles (r12 ADVICE)."""
+"""Lazily-constructed merged-state frames must (a) build identical frames
+to the eager merges, (b) defer construction of tables a consumer never
+reads — the rollup resolves only skeleton + edges (+ sem_edges) — and
+(c) keep the full-read paths (items(), the stream loop, the MERGE)
+working unchanged. Plus the rollup release handles."""
 
 from __future__ import annotations
 
 import os
-from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.corpus_incremental import (
     CorpusState,
-    _LazyCorpusState,
-    apply_increment_detailed,
-    build_state_detailed,
+    apply_increment,
+    build_state,
     state_rollup,
-    state_rollup_detailed,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -51,39 +49,49 @@ def test_lazy_fields_defer_and_memoize(spark):
 
         return thunk
 
-    st = _LazyCorpusState(
-        fp=mk("fp"), shingles=base, bands=base, edges=base, skeleton=mk("skeleton")
+    st = CorpusState(
+        {
+            "fp": mk("fp"),
+            "shingles": base,
+            "bands": base,
+            "edges": base,
+            "skeleton": mk("skeleton"),
+        }
     )
     assert calls == {"fp": 0, "skeleton": 0}  # nothing built yet
-    _ = st.skeleton
+    assert "fp" in st and "cells" not in st  # membership resolves nothing
+    assert calls == {"fp": 0, "skeleton": 0}
+    _ = st["skeleton"]
     assert calls == {"fp": 0, "skeleton": 1}  # only the accessed field
-    _ = st.skeleton
+    _ = st["skeleton"]
     assert calls["skeleton"] == 1  # memoized
-    assert set(st.frames()) == {"fp", "shingles", "bands", "edges", "skeleton"}
-    assert calls == {"fp": 1, "skeleton": 1}  # frames() forces the rest
+    assert set(dict(st)) == {"fp", "shingles", "bands", "edges", "skeleton"}
+    assert calls == {"fp": 1, "skeleton": 1}  # a full read forces the rest
 
 
-def test_lazy_state_replace_forces_to_plain_frames(spark):
+def test_state_rejects_unknown_stage_sets(spark):
     base = spark.range(1).selectExpr("id AS doc_id")
-    st = _LazyCorpusState(
-        fp=lambda: base, shingles=base, bands=base, edges=base, skeleton=base
+    with pytest.raises(ValueError):
+        CorpusState({"fp": base, "edges": base})
+    lexical = CorpusState(
+        {n: base for n in ("fp", "shingles", "bands", "edges", "skeleton")}
     )
-    st2 = replace(st, edges=base.selectExpr("doc_id AS x"))
-    assert isinstance(st2, CorpusState)
-    assert st2.fp is base  # forced through getattr, stored materialized
+    # a lexical state takes no embeddings (and a semantic one needs them)
+    with pytest.raises(ValueError):
+        apply_increment(lexical, base, base, base)
 
 
 def test_increment_lazy_equals_eager_merges(spark, split):
     base, batch = split
-    built = build_state_detailed(base)
-    inc = apply_increment_detailed(built.state, batch)
+    built = build_state(base)
+    inc = apply_increment(built.state, batch)
     # force every lazy field and compare against a fresh eager recompute
     # over the union (the module's own parity contract)
-    full = build_state_detailed(base.unionByName(batch))
-    for name, frame in inc.state.frames().items():
-        assert _rows(frame) == _rows(full.state.frames()[name]), name
-    assert _rows(state_rollup(inc.state)) == _rows(
-        state_rollup(full.state)
+    full = build_state(base.unionByName(batch))
+    for name, frame in inc.state.items():
+        assert _rows(frame) == _rows(full.state[name]), name
+    assert _rows(state_rollup(inc.state).rollup) == _rows(
+        state_rollup(full.state).rollup
     )
     inc.release()
     built.release()
@@ -91,10 +99,41 @@ def test_increment_lazy_equals_eager_merges(spark, split):
     spark.catalog.clearCache()
 
 
-def test_rollup_detailed_release_path(spark, split):
+@pytest.mark.parametrize(
+    "semantic", [False, True], ids=["lexical", "semantic"]
+)
+def test_rollup_resolves_only_skeleton_and_edges(spark, split, semantic):
+    """The rollup over an applied increment resolves the merged skeleton
+    and edges (+ sem_edges for a semantic state) and never constructs the
+    fp/shingles/bands/cells merges."""
+    from personal_data_lakehouse_spark.plans.similarity_ops import (
+        _CENTROID_IDS,
+    )
+    from personal_data_lakehouse_spark.similarity.ivf import pick_centroids
+
+    base, batch = split
+    emb = cents = None
+    if semantic:
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        cents = pick_centroids(emb, _CENTROID_IDS)
+    built = build_state(base, emb, cents)
+    inc = apply_increment(built.state, batch, emb, cents)
+    res = state_rollup(inc.state)
+    resolved = {
+        n for n, f in inc.state._frames.items() if not callable(f)
+    }
+    expect = {"skeleton", "edges"} | ({"sem_edges"} if semantic else set())
+    assert resolved == expect
+    res.release()
+    inc.release()
+    built.release()
+    spark.catalog.clearCache()
+
+
+def test_rollup_release_path(spark, split):
     base, _batch = split
-    built = build_state_detailed(base)
-    res = state_rollup_detailed(built.state)
+    built = build_state(base)
+    res = state_rollup(built.state)
     n_before = len(
         [r for r in res.persisted if r.storageLevel.useMemory]
     )

@@ -81,3 +81,13 @@ def test_cache_cap_bounds_growth(spark):
     finally:
         partitioning._SPREAD_CACHE_CAP = cap
         partitioning._SPREAD_CACHE.clear()
+
+
+def test_fileless_frames_probe_their_own_count(spark):
+    # same schema, no file leaves, different partition counts: the memo
+    # must not hand the first frame's count to the second
+    partitioning._SPREAD_CACHE.clear()
+    a = spark.range(0, 10, 1, 2).localCheckpoint()
+    b = spark.range(0, 10, 1, 5).localCheckpoint()
+    assert probed_num_partitions(a) == 2
+    assert probed_num_partitions(b) == 5

@@ -1563,6 +1563,64 @@ def test_file_stream_delivers_oldest_mtime_first(spark, tmp_path):
     assert [vals for _bid, vals in sorted(seen)] == [[1], [2], [3]], seen
 
 
+def test_carry_state_stream_caps_partitions_and_releases(spark, tmp_path):
+    """The shared carried-state loop over three single-file micro-batches:
+    after every batch each carried frame holds at most max(cores, its
+    load-time partition count) partitions although the step's union adds
+    cores + 3 partitions per batch, every frame the step handed over for
+    release is unpersisted, and the carried rows are base + all batches."""
+    import glob
+    import os
+    import shutil
+
+    from personal_data_lakehouse_spark.streaming.windows import (
+        carry_state_stream,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for i in range(3):
+        d = str(tmp_path / f"w{i}")
+        spark.range(10 * i, 10 * i + 10).coalesce(1).write.parquet(d)
+        dst = os.path.join(src, f"d{i}.parquet")
+        shutil.copyfile(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_600_000_000 + 60 * i,) * 2)
+
+    state0 = {
+        "narrow": spark.range(-5, 0, 1, 2),
+        "wide": spark.range(-5, 0, 1, cores + 2),
+    }
+    caps = {"narrow": max(cores, 2), "wide": cores + 2}
+    released: list = []
+
+    def check(state):
+        for name, frame in state.items():
+            n = frame.rdd.getNumPartitions()
+            assert n <= caps[name], (name, n, caps[name])
+        assert all(not f.storageLevel.useMemory for f in released)
+
+    def step(state, batch):
+        check(state)  # the state the previous batch left behind
+        inserts = batch.repartition(cores + 3).persist()
+        released.append(inserts)
+        return {n: f.unionByName(inserts) for n, f in state.items()}, [
+            inserts
+        ]
+
+    stream = (
+        spark.readStream.schema("id bigint")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    final = carry_state_stream(stream, str(tmp_path / "work"), state0, step)
+    check(final)
+    assert len(released) == 3
+    for name, frame in final.items():
+        ids = sorted(r["id"] for r in frame.collect())
+        assert ids == list(range(-5, 30)), name
+
+
 def test_v2_greedy_fused_ext_aggregation():
     """r13 fusion: the per-cell resolver receives arrival rows UNIONed
     with Spark-filtered external match rows and must reproduce the old

@@ -23,10 +23,6 @@ def ensure_layers(spark: SparkSession) -> None:
         spark.sql(f"CREATE SCHEMA IF NOT EXISTS {layer}")
 
 
-def table_exists(spark: SparkSession, name: str) -> bool:
-    return spark.catalog.tableExists(name)
-
-
 def write_table(
     df: DataFrame,
     name: str,

@@ -88,23 +88,6 @@ def exploded_shingles(
     return sh.distinct() if distinct else sh
 
 
-def shingle_sets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, shingles array<string>) — set form for Jaccard verification.
-
-    Built from the exploded form; element order is collect_list's (arbitrary),
-    which is fine because all consumers do set arithmetic."""
-    return (
-        exploded_shingles(df, text_col, id_col, shingle_n)
-        .groupBy(id_col)
-        .agg(F.collect_list("s").alias("shingles"))
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",

@@ -8,7 +8,7 @@ document's distinct tokens; the sketch sets bit j where the vote is >= 0.
 
 Scale: row-local (transform/aggregate over the token array) — a narrow map
 stage, no shuffle. Near-dup candidates then come from hamming distance over
-the sketch (bit_count(x ^ y)), joined by sketch prefix blocks.
+the sketch (bit_count(x ^ y)), joined on shared bit bands.
 """
 
 from __future__ import annotations
@@ -53,38 +53,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
 
     return spread(df).select(
         F.col(id_col), F.expr(simhash_expr(text_col)).alias("simhash")
-    )
-
-
-def simhash_hamming_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_distance: int = 8,
-) -> DataFrame:
-    """Near-dup pairs by sketch hamming distance, blocked by the top-16-bit
-    prefix so the self-join is per-block instead of all-pairs.
-
-    (At 100 TB use rotated prefix blocks to guarantee recall for small
-    distances — the SimHash table trick from Manku et al. 2007.)
-    """
-    s = simhash(df, text_col, id_col)
-    blocked = s.withColumn("block", F.expr(f"shiftright(simhash, {BITS - 16})"))
-    a, b = blocked.alias("a"), blocked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
     )
 
 

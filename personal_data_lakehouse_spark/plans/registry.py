@@ -157,7 +157,7 @@ def oracle_double(name: str) -> str | None:
 # Parquet schemas by table path (validated by mtime), discovered once per
 # process: without an explicit schema, EVERY spark.read.parquet(path) runs
 # a 1-task footer-inference job at PLAN-BUILD time (measured by
-# tools/eager_audit.py — a uniform one-job construction floor across the
+# tools/audit.py — a uniform one-job construction floor across the
 # whole registry, ~400 scheduler round-trips per full sweep). Fixture
 # files are immutable per path in every shipped flow, but the entry
 # stores the path's mtime anyway (r8 ADVICE): a test or tool that

@@ -292,9 +292,13 @@ def watermark_flush_events(
     return spark.readStream.schema(schema).parquet(path)
 
 
-def drain_stream_to_parquet(
-    stream_df: DataFrame, work_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+# Shuffle partitions pinned for every drained run: AQE is disabled in
+# stateful streaming, and 32 default partitions over a few thousand state
+# rows is pure scheduling overhead at test scale.
+DRAIN_SHUFFLE_PARTITIONS = 8
+
+
+def drain_stream_to_parquet(stream_df: DataFrame, work_dir: str) -> DataFrame:
     """Run an availableNow APPEND-mode query into a parquet file sink and
     return a batch DataFrame over the sink directory.
 
@@ -307,10 +311,6 @@ def drain_stream_to_parquet(
     is deleted after termination; the sink dir must outlive this call (the
     returned DataFrame reads it lazily), so callers should place
     ``work_dir`` under the OS tempdir.
-
-    ``shuffle_partitions`` is pinned for the run because AQE is disabled in
-    stateful streaming — 32 default partitions over a few thousand state
-    rows is pure scheduling overhead at test scale.
     """
     import os
     import shutil
@@ -320,8 +320,7 @@ def drain_stream_to_parquet(
     ckpt = os.path.join(work_dir, "ckpt")
     schema = stream_df.schema
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(DRAIN_SHUFFLE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.format("parquet")
@@ -333,8 +332,7 @@ def drain_stream_to_parquet(
         )
         q.awaitTermination()
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
     if not os.path.isdir(out_dir):
         # a stream that committed no files never creates the sink dir —
@@ -347,7 +345,6 @@ def drain_stream_foreach(
     stream_df: DataFrame,
     work_dir: str,
     batch_fn,
-    shuffle_partitions: int | None = 8,
 ) -> None:
     """Run an availableNow ``foreachBatch`` query to completion.
 
@@ -365,8 +362,7 @@ def drain_stream_foreach(
     spark = stream_df.sparkSession
     ckpt = os.path.join(work_dir, "ckpt")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(DRAIN_SHUFFLE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.foreachBatch(batch_fn)
@@ -376,8 +372,7 @@ def drain_stream_foreach(
         )
         q.awaitTermination()
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 

@@ -1,122 +1,102 @@
-"""Simulate the driver: vanilla SparkSession (NOT the engine's tuned factory),
-consume __spark_entry__.py as a black box, diff every query against DuckDB."""
-import decimal, hashlib, math, sys, time
+"""Simulate the driver: a vanilla SparkSession (NOT the engine's tuned
+factory) consumes __spark_entry__.py as a black box, and every query is
+hashed against its DuckDB oracle with the correctness gate's own
+canon/vhash (``perfbench/check.py``).
 
-sys.path.insert(0, "/root/repo")
-import duckdb
-from pyspark.sql import SparkSession
+Usage: python tools/driver_sim.py [query ...]   (default: every query)
+Env: DRIVER_SIM_SF_DIR (default: the sf0.01 fixture). Exit 1 on any failure.
+"""
 
-import __spark_entry__ as mod
+from __future__ import annotations
 
 import os
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench import check  # noqa: E402
+
 SF = os.environ.get("DRIVER_SIM_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-# Vanilla session — deliberately NOT personal_data_lakehouse_spark.get_spark:
-# the driver builds its own. No UTC pin, no ANSI flag, default shuffle parts.
-# driver.memory is HOST SIZING, not semantics: the default 1g local JVM is
-# marginal for the sf0.1 sweep's AQE broadcasts (the LSH shingle table) and
-# OOM'd mid-sweep 2026-08-15; 4g matches the smallest executor a real
-# deployment would run.
-spark = (SparkSession.builder.master("local[8]")
-         .appName("driver-sim").config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "4g").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-
-con = duckdb.connect()
-for t in TABLES:
-    con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-STRICT = os.environ.get("DRIVER_SIM_STRICT", "1") == "1"
-
-class DecimalLeak(Exception):
-    """A result column reached the driver as decimal.Decimal.
-
-    Round-1 lesson: the real driver's value hash treats Spark-side Decimal
-    and DuckDB's pandas-path float64 as different even when numerically
-    equal (18/18 round-1 hash misses were decimal-output queries). The
-    engine's contract is decimal-free OUTPUTS on both sides, so any Decimal
-    here is a bug regardless of what the other side returns.
-    """
 
 
-class ListLeak(Exception):
-    """A result column reached the driver as a Python list/tuple/dict.
+def vanilla_session():
+    """The driver's own session: no UTC pin, no ANSI flag, default shuffle
+    partitions. driver.memory is HOST SIZING, not semantics: the default 1g
+    local JVM is marginal for the sf0.1 sweep's AQE broadcasts (the LSH
+    shingle table) and OOMs mid-sweep; 4g matches the smallest executor a
+    real deployment would run."""
+    from pyspark.sql import SparkSession
 
-    Round-3 lesson: the real driver canonicalizes through pandas
-    sort_values, which throws `TypeError: unhashable type: 'list'` on
-    object-list columns (q_quality_quarantine was the one red r3 row).
-    The engine's contract is scalar-only HASHED outputs — join arrays to
-    strings (array_join / array_to_string) before the final projection.
-    Rows-only queries are exempt (never hashed).
-    """
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName("driver-sim")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "4g")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
-def canon(v):
-    if v is None: return "N"
-    if isinstance(v, decimal.Decimal):
-        raise DecimalLeak(f"decimal value {v} in result set")
-    if isinstance(v, float): return "nan" if math.isnan(v) else f"f:{v!r}"
-    if isinstance(v, bool): return f"b:{v}"
-    if isinstance(v, int): return f"i:{v}"
-    if hasattr(v, "isoformat"):
-        return f"t:{v.isoformat()}" if STRICT else f"t:{v.isoformat()[:26]}"
-    if isinstance(v, (list, tuple, dict)):
-        raise ListLeak(f"non-scalar value of type {type(v).__name__} in result set")
-    return f"s:{v}"
+def main() -> int:
+    import __spark_entry__ as mod
+    from personal_data_lakehouse_spark.plans.registry import TABLES
 
-def vhash(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(canon(r[i]) for i in idx) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+    qs, osql = mod.queries(), mod.oracle_sql()
+    names = sys.argv[1:] or sorted(qs)
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 1
+    spark = vanilla_session()
+    con = check.oracle_connection(SF, TABLES)
 
-# 1) entry() smoke
-df = mod.entry(spark)
-n = df.count()
-print(f"entry(): {n} rows, schema={[f.name for f in df.schema.fields]}")
-assert n > 0
+    df = mod.entry(spark)
+    n = df.count()
+    print(f"entry(): {n} rows, schema={[f.name for f in df.schema.fields]}")
+    if n == 0:
+        raise SystemExit("entry() returned no rows")
 
-# 2) queries vs oracle
-qs, osql = mod.queries(), mod.oracle_sql()
-only = os.environ.get("DRIVER_SIM_ONLY")
-if only:
-    keep = {n.strip() for n in only.split(",") if n.strip()}
-    qs = {n: f for n, f in qs.items() if n in keep}
-fails = 0
-for name in sorted(qs):
-    # Per-query isolation: registry callables persist() intermediates
-    # (LSH band index, IVF cells) sized for ONE invocation; across a
-    # 212-query sf0.1 sweep the accumulated cache blocks exhausted the
-    # vanilla session's default 1g heap (OOM during codegen ~160 queries
-    # in, 2026-08-15). The real driver evaluates queries independently;
-    # clearing between entries mirrors that and bounds sweep memory.
-    spark.catalog.clearCache()
-    t0 = time.time()
-    tbl = qs[name](spark, SF).toArrow()
-    s_cols, s_rows = tbl.column_names, [tuple(d.values()) for d in tbl.to_pylist()]
-    if name not in osql:
-        print(f"  {name:28s} rows-only: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
-        continue
-    # Materialize DuckDB via arrow, NOT fetchall(): the real driver hashes
-    # through a pandas/arrow path where HUGEINT arrives as decimal128(38,0)
-    # (→ Decimal in to_pylist) while fetchall() gives a plain Python int —
-    # round-2's two gate misses were green locally for exactly that reason.
-    atbl = con.sql(osql[name]).arrow()
-    d_cols = atbl.column_names
-    d_rows = [tuple(d.values()) for d in atbl.to_pylist()]
-    ok_schema = sorted(s_cols) == sorted(d_cols)
-    ok_rows = len(s_rows) == len(d_rows)
-    try:
-        ok_hash = vhash(s_cols, s_rows) == vhash(d_cols, d_rows)
-    except (DecimalLeak, ListLeak) as e:
-        fails += 1
-        print(f"  {name:28s} FAIL {type(e).__name__}: {e}")
-        continue
-    status = "OK " if (ok_schema and ok_rows and ok_hash) else "FAIL"
-    if status == "FAIL":
-        fails += 1
-        print(f"  {name:28s} {status} schema={ok_schema} rows={ok_rows}({len(s_rows)}/{len(d_rows)}) hash={ok_hash}")
-    else:
-        print(f"  {name:28s} {status} {len(s_rows)} rows [{time.time()-t0:.1f}s]")
-print(f"\n{len(qs)} queries, {fails} failures")
-sys.exit(1 if fails else 0)
+    fails = 0
+    for name in sorted(names):
+        # Per-query isolation: registry callables persist() intermediates
+        # (LSH band index, IVF cells) sized for ONE invocation, and the real
+        # driver evaluates queries independently; without the clear, a full
+        # sf0.1 sweep accumulates cache blocks until the heap runs out.
+        spark.catalog.clearCache()
+        t0 = time.time()
+        s_cols, s_rows = check.arrow_rows(qs[name](spark, SF).toArrow())
+        if name not in osql:
+            print(f"  {name:28s} rows-only: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
+            continue
+        # DuckDB via arrow, NOT fetchall(): the real driver hashes through a
+        # pandas/arrow path where HUGEINT arrives as decimal128(38,0) (a
+        # Decimal in to_pylist) while fetchall() gives a plain Python int,
+        # so a fetchall() check passes results the gate rejects.
+        d_cols, d_rows = check.arrow_rows(con.sql(osql[name]).arrow())
+        ok_schema = sorted(s_cols) == sorted(d_cols)
+        ok_rows = len(s_rows) == len(d_rows)
+        # A Decimal or list value fails outright, whatever the other side
+        # holds: the real driver's hash reads a Spark Decimal and DuckDB's
+        # float64 as different even when numerically equal, and its pandas
+        # sort cannot hash list columns (join arrays to strings before the
+        # final projection). Rows-only queries are never hashed.
+        try:
+            ok_hash = check.vhash(s_cols, s_rows) == check.vhash(d_cols, d_rows)
+        except check.NonScalar as e:
+            fails += 1
+            print(f"  {name:28s} FAIL NonScalar: {e}")
+            continue
+        if ok_schema and ok_rows and ok_hash:
+            print(f"  {name:28s} OK  {len(s_rows)} rows [{time.time()-t0:.1f}s]")
+        else:
+            fails += 1
+            print(f"  {name:28s} FAIL schema={ok_schema} rows={ok_rows}"
+                  f"({len(s_rows)}/{len(d_rows)}) hash={ok_hash}")
+    print(f"\n{len(names)} queries, {fails} failures")
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

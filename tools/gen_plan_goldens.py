@@ -13,7 +13,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 GOLDEN_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "tests",
@@ -23,7 +22,9 @@ GOLDEN_DIR = os.path.join(
 
 
 def main() -> None:
-    import __spark_entry__  # noqa: F401  — populates REGISTRY
+    import __spark_entry__  # populates REGISTRY
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else __spark_entry__.SMOKE_SF_DIR
     from tests.test_plan_goldens import _GOLDEN_NAMES
     from personal_data_lakehouse_spark.plans.golden import normalize_plan
     from personal_data_lakehouse_spark.plans.registry import REGISTRY
@@ -35,7 +36,7 @@ def main() -> None:
         # per-query cache clear: an earlier query's persist() would
         # otherwise swap FileScans for InMemoryTableScans in this golden
         spark.catalog.clearCache()
-        shape = normalize_plan(REGISTRY[name].fn(spark, SF_DIR))
+        shape = normalize_plan(REGISTRY[name].fn(spark, sf_dir))
         path = os.path.join(GOLDEN_DIR, f"{name}.txt")
         with open(path, "w") as f:
             f.write(shape)

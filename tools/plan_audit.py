@@ -16,11 +16,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-
 
 def main() -> None:
-    import __spark_entry__  # noqa: F401
+    import __spark_entry__  # populates REGISTRY
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else __spark_entry__.SMOKE_SF_DIR
     from personal_data_lakehouse_spark.plans.golden import normalize_plan
     from personal_data_lakehouse_spark.plans.registry import REGISTRY
     from personal_data_lakehouse_spark.session import get_spark
@@ -31,7 +31,7 @@ def main() -> None:
     for name, q in sorted(REGISTRY.items()):
         spark.catalog.clearCache()
         try:
-            shape = normalize_plan(q.fn(spark, SF_DIR))
+            shape = normalize_plan(q.fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001 — audit must not stop mid-sweep
             rows.append((name, -1, -1, -1, f"ERROR {type(e).__name__}: {e}"))
             continue

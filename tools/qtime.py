@@ -1,16 +1,16 @@
-"""Isolated per-query timing + formatted-plan capture (r12 optimization
-inner loop).
+"""Isolated per-query timing + formatted-plan capture.
 
-Times ONE OR MORE registered queries in a fresh engine session using the
-bench methodology (plan build + noop-sink execution per run, cache
-cleared between runs), printing every sample and the median so a change
-can be judged against host noise minutes after its "before" — without
-paying for a full bench.py sweep. Optionally writes
-``df.explain("formatted")`` to a file per query (the judge-checkable
-plan evidence, plans/r12/<q>_{before,after}.txt).
+Times ONE OR MORE registered queries in a fresh engine session through
+``bench.warm_sweep`` — the bench methodology: a cold build/execute split,
+three-or-more warm plan-build + noop-sink runs (re-run while they spread
+wider than ``bench.SPREAD_RETRY``), canary probes, cache cleared between
+queries — so a change can be judged against host noise minutes after its
+"before" without paying for a full bench.py sweep. Optionally writes
+``df.explain("formatted")`` to a file per query (plan evidence,
+<DIR>/<q>_{before,after}.txt).
 
 Usage:
-    python tools/qtime.py [-n RUNS] [--explain DIR --suffix before] q1 q2 ...
+    python tools/qtime.py [--explain DIR --suffix before] q1 q2 ...
     python tools/qtime.py --explain-only --explain DIR --suffix before q1 ...
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -22,9 +22,8 @@ import argparse
 import io
 import json
 import os
-import statistics
 import sys
-import time
+from collections import defaultdict
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -33,7 +32,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("-n", type=int, default=5, help="warm runs per query")
     ap.add_argument("--explain", default=None, help="dir for formatted plans")
     ap.add_argument("--suffix", default="before")
     ap.add_argument(
@@ -42,61 +40,36 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    from bench import warm_sweep
     from personal_data_lakehouse_spark.session import get_spark
 
+    qs = entry_mod.queries()
+    unknown = sorted(set(args.queries) - set(qs))
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
     spark = get_spark(app_name="qtime")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    qs = entry_mod.queries()
 
-    # JVM/codegen warmup (bench.py protocol)
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    (
-        spark.range(0, 1 << 24, 1, 8)
-        .selectExpr("sum(id * 3 + 1) AS s")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-
-    out: dict[str, dict] = {}
-    for name in args.queries:
-        if name not in qs:
-            print(f"!! unknown query {name}", file=sys.stderr)
-            continue
-        spark.sparkContext.setJobDescription(f"qtime:{name}")
-        if args.explain:
-            os.makedirs(args.explain, exist_ok=True)
-            df = qs[name](spark, sf_dir)
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
+        for name in args.queries:
             buf = io.StringIO()
             with redirect_stdout(buf):
-                df.explain("formatted")
-            path = os.path.join(
-                args.explain, f"{name}_{args.suffix}.txt"
-            )
+                qs[name](spark, sf_dir).explain("formatted")
+            path = os.path.join(args.explain, f"{name}_{args.suffix}.txt")
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             spark.catalog.clearCache()
-        if args.explain_only:
-            continue
-        # one untimed cold pass (first-execution codegen/manufacture)
-        qs[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.catalog.clearCache()
-        runs = []
-        for _ in range(args.n):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-        med = round(statistics.median(runs), 3)
-        out[name] = {"median": med, "runs": runs}
-        print(f"{name:40s} median={med:7.3f}  runs={runs}", flush=True)
-    spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"sf_dir": sf_dir, "results": out}))
+    if args.explain_only:
+        return
+    cold = defaultdict(dict)
+    sweep = warm_sweep(spark, qs, args.queries, sf_dir, cold_out=cold)
+    for name in args.queries:
+        print(f"{name:40s} median={sweep['timings'][name]:7.3f}  "
+              f"cold={cold['cold_queries'][name]:7.3f}  "
+              f"runs={sweep['warm_runs'][name]}", flush=True)
+    print(json.dumps({"sf_dir": sf_dir, "cold": cold, **sweep}))
 
 
 if __name__ == "__main__":

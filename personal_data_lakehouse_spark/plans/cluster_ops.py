@@ -84,7 +84,7 @@ def _lsh_ctes() -> str:
 @query(
     "t_dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE {{ctes}},
+    WITH RECURSIVE {_lsh_ctes()},
     edges AS (
         SELECT id_a, id_b FROM lsh_pairs
         WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
@@ -104,7 +104,7 @@ def _lsh_ctes() -> str:
            doc_id = cluster_id AS is_canonical,
            COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
     FROM cc
-    """.replace("{ctes}", "__CTES__"),
+    """,
 )
 def t_dedup_clusters(spark, sf_dir):
     """Near-dup pairs (MinHash-LSH, verified Jaccard >= 0.5) closed into
@@ -118,16 +118,6 @@ def t_dedup_clusters(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     pairs = lsh_candidate_pairs(docs).filter(F.col("jaccard") >= 0.5)
     return dedup_clusters(docs, pairs)
-
-
-# Inject the CTE block at import time (decorator arg must be a literal-ish
-# expression; the fragments come from text_ops to stay byte-identical with
-# the t_minhash_lsh_pairs oracle).
-from personal_data_lakehouse_spark.plans.registry import REGISTRY  # noqa: E402
-
-REGISTRY["t_dedup_clusters"].oracle = REGISTRY["t_dedup_clusters"].oracle.replace(
-    "__CTES__", _lsh_ctes()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -248,8 +238,8 @@ def t_repetition_ratio(spark, sf_dir):
 
 @query(
     "t_dedup_keep_best",
-    oracle="""
-    WITH RECURSIVE __CTES__,
+    oracle=f"""
+    WITH RECURSIVE {_lsh_ctes()},
     edges AS (
         SELECT id_a, id_b FROM lsh_pairs
         WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
@@ -301,8 +291,3 @@ def t_dedup_keep_best(spark, sf_dir):
             F.col("cluster_size").cast("long").alias("cluster_size"),
         )
     )
-
-
-REGISTRY["t_dedup_keep_best"].oracle = REGISTRY["t_dedup_keep_best"].oracle.replace(
-    "__CTES__", _lsh_ctes()
-)

@@ -9,6 +9,13 @@ aggregations are expressed through exact decimal arithmetic (associative →
 bit-identical across engines) with any final float derived by a single
 deterministic scalar operation.
 
+Oracle rule: a query's oracle is set in exactly one place, the ``oracle=``
+argument of its ``@query``, evaluated at decoration. A shared or composed
+oracle is built there too, by calling the same SQL-building function or by
+reading an earlier-registered ``REGISTRY[...].oracle``; ``Query`` is frozen,
+so any later assignment raises at import. ``oracle=None`` therefore means
+only "rows-only".
+
 Cache contract: several queries ``persist()`` a small intermediate that the
 RETURNED lazy plan consumes (histogram, gram index, edge list …), so they
 cannot unpersist before the caller materializes the result. A long-lived
@@ -39,8 +46,11 @@ TABLES = (
 )
 
 
-@dataclass
+@dataclass(frozen=True)
 class Query:
+    """One registered query. Frozen: the oracle given to ``@query`` is
+    final (None = the weaker rows-only check, never "set later")."""
+
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None → driver records a weaker rows-only check

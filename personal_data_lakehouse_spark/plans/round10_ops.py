@@ -14,9 +14,9 @@ derived closure merging lexical ∪ semantic edges.
 
 Proof technique is r9's verbatim: ONE composed full-recompute oracle
 (the r8 e2e oracle extended with the semantic edge CTEs via
-``round8_ops.corpus_pipeline_oracle`` — inject-time composition, zero
-drift) shared by BOTH the full-recompute query and the incremental
-query, plus idempotent-replay / cross-family-bridge / increment-equals-
+``round8_ops.corpus_pipeline_oracle``, composed at decoration — zero
+drift) shared by the full-recompute query, the incremental query and
+the stream query, plus idempotent-replay / cross-family-bridge / increment-equals-
 rebuild pytests (tests/test_corpus_incremental.py).
 
 Reference parity: the incremental-semantic generalization of
@@ -42,7 +42,52 @@ from personal_data_lakehouse_spark.plans.registry import (
 # Full-recompute sibling: the v2 pipeline as ONE hashed rollup
 
 
-@query("t_corpus_pipeline_sem_e2e", oracle=None)  # composed + injected below
+def _sem_pipeline_oracle() -> str:
+    """ONE composed oracle for the three v2 parity queries (the other two
+    read it back from REGISTRY): the r8 full-recompute pipeline oracle
+    with (a) the semantic cell/edge CTEs spliced in — built from the same
+    ``_cos``/centroid fragments as the ``s_*`` oracles — and (b) the
+    closure re-pointed at lexical ∪ semantic (UNION dedupes, matching the
+    Spark side's dropDuplicates)."""
+    from personal_data_lakehouse_spark.corpus_incremental import (
+        SEM_THRESHOLD,
+    )
+    from personal_data_lakehouse_spark.plans.round8_ops import (
+        corpus_pipeline_oracle,
+    )
+    from personal_data_lakehouse_spark.plans.similarity_ops import (
+        _CENT_LIST,
+        _cos,
+    )
+
+    extra = f"""
+    sem_cells AS (
+        SELECT vec_id, e, cid AS cell FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                ORDER BY csim DESC, cid) AS crnk
+            FROM (SELECT s.vec_id, s.e, c.cid, {_cos('s.e', 'c.ce')} AS csim
+                  FROM (SELECT e.vec_id, e.embedding AS e FROM embeddings e
+                        JOIN exact_kept k ON e.vec_id = k.doc_id) s,
+                       (SELECT vec_id AS cid, embedding AS ce
+                        FROM embeddings
+                        WHERE vec_id IN ({_CENT_LIST})) c))
+        WHERE crnk = 1
+    ),
+    sem_edges AS (
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        FROM sem_cells a JOIN sem_cells b
+          ON a.cell = b.cell AND a.vec_id < b.vec_id
+        WHERE ROUND({_cos('a.e', 'b.e')}, 6) >= {SEM_THRESHOLD}
+    ),
+    all_edges AS (
+        SELECT id_a, id_b FROM edges
+        UNION
+        SELECT id_a, id_b FROM sem_edges
+    ),"""
+    return corpus_pipeline_oracle(extra_ctes=extra, edges_src="all_edges")
+
+
+@query("t_corpus_pipeline_sem_e2e", oracle=_sem_pipeline_oracle())
 def t_corpus_pipeline_sem_e2e(spark, sf_dir):
     """END-TO-END corpus pipeline WITH THE SEMANTIC DEDUP STAGE, hashed as
     one rollup — the full-recompute sibling ``t_corpus_pipeline_
@@ -92,7 +137,11 @@ def t_corpus_pipeline_sem_e2e(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # The incremental v2 run against a materialized seven-table state
 
-@query("t_corpus_pipeline_incremental_v2", oracle=None)  # shared, below
+# the v2 full-recompute oracle, shared verbatim
+@query(
+    "t_corpus_pipeline_incremental_v2",
+    oracle=REGISTRY["t_corpus_pipeline_sem_e2e"].oracle,
+)
 def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     """INCREMENTAL corpus-pipeline run WITH THE SEMANTIC STAGE, hashed
     equal to the v2 FULL RECOMPUTE (``t_corpus_pipeline_sem_e2e``'s
@@ -155,60 +204,18 @@ def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     return state_rollup(inc.state).rollup
 
 
-def _inject_sem_pipeline_oracle() -> None:
-    """ONE composed oracle for both v2 queries: the r8 full-recompute
-    pipeline oracle with (a) the semantic cell/edge CTEs spliced in —
-    built from the same ``_cos``/centroid fragments as the ``s_*``
-    oracles — and (b) the closure re-pointed at lexical ∪ semantic
-    (UNION dedupes, matching the Spark side's dropDuplicates)."""
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        SEM_THRESHOLD,
-    )
-    from personal_data_lakehouse_spark.plans.round8_ops import (
-        corpus_pipeline_oracle,
-    )
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CENT_LIST,
-        _cos,
-    )
-
-    extra = f"""
-    sem_cells AS (
-        SELECT vec_id, e, cid AS cell FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                ORDER BY csim DESC, cid) AS crnk
-            FROM (SELECT s.vec_id, s.e, c.cid, {_cos('s.e', 'c.ce')} AS csim
-                  FROM (SELECT e.vec_id, e.embedding AS e FROM embeddings e
-                        JOIN exact_kept k ON e.vec_id = k.doc_id) s,
-                       (SELECT vec_id AS cid, embedding AS ce
-                        FROM embeddings
-                        WHERE vec_id IN ({_CENT_LIST})) c))
-        WHERE crnk = 1
-    ),
-    sem_edges AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM sem_cells a JOIN sem_cells b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ROUND({_cos('a.e', 'b.e')}, 6) >= {SEM_THRESHOLD}
-    ),
-    all_edges AS (
-        SELECT id_a, id_b FROM edges
-        UNION
-        SELECT id_a, id_b FROM sem_edges
-    ),"""
-    oracle = corpus_pipeline_oracle(extra_ctes=extra, edges_src="all_edges")
-    REGISTRY["t_corpus_pipeline_sem_e2e"].oracle = oracle
-    REGISTRY["t_corpus_pipeline_incremental_v2"].oracle = oracle
-
-
-_inject_sem_pipeline_oracle()
-
-
 # ---------------------------------------------------------------------------
 # The v2 capstone as a LIVE DELTA STREAM — completing the v1 ↔ v2 symmetry
 
 
-@query("t_stream_corpus_increments_v2", oracle=None)  # sem e2e oracle, below
+# base + the streamed deltas = all documents, and chained v2 increments
+# must land on the rebuild end state — the sem-e2e full-recompute oracle,
+# shared verbatim (three v2 parity queries, one claim, zero drift — the v1
+# trio's technique)
+@query(
+    "t_stream_corpus_increments_v2",
+    oracle=REGISTRY["t_corpus_pipeline_sem_e2e"].oracle,
+)
 def t_stream_corpus_increments_v2(spark, sf_dir):
     """The SEMANTIC corpus pipeline run as a LIVE STREAM OF DELTAS — the
     semantic sibling of ``t_stream_corpus_increments``, replaying the
@@ -281,19 +288,6 @@ def t_stream_corpus_increments_v2(spark, sf_dir):
         step,
     )
     return state_rollup(final).rollup
-
-
-def _inject_stream_sem_oracle() -> None:
-    # base + the streamed deltas = all documents, and chained v2
-    # increments must land on the rebuild end state — the sem-e2e
-    # full-recompute oracle, shared verbatim (three v2 parity queries,
-    # one claim, zero drift — the v1 trio's technique)
-    REGISTRY["t_stream_corpus_increments_v2"].oracle = REGISTRY[
-        "t_corpus_pipeline_sem_e2e"
-    ].oracle
-
-
-_inject_stream_sem_oracle()
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,7 @@ directives #3/#4/#5/#6):
   `t_bpe_merges`, `t_bpe_encode` and `t_tokenizer_fertility` move from
   rows-only to exact DuckDB hashes, leaving `q_hll_mv` and the two
   Spark-sketch queries as the only engine-specific rows-only entries.
+  The replay blocks live in `training_ops`, beside the trainer.
 
 Reference parity: all engine-internal extensions (the reference
 delegates tokenization/search hygiene to its warehouse); SURVEY §2
@@ -47,7 +48,7 @@ from personal_data_lakehouse_spark.plans.similarity_ops import (
     _N_QUERIES,
     _cos,
 )
-from personal_data_lakehouse_spark.plans.text_ops import _NORM, _P, _TOKS
+from personal_data_lakehouse_spark.plans.text_ops import _P, _TOKS
 
 # ---------------------------------------------------------------------------
 # Deterministic k-means codebook + recall-vs-lowest-id (VERDICT r11 #3)
@@ -153,7 +154,7 @@ def _kmeans_recall_oracle() -> str:
     """
 
 
-@query("s_ivf_kmeans_codebook", oracle=None)  # composed at import, below
+@query("s_ivf_kmeans_codebook", oracle=_kmeans_recall_oracle())
 def s_ivf_kmeans_codebook(spark, sf_dir):
     """Recall@5 of IVF under a REAL (deterministic Lloyd) k-means
     codebook next to the lowest-id stand-in every other IVF operator
@@ -229,9 +230,6 @@ def s_ivf_kmeans_codebook(spark, sf_dir):
     )
 
 
-REGISTRY["s_ivf_kmeans_codebook"].oracle = _kmeans_recall_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Chunk-granular ANN recall (VERDICT r11 #5)
 
@@ -273,7 +271,7 @@ def _chunk_recall_oracle() -> str:
     """
 
 
-@query("s_chunk_ann_recall", oracle=None)  # composed at import, below
+@query("s_chunk_ann_recall", oracle=_chunk_recall_oracle())
 def s_chunk_ann_recall(spark, sf_dir):
     """Recall@3 of the chunk-level IVF retrieval (`s_chunk_ann_topk`'s
     exact plan) against brute-force cosine over the SAME chunk vectors —
@@ -324,9 +322,6 @@ def s_chunk_ann_recall(spark, sf_dir):
             F.expr("CAST(1000 * n_hit div 3 AS BIGINT)"),
         )
     )
-
-
-REGISTRY["s_chunk_ann_recall"].oracle = _chunk_recall_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -404,7 +399,9 @@ def _decon_report(test_all, spine_all):
     )
 
 
-@query("t_decontaminate_incremental", oracle=None)  # shared, injected below
+# increments must land exactly on the full-recompute report — one shared
+# oracle, zero drift (the corpus-incremental trio's technique)
+@query("t_decontaminate_incremental", oracle=REGISTRY["t_eval_decontaminate"].oracle)
 def t_decontaminate_incremental(spark, sf_dir):
     """INCREMENTAL eval-set decontamination, hash-equal to the
     `t_eval_decontaminate` full recompute (the two share one oracle
@@ -461,14 +458,9 @@ def t_decontaminate_incremental(spark, sf_dir):
     return _decon_report(test_all, spine_all)
 
 
-# increments must land exactly on the full-recompute report — one shared
-# oracle, zero drift (the corpus-incremental trio's technique)
-REGISTRY["t_decontaminate_incremental"].oracle = REGISTRY[
-    "t_eval_decontaminate"
-].oracle
-
-
-@query("t_stream_decontaminate", oracle=None)  # shared, injected below
+# three chained spine merges land exactly on the full-recompute report —
+# the same shared oracle, zero drift
+@query("t_stream_decontaminate", oracle=REGISTRY["t_eval_decontaminate"].oracle)
 def t_stream_decontaminate(spark, sf_dir):
     """The decontamination spine maintained from a LIVE STREAM OF
     DELTAS — completing the recompute ≡ increment ≡ stream symmetry the
@@ -536,108 +528,6 @@ def t_stream_decontaminate(spark, sf_dir):
         step,
     )
     return _decon_report(final["test"], final["spine"])
-
-
-# three chained spine merges land exactly on the full-recompute report —
-# the same shared oracle, zero drift
-REGISTRY["t_stream_decontaminate"].oracle = REGISTRY[
-    "t_eval_decontaminate"
-].oracle
-
-
-# ---------------------------------------------------------------------------
-# BPE oracle retirement (VERDICT r11 #6): the train/encode replay in SQL
-
-_N_BPE_MERGES = 8
-
-# Symbol-string representation: each symbol wrapped \x02sym\x03. A merge
-# (l, r) -> lr is replace('\x02l\x03\x02r\x03' -> '\x02lr\x03'):
-# left-to-right, non-overlapping, never matching inside a symbol or
-# across a replacement boundary — exactly the greedy fold semantics of
-# functions.bpe._merge_pair (DuckDB's replace scans left to right and
-# resumes AFTER the replacement, like the fold's accumulator). Verified
-# bit-equal to the Spark trainer at sf0.001/0.01/0.1.
-_BPE_WRAP = (
-    "chr(2) || array_to_string(string_split(w, ''), chr(3) || chr(2)) "
-    "|| chr(3)"
-)
-
-
-def _bpe_train_blocks() -> str:
-    """WITH-blocks: wd (doc_id, word), vocab, v0..vN (wrapped vocab after
-    k merges), m1..mN (the k-th merge as (l, r, pc) — argmax weighted
-    pair count, ties count DESC then (l, r) ASC, min_count 2)."""
-    blocks = [
-        f"""
-    wdoc AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS w
-             FROM documents),
-    wd AS (SELECT doc_id, w FROM wdoc WHERE length(w) > 0),
-    vocab AS (SELECT w, COUNT(*) AS cnt FROM wd GROUP BY w),
-    v0 AS (SELECT w, cnt, {_BPE_WRAP} AS s FROM vocab)"""
-    ]
-    for k in range(1, _N_BPE_MERGES + 1):
-        p = k - 1
-        blocks.append(
-            f"""
-    p{k} AS (SELECT sy[i] AS l, sy[i+1] AS r, SUM(cnt) AS pc
-             FROM (SELECT cnt, string_split(s[2:-2], chr(3) || chr(2))
-                          AS sy FROM v{p}),
-                  unnest(range(1, len(sy))) AS u(i)
-             GROUP BY 1, 2 HAVING SUM(cnt) >= 2),
-    m{k} AS (SELECT l, r, pc FROM p{k} ORDER BY pc DESC, l, r LIMIT 1),
-    v{k} AS (SELECT w, cnt,
-                    replace(s, chr(2) || m.l || chr(3) || chr(2) || m.r
-                               || chr(3),
-                            chr(2) || m.l || m.r || chr(3)) AS s
-             FROM v{p} CROSS JOIN m{k} m)"""
-        )
-    return ",".join(blocks)
-
-
-_BPE_ENC_BLOCKS = f"""
-    enc AS (SELECT w, length(s) - length(replace(s, chr(2), ''))
-                       AS n_sym
-            FROM v{_N_BPE_MERGES}),
-    perdoc AS (SELECT wd.doc_id, COUNT(*) AS n_words,
-                      SUM(e.n_sym) AS n_bpe_tokens
-               FROM wd JOIN enc e USING (w) GROUP BY wd.doc_id)"""
-
-
-def _inject_bpe_oracles() -> None:
-    """Retire the three BPE rows-only entries (VERDICT r11 directive #6
-    asked for fertility; the same train-replay CTEs give the trainer and
-    the encoder their oracles for free). The sequential-reference pytest
-    pins (tests/test_bpe.py) remain the independent algebra check the
-    differential gate can't provide."""
-    train = _bpe_train_blocks()
-    merge_sel = " UNION ALL ".join(
-        f'SELECT {k} AS rank, l AS "left", r AS "right", '
-        f"CAST(pc AS BIGINT) AS pair_count FROM m{k}"
-        for k in range(1, _N_BPE_MERGES + 1)
-    )
-    REGISTRY["t_bpe_merges"].oracle = f"""
-    WITH {train}
-    SELECT * FROM ({merge_sel})
-    """
-    REGISTRY["t_bpe_encode"].oracle = f"""
-    WITH {train},{_BPE_ENC_BLOCKS}
-    SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-           CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens
-    FROM perdoc
-    """
-    REGISTRY["t_tokenizer_fertility"].oracle = f"""
-    WITH {train},{_BPE_ENC_BLOCKS}
-    SELECT d.lang, COUNT(*) AS n_docs,
-           CAST(SUM(p.n_words) AS BIGINT) AS total_words,
-           CAST(SUM(p.n_bpe_tokens) AS BIGINT) AS total_bpe_tokens,
-           CAST(1000 * SUM(p.n_bpe_tokens) // SUM(p.n_words) AS BIGINT)
-               AS fertility_millis
-    FROM perdoc p JOIN documents d USING (doc_id)
-    GROUP BY d.lang
-    """
-
-
-_inject_bpe_oracles()
 
 
 # ---------------------------------------------------------------------------

@@ -24,6 +24,7 @@ from personal_data_lakehouse_spark.dedup.minhash import lsh_candidate_pairs
 from personal_data_lakehouse_spark.functions import normalize_text
 from personal_data_lakehouse_spark.functions.text import tokens
 from personal_data_lakehouse_spark.operators.asof import asof_join
+from personal_data_lakehouse_spark.plans.cluster_ops import _lsh_ctes, _sig_bands_ctes
 from personal_data_lakehouse_spark.plans.registry import query, t
 from personal_data_lakehouse_spark.plans.text_ops import _NORM, _TOKS
 
@@ -258,7 +259,24 @@ def q_skew_diagnosis(spark, sf_dir):
 # Edit-distance verification of LSH candidate pairs
 
 
-@query("t_neardup_verified", oracle="__NEARDUP_CTES__")
+@query(
+    "t_neardup_verified",
+    oracle=f"""
+    WITH {_lsh_ctes()},
+    norm AS (
+        SELECT doc_id, substr({_NORM}, 1, 200) AS ntext FROM documents
+    )
+    SELECT p.id_a, p.id_b,
+           ROUND(CAST(len(list_intersect(p.sh_a, p.sh_b)) AS DOUBLE)
+                 / len(list_distinct(list_concat(p.sh_a, p.sh_b))), 6) AS jaccard,
+           levenshtein(na.ntext, nb.ntext) AS edit_distance,
+           5 * levenshtein(na.ntext, nb.ntext)
+               <= greatest(len(na.ntext), len(nb.ntext)) AS verified
+    FROM lsh_pairs p
+    JOIN norm na ON p.id_a = na.doc_id
+    JOIN norm nb ON p.id_b = nb.doc_id
+    """,
+)
 def t_neardup_verified(spark, sf_dir):
     """LSH candidate pairs passed through an edit-distance verify stage:
     Levenshtein on the first 200 normalized chars, accepted when the
@@ -296,26 +314,6 @@ def t_neardup_verified(spark, sf_dir):
             "verified"
         ),
     )
-
-
-def _neardup_oracle() -> str:
-    from personal_data_lakehouse_spark.plans.cluster_ops import _lsh_ctes
-
-    return f"""
-    WITH {_lsh_ctes()},
-    norm AS (
-        SELECT doc_id, substr({_NORM}, 1, 200) AS ntext FROM documents
-    )
-    SELECT p.id_a, p.id_b,
-           ROUND(CAST(len(list_intersect(p.sh_a, p.sh_b)) AS DOUBLE)
-                 / len(list_distinct(list_concat(p.sh_a, p.sh_b))), 6) AS jaccard,
-           levenshtein(na.ntext, nb.ntext) AS edit_distance,
-           5 * levenshtein(na.ntext, nb.ntext)
-               <= greatest(len(na.ntext), len(nb.ntext)) AS verified
-    FROM lsh_pairs p
-    JOIN norm na ON p.id_a = na.doc_id
-    JOIN norm nb ON p.id_b = nb.doc_id
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -378,7 +376,34 @@ def t_curriculum_order(spark, sf_dir):
 # Incremental MinHash-LSH dedup: new batch probed against the corpus index
 
 
-@query("t_neardup_incremental", oracle="__NEARDUP_INCR__")
+# sig/bands come from the ONE shared template (cluster_ops) — only the
+# pair-join predicate (batch probes corpus) is specific to this query
+@query(
+    "t_neardup_incremental",
+    oracle=f"""
+    WITH {_sig_bands_ctes()}, p AS (
+        SELECT DISTINCT a.doc_id AS batch_id, c.doc_id AS corpus_id,
+               a.shingles AS sh_a, c.shingles AS sh_b
+        FROM bands a JOIN bands c
+          ON a.b = c.b AND a.bucket = c.bucket
+         AND a.doc_id % 10 = 0 AND c.doc_id % 10 <> 0
+    ), m AS (
+        SELECT batch_id, COUNT(*) AS n_neardups,
+               MAX(ROUND(CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
+                   / len(list_distinct(list_concat(sh_a, sh_b))), 6))
+                   AS best_jaccard
+        FROM p
+        WHERE ROUND(CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
+                    / len(list_distinct(list_concat(sh_a, sh_b))), 6) >= 0.5
+        GROUP BY 1
+    )
+    SELECT d.doc_id, COALESCE(m.n_neardups, 0) AS n_neardups,
+           m.best_jaccard AS best_jaccard,
+           m.batch_id IS NULL AS is_new
+    FROM documents d LEFT JOIN m ON d.doc_id = m.batch_id
+    WHERE d.doc_id % 10 = 0
+    """,
+)
 def t_neardup_incremental(spark, sf_dir):
     """Incremental fuzzy dedup: documents arriving in a new batch
     (doc_id % 10 == 0) are probed against the EXISTING corpus's LSH band
@@ -410,36 +435,6 @@ def t_neardup_incremental(spark, sf_dir):
         "best_jaccard",
         F.col("n_neardups").isNull().alias("is_new"),
     )
-
-
-def _neardup_incr_oracle() -> str:
-    # sig/bands come from the ONE shared template (cluster_ops) — only the
-    # pair-join predicate (batch probes corpus) is specific to this query
-    from personal_data_lakehouse_spark.plans.cluster_ops import _sig_bands_ctes
-
-    return f"""
-    WITH {_sig_bands_ctes()}, p AS (
-        SELECT DISTINCT a.doc_id AS batch_id, c.doc_id AS corpus_id,
-               a.shingles AS sh_a, c.shingles AS sh_b
-        FROM bands a JOIN bands c
-          ON a.b = c.b AND a.bucket = c.bucket
-         AND a.doc_id % 10 = 0 AND c.doc_id % 10 <> 0
-    ), m AS (
-        SELECT batch_id, COUNT(*) AS n_neardups,
-               MAX(ROUND(CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-                   / len(list_distinct(list_concat(sh_a, sh_b))), 6))
-                   AS best_jaccard
-        FROM p
-        WHERE ROUND(CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-                    / len(list_distinct(list_concat(sh_a, sh_b))), 6) >= 0.5
-        GROUP BY 1
-    )
-    SELECT d.doc_id, COALESCE(m.n_neardups, 0) AS n_neardups,
-           m.best_jaccard AS best_jaccard,
-           m.batch_id IS NULL AS is_new
-    FROM documents d LEFT JOIN m ON d.doc_id = m.batch_id
-    WHERE d.doc_id % 10 = 0
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -1162,11 +1157,3 @@ def m_pagerank_top20(spark, sf_dir):
                  + F.when(F.col("node_type") == "supplier", 1).otherwise(0))
         .limit(20)
     )
-
-
-# Inject the shared-CTE oracle at import time (decorator arg must not call
-# across modules with circular-import hazards at class-body time).
-from personal_data_lakehouse_spark.plans.registry import REGISTRY  # noqa: E402
-
-REGISTRY["t_neardup_verified"].oracle = _neardup_oracle()
-REGISTRY["t_neardup_incremental"].oracle = _neardup_incr_oracle()

@@ -24,7 +24,18 @@ from personal_data_lakehouse_spark.functions.text import (
     word_shingles,
 )
 from personal_data_lakehouse_spark.operators.partitioning import spread
+from personal_data_lakehouse_spark.plans.cluster_ops import _lsh_ctes
 from personal_data_lakehouse_spark.plans.registry import REGISTRY, query, t
+from personal_data_lakehouse_spark.plans.similarity_ops import (
+    _CELLS_SQL,
+    _CENT_LIST,
+    _cos,
+)
+from personal_data_lakehouse_spark.plans.text_ops import _SHINGLES, _SIMHASH_CTE, _TOKS
+from personal_data_lakehouse_spark.plans.training_ops import (
+    _BPE_ENC_BLOCKS,
+    _bpe_train_blocks,
+)
 
 # ---------------------------------------------------------------------------
 # Grouped rolling quantile (per-key rolling median over a row frame)
@@ -86,13 +97,13 @@ def q_rolling_quantile(spark, sf_dir):
 # MinHash containment (asymmetric near-dup: snippet-inside-superset)
 
 # The LSH band/bucket CTE chain is shared byte-identically with
-# t_minhash_lsh_pairs / t_dedup_clusters via cluster_ops — injected below.
+# t_minhash_lsh_pairs / t_dedup_clusters via cluster_ops.
 
 
 @query(
     "t_minhash_containment",
-    oracle="""
-    WITH __CTES__
+    oracle=f"""
+    WITH {_lsh_ctes()}
     SELECT id_a, id_b,
            CAST(len(list_intersect(sh_a, sh_b)) AS BIGINT) AS n_common,
            CAST(len(list_distinct(sh_a)) AS BIGINT) AS n_a,
@@ -156,18 +167,6 @@ def t_minhash_containment(spark, sf_dir):
         F.round(n_common.cast("double") / n_a, 6).alias("containment_a"),
         F.round(n_common.cast("double") / n_b, 6).alias("containment_b"),
     )
-
-
-def _inject_lsh_ctes() -> None:
-    from personal_data_lakehouse_spark.plans.cluster_ops import _lsh_ctes
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-
-    REGISTRY["t_minhash_containment"].oracle = REGISTRY[
-        "t_minhash_containment"
-    ].oracle.replace("__CTES__", _lsh_ctes())
-
-
-_inject_lsh_ctes()
 
 
 # ---------------------------------------------------------------------------
@@ -248,7 +247,26 @@ def t_quality_logit(spark, sf_dir):
 # kNN graph construction (cell-blocked): every vector's top-3 neighbors
 
 
-@query("s_knn_graph", oracle=None)  # oracle injected below (shares _CELLS_SQL)
+@query(
+    "s_knn_graph",
+    oracle=f"""
+    WITH {_CELLS_SQL},
+    s AS (
+        SELECT a.vec_id AS src_id, b.vec_id AS nbr_id,
+               {_cos('a.e', 'b.e')} AS sim
+        FROM cells a JOIN cells b
+          ON a.cell = b.cell AND a.vec_id <> b.vec_id
+    ),
+    r AS (
+        SELECT src_id, nbr_id, sim,
+               ROW_NUMBER() OVER (PARTITION BY src_id
+                                  ORDER BY sim DESC, nbr_id) AS rnk
+        FROM s
+    )
+    SELECT src_id AS vec_id, rnk, nbr_id, ROUND(sim, 6) AS cosine
+    FROM r WHERE rnk <= 3
+    """,
+)
 def s_knn_graph(spark, sf_dir):
     """k-nearest-neighbor GRAPH over the embedding corpus: each vector's
     top-3 neighbors by exact cosine, candidate generation blocked by IVF
@@ -311,35 +329,6 @@ def s_knn_graph(spark, sf_dir):
             F.round("sim", 6).alias("cosine"),
         )
     )
-
-
-def _inject_knn_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CELLS_SQL,
-        _cos,
-    )
-
-    REGISTRY["s_knn_graph"].oracle = f"""
-    WITH {_CELLS_SQL},
-    s AS (
-        SELECT a.vec_id AS src_id, b.vec_id AS nbr_id,
-               {_cos('a.e', 'b.e')} AS sim
-        FROM cells a JOIN cells b
-          ON a.cell = b.cell AND a.vec_id <> b.vec_id
-    ),
-    r AS (
-        SELECT src_id, nbr_id, sim,
-               ROW_NUMBER() OVER (PARTITION BY src_id
-                                  ORDER BY sim DESC, nbr_id) AS rnk
-        FROM s
-    )
-    SELECT src_id AS vec_id, rnk, nbr_id, ROUND(sim, 6) AS cosine
-    FROM r WHERE rnk <= 3
-    """
-
-
-_inject_knn_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -745,7 +734,54 @@ def cap_out_degree(edges, cap: int = _TRI_OUT_DEGREE_CAP):
     )
 
 
-@query("m_triangle_count", oracle=None)  # oracle injected below (shares CTE)
+@query(
+    "m_triangle_count",
+    oracle=f"""
+    WITH {_SIMHASH_CTE},
+    banded AS (
+        SELECT doc_id, b AS band, (simhash >> (b * 15)) & 32767 AS bandval
+        FROM sk, unnest([0, 1, 2, 3]) AS u(b)
+    ),
+    cand AS (
+        SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
+        FROM banded a JOIN banded c
+          ON a.band = c.band AND a.bandval = c.bandval
+         AND a.doc_id < c.doc_id
+    ),
+    raw_edges AS (
+        SELECT id_a, id_b FROM cand
+        JOIN sk sa ON sa.doc_id = id_a
+        JOIN sk sb ON sb.doc_id = id_b
+        WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 4
+    ),
+    edges AS (
+        SELECT id_a, id_b FROM (
+            SELECT id_a, id_b,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY id_a
+                       ORDER BY md5(CAST(id_a AS VARCHAR) || ':'
+                                    || CAST(id_b AS VARCHAR)), id_b
+                   ) AS rn
+            FROM raw_edges
+        ) WHERE rn <= {_TRI_OUT_DEGREE_CAP}
+    ),
+    tri AS (
+        SELECT ab.id_a AS a, ab.id_b AS b, bc.id_b AS c
+        FROM edges ab
+        JOIN edges bc ON ab.id_b = bc.id_a
+        JOIN edges ac ON ac.id_a = ab.id_a AND ac.id_b = bc.id_b
+    ),
+    corners AS (
+        SELECT a AS doc_id FROM tri
+        UNION ALL SELECT b FROM tri
+        UNION ALL SELECT c FROM tri
+    )
+    SELECT doc_id, COUNT(*) AS n_triangles
+    FROM corners GROUP BY 1
+    ORDER BY n_triangles DESC, doc_id
+    LIMIT 20
+    """,
+)
 def m_triangle_count(spark, sf_dir):
     """Per-document TRIANGLE counts over the SimHash near-dup graph (top-20
     nodes): triangles are the densest duplication signal — a doc whose
@@ -805,65 +841,23 @@ def m_triangle_count(spark, sf_dir):
     )
 
 
-def _inject_triangle_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-    from personal_data_lakehouse_spark.plans.text_ops import _SIMHASH_CTE
-
-    REGISTRY["m_triangle_count"].oracle = f"""
-    WITH {_SIMHASH_CTE},
-    banded AS (
-        SELECT doc_id, b AS band, (simhash >> (b * 15)) & 32767 AS bandval
-        FROM sk, unnest([0, 1, 2, 3]) AS u(b)
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-        FROM banded a JOIN banded c
-          ON a.band = c.band AND a.bandval = c.bandval
-         AND a.doc_id < c.doc_id
-    ),
-    raw_edges AS (
-        SELECT id_a, id_b FROM cand
-        JOIN sk sa ON sa.doc_id = id_a
-        JOIN sk sb ON sb.doc_id = id_b
-        WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 4
-    ),
-    edges AS (
-        SELECT id_a, id_b FROM (
-            SELECT id_a, id_b,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY id_a
-                       ORDER BY md5(CAST(id_a AS VARCHAR) || ':'
-                                    || CAST(id_b AS VARCHAR)), id_b
-                   ) AS rn
-            FROM raw_edges
-        ) WHERE rn <= {_TRI_OUT_DEGREE_CAP}
-    ),
-    tri AS (
-        SELECT ab.id_a AS a, ab.id_b AS b, bc.id_b AS c
-        FROM edges ab
-        JOIN edges bc ON ab.id_b = bc.id_a
-        JOIN edges ac ON ac.id_a = ab.id_a AND ac.id_b = bc.id_b
-    ),
-    corners AS (
-        SELECT a AS doc_id FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
-    )
-    SELECT doc_id, COUNT(*) AS n_triangles
-    FROM corners GROUP BY 1
-    ORDER BY n_triangles DESC, doc_id
-    LIMIT 20
-    """
-
-
-_inject_triangle_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Tokenizer fertility (BPE evaluation) — rows-only by design
 
 
-@query("t_tokenizer_fertility", oracle=None)  # injected by round12_ops
+@query(
+    "t_tokenizer_fertility",
+    oracle=f"""
+    WITH {_bpe_train_blocks()},{_BPE_ENC_BLOCKS}
+    SELECT d.lang, COUNT(*) AS n_docs,
+           CAST(SUM(p.n_words) AS BIGINT) AS total_words,
+           CAST(SUM(p.n_bpe_tokens) AS BIGINT) AS total_bpe_tokens,
+           CAST(1000 * SUM(p.n_bpe_tokens) // SUM(p.n_words) AS BIGINT)
+               AS fertility_millis
+    FROM perdoc p JOIN documents d USING (doc_id)
+    GROUP BY d.lang
+    """,
+)
 def t_tokenizer_fertility(spark, sf_dir):
     """Tokenizer FERTILITY per language bucket: BPE tokens per word under
     the corpus-trained 8-merge tokenizer — the standard tokenizer-quality
@@ -878,7 +872,7 @@ def t_tokenizer_fertility(spark, sf_dir):
     form covers" — r12 (VERDICT r11 directive #6) retired that: the fold
     IS DuckDB's left-to-right ``replace`` over a delimiter-wrapped
     symbol string, and the data-dependent training rounds unroll into
-    argmax CTE stages (plans/round12_ops._inject_bpe_oracles), so the
+    argmax CTE stages (plans/training_ops' BPE replay blocks), so the
     gate now hashes this rollup exactly at every SF from one SQL string.
 
     Scale: encode runs per DISTINCT word (vocabulary-sized, not
@@ -1169,8 +1163,29 @@ def s_silhouette_labels(spark, sf_dir):
 # ANN recall evaluation (approximate vs exact ground truth, same metric)
 
 
-@query("s_ann_recall_eval", oracle=None)  # oracle composed below from the
-# registered exact/IVF/SRP oracles (nested-WITH subqueries)
+@query(
+    "s_ann_recall_eval",
+    oracle=f"""
+    WITH exact AS ({REGISTRY['s_cosine_topk'].oracle}),
+         ivf AS ({REGISTRY['s_ivf_ann_topk'].oracle}),
+         srp AS ({REGISTRY['s_srp_ann_topk'].oracle}),
+         hits AS (
+             SELECT 'ivf' AS method, e.qid,
+                    COUNT(a.vec_id) AS n_hit
+             FROM exact e LEFT JOIN ivf a
+               ON a.qid = e.qid AND a.vec_id = e.vec_id
+             GROUP BY e.qid
+             UNION ALL
+             SELECT 'srp', e.qid, COUNT(a.vec_id)
+             FROM exact e LEFT JOIN srp a
+               ON a.qid = e.qid AND a.vec_id = e.vec_id
+             GROUP BY e.qid
+         )
+    SELECT method, qid, CAST(n_hit AS BIGINT) AS n_hit,
+           CAST(n_hit * 200 AS BIGINT) AS recall_millis
+    FROM hits
+    """,
+)
 def s_ann_recall_eval(spark, sf_dir):
     """Recall@5 of the two ANN indexes against the exact brute-force
     cosine ground truth, per query vector — the evaluation harness every
@@ -1218,42 +1233,32 @@ def s_ann_recall_eval(spark, sf_dir):
     )
 
 
-def _inject_recall_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-
-    exact = REGISTRY["s_cosine_topk"].oracle
-    ivf = REGISTRY["s_ivf_ann_topk"].oracle
-    srp = REGISTRY["s_srp_ann_topk"].oracle
-    REGISTRY["s_ann_recall_eval"].oracle = f"""
-    WITH exact AS ({exact}),
-         ivf AS ({ivf}),
-         srp AS ({srp}),
-         hits AS (
-             SELECT 'ivf' AS method, e.qid,
-                    COUNT(a.vec_id) AS n_hit
-             FROM exact e LEFT JOIN ivf a
-               ON a.qid = e.qid AND a.vec_id = e.vec_id
-             GROUP BY e.qid
-             UNION ALL
-             SELECT 'srp', e.qid, COUNT(a.vec_id)
-             FROM exact e LEFT JOIN srp a
-               ON a.qid = e.qid AND a.vec_id = e.vec_id
-             GROUP BY e.qid
-         )
-    SELECT method, qid, CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(n_hit * 200 AS BIGINT) AS recall_millis
-    FROM hits
-    """
-
-
-_inject_recall_oracle()
-
-
 # ---------------------------------------------------------------------------
 # MinHash estimator-error audit (sketch estimate vs exact Jaccard)
 
 
-@query("t_minhash_estimate_error", oracle=None)  # oracle injected below
+@query(
+    "t_minhash_estimate_error",
+    oracle=f"""
+    WITH {_lsh_ctes()}
+    SELECT p.id_a, p.id_b,
+           CAST(len(list_filter(range(1, 17), i -> a.sig[i] = b.sig[i]))
+                AS BIGINT) AS n_sig_match,
+           len(list_filter(range(1, 17), i -> a.sig[i] = b.sig[i])) / 16.0
+               AS est_jaccard,
+           ROUND(CAST(len(list_intersect(p.sh_a, p.sh_b)) AS DOUBLE)
+                 / len(list_distinct(list_concat(p.sh_a, p.sh_b))), 6)
+               AS jaccard,
+           ROUND(ABS(len(list_filter(range(1, 17), i -> a.sig[i] = b.sig[i]))
+                     / 16.0
+                     - CAST(len(list_intersect(p.sh_a, p.sh_b)) AS DOUBLE)
+                       / len(list_distinct(list_concat(p.sh_a, p.sh_b)))), 6)
+               AS abs_err
+    FROM lsh_pairs p
+    JOIN sig a ON a.doc_id = p.id_a
+    JOIN sig b ON b.doc_id = p.id_b
+    """,
+)
 def t_minhash_estimate_error(spark, sf_dir):
     """Sketch-quality audit: for every LSH candidate pair, the MinHash
     ESTIMATE of Jaccard (fraction of agreeing signature components, k=16)
@@ -1326,39 +1331,39 @@ def t_minhash_estimate_error(spark, sf_dir):
     )
 
 
-def _inject_estimate_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.cluster_ops import _lsh_ctes
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-
-    REGISTRY["t_minhash_estimate_error"].oracle = f"""
-    WITH {_lsh_ctes()}
-    SELECT p.id_a, p.id_b,
-           CAST(len(list_filter(range(1, 17), i -> a.sig[i] = b.sig[i]))
-                AS BIGINT) AS n_sig_match,
-           len(list_filter(range(1, 17), i -> a.sig[i] = b.sig[i])) / 16.0
-               AS est_jaccard,
-           ROUND(CAST(len(list_intersect(p.sh_a, p.sh_b)) AS DOUBLE)
-                 / len(list_distinct(list_concat(p.sh_a, p.sh_b))), 6)
-               AS jaccard,
-           ROUND(ABS(len(list_filter(range(1, 17), i -> a.sig[i] = b.sig[i]))
-                     / 16.0
-                     - CAST(len(list_intersect(p.sh_a, p.sh_b)) AS DOUBLE)
-                       / len(list_distinct(list_concat(p.sh_a, p.sh_b)))), 6)
-               AS abs_err
-    FROM lsh_pairs p
-    JOIN sig a ON a.doc_id = p.id_a
-    JOIN sig b ON b.doc_id = p.id_b
-    """
-
-
-_inject_estimate_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Incremental kNN (new batch probes the persisted corpus cell index)
 
 
-@query("s_knn_incremental", oracle=None)  # oracle injected below
+@query(
+    "s_knn_incremental",
+    oracle=f"""
+    WITH cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
+                   WHERE vec_id IN ({_CENT_LIST})),
+    asg AS (SELECT vec_id, e, cid, {_cos('e', 'ce')} AS csim
+            FROM (SELECT vec_id, embedding AS e FROM embeddings
+                  WHERE vec_id % 10 <> 0) c, cents),
+    cells AS (SELECT vec_id, e, cid AS cell FROM (
+                  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                      ORDER BY csim DESC, cid) AS crnk FROM asg)
+              WHERE crnk = 1),
+    qasg AS (SELECT qid, qe, cid, {_cos('qe', 'ce')} AS csim
+             FROM (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+                   WHERE vec_id % 10 = 0) q, cents),
+    probes AS (SELECT qid, qe, cid AS cell FROM (
+                   SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
+                       ORDER BY csim DESC, cid) AS crnk FROM qasg)
+               WHERE crnk <= 2),
+    s AS (SELECT qid, vec_id, {_cos('qe', 'e')} AS sim
+          FROM cells JOIN probes USING (cell)),
+    r AS (SELECT qid, vec_id, sim,
+                 ROW_NUMBER() OVER (PARTITION BY qid
+                                    ORDER BY sim DESC, vec_id) AS rnk
+          FROM s)
+    SELECT qid, rnk, vec_id, ROUND(sim, 6) AS cosine
+    FROM r WHERE rnk <= 3
+    """,
+)
 def s_knn_incremental(spark, sf_dir):
     """Incremental similarity ingest: vectors arriving in a new batch
     (vec_id % 10 == 0) probe the EXISTING corpus's IVF cell index for
@@ -1386,44 +1391,6 @@ def s_knn_incremental(spark, sf_dir):
     corpus = emb.filter((F.col("vec_id") % 10) != 0)
     cents = pick_centroids(emb, _CENTROID_IDS)
     return ivf_topk(batch, corpus, cents, k=3, nprobe=2)
-
-
-def _inject_knn_incr_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CENT_LIST,
-        _cos,
-    )
-
-    REGISTRY["s_knn_incremental"].oracle = f"""
-    WITH cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-                   WHERE vec_id IN ({_CENT_LIST})),
-    asg AS (SELECT vec_id, e, cid, {_cos('e', 'ce')} AS csim
-            FROM (SELECT vec_id, embedding AS e FROM embeddings
-                  WHERE vec_id % 10 <> 0) c, cents),
-    cells AS (SELECT vec_id, e, cid AS cell FROM (
-                  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                      ORDER BY csim DESC, cid) AS crnk FROM asg)
-              WHERE crnk = 1),
-    qasg AS (SELECT qid, qe, cid, {_cos('qe', 'ce')} AS csim
-             FROM (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                   WHERE vec_id % 10 = 0) q, cents),
-    probes AS (SELECT qid, qe, cid AS cell FROM (
-                   SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-                       ORDER BY csim DESC, cid) AS crnk FROM qasg)
-               WHERE crnk <= 2),
-    s AS (SELECT qid, vec_id, {_cos('qe', 'e')} AS sim
-          FROM cells JOIN probes USING (cell)),
-    r AS (SELECT qid, vec_id, sim,
-                 ROW_NUMBER() OVER (PARTITION BY qid
-                                    ORDER BY sim DESC, vec_id) AS rnk
-          FROM s)
-    SELECT qid, rnk, vec_id, ROUND(sim, 6) AS cosine
-    FROM r WHERE rnk <= 3
-    """
-
-
-_inject_knn_incr_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1805,8 +1772,8 @@ def t_dedup_survivorship(spark, sf_dir):
 
 @query(
     "t_neardup_source_matrix",
-    oracle="""
-    WITH __CTES__,
+    oracle=f"""
+    WITH {_lsh_ctes()},
     verified AS (
         SELECT id_a, id_b FROM lsh_pairs
         WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
@@ -1858,18 +1825,6 @@ def t_neardup_source_matrix(spark, sf_dir):
         .groupBy("source_lo", "source_hi")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
-
-
-def _inject_source_matrix_ctes() -> None:
-    from personal_data_lakehouse_spark.plans.cluster_ops import _lsh_ctes
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-
-    REGISTRY["t_neardup_source_matrix"].oracle = REGISTRY[
-        "t_neardup_source_matrix"
-    ].oracle.replace("__CTES__", _lsh_ctes())
-
-
-_inject_source_matrix_ctes()
 
 
 # ---------------------------------------------------------------------------
@@ -2358,10 +2313,10 @@ WATERFILL_CAP_SQL = """
 
 @query(
     "t_mix_waterfill",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT source,
-               SUM(CAST(len(__TOKS__) AS BIGINT)) AS c_tokens
+               SUM(CAST(len({_TOKS}) AS BIGINT)) AS c_tokens
         FROM documents GROUP BY 1
     ),
     tot AS (
@@ -2369,7 +2324,7 @@ WATERFILL_CAP_SQL = """
                SUM(c_tokens) // 2 AS budget
         FROM c
     ),
-    __WATERFILL_CAP__
+    {WATERFILL_CAP_SQL}
     """,
 )
 def t_mix_waterfill(spark, sf_dir):
@@ -2441,15 +2396,6 @@ def t_mix_waterfill(spark, sf_dir):
             & (F.col("c_tokens") > F.col("t_star"))
         ).alias("capped"),
     )
-
-
-from personal_data_lakehouse_spark.plans.text_ops import _TOKS as _WF_TOKS  # noqa: E402
-
-REGISTRY["t_mix_waterfill"].oracle = (
-    REGISTRY["t_mix_waterfill"]
-    .oracle.replace("__TOKS__", _WF_TOKS)
-    .replace("__WATERFILL_CAP__", WATERFILL_CAP_SQL)
-)
 
 
 # ---------------------------------------------------------------------------
@@ -2535,8 +2481,8 @@ def q_rolling_active_users(spark, sf_dir):
 
 @query(
     "t_dedup_cluster_stats",
-    oracle="""
-    WITH clusters AS (__CLUSTERS__),
+    oracle=f"""
+    WITH clusters AS ({REGISTRY['t_dedup_clusters'].oracle}),
     d AS (SELECT doc_id, source, n_chars FROM documents)
     SELECT d.source,
            COUNT(*) AS n_docs,
@@ -2561,8 +2507,8 @@ def t_dedup_cluster_stats(spark, sf_dir):
     character mass) the near-dup closure marks redundant. Reuses the
     registered cluster closure (t_dedup_clusters) unchanged, joins the
     labels back to (source, n_chars), and aggregates; the oracle EMBEDS
-    the registered t_dedup_clusters oracle verbatim via inject-time
-    composition, so the two queries cannot drift.
+    the registered t_dedup_clusters oracle verbatim, composed at
+    decoration, so the two queries cannot drift.
 
     Scale: inherits t_dedup_clusters' shape (label propagation over the
     sparse edge-incident subgraph; the corpus is touched once by the
@@ -2592,23 +2538,16 @@ def t_dedup_cluster_stats(spark, sf_dir):
     )
 
 
-from personal_data_lakehouse_spark.plans import cluster_ops as _cluster_ops  # noqa: E402,F401
-
-REGISTRY["t_dedup_cluster_stats"].oracle = REGISTRY[
-    "t_dedup_cluster_stats"
-].oracle.replace("__CLUSTERS__", REGISTRY["t_dedup_clusters"].oracle)
-
-
 # ---------------------------------------------------------------------------
 # N-gram novelty: how much genuinely-new content each document adds
 
 
 @query(
     "t_ngram_novelty",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
-        SELECT doc_id, unnest(__SHINGLES__) AS s
-        FROM (SELECT doc_id, __TOKS2__ AS w FROM documents)
+        SELECT doc_id, unnest({_SHINGLES}) AS s
+        FROM (SELECT doc_id, {_TOKS} AS w FROM documents)
     ),
     first_seen AS (
         SELECT s, MIN(doc_id) AS first_doc FROM sh GROUP BY 1
@@ -2667,26 +2606,14 @@ def t_ngram_novelty(spark, sf_dir):
     )
 
 
-from personal_data_lakehouse_spark.plans.text_ops import (  # noqa: E402
-    _SHINGLES as _NV_SHINGLES,
-    _TOKS as _NV_TOKS,
-)
-
-REGISTRY["t_ngram_novelty"].oracle = (
-    REGISTRY["t_ngram_novelty"]
-    .oracle.replace("__SHINGLES__", _NV_SHINGLES)
-    .replace("__TOKS2__", _NV_TOKS)
-)
-
-
 # ---------------------------------------------------------------------------
 # PMI collocation mining (log-free: exact lift ratio)
 
 
 @query(
     "t_pmi_collocations",
-    oracle="""
-    WITH w AS (SELECT doc_id, __TOKS3__ AS w FROM documents),
+    oracle=f"""
+    WITH w AS (SELECT doc_id, {_TOKS} AS w FROM documents),
     uni AS (
         SELECT tok, COUNT(*) AS c_tok
         FROM (SELECT unnest(w) AS tok FROM w)
@@ -2781,11 +2708,6 @@ def t_pmi_collocations(spark, sf_dir):
             F.round(lift, 6).alias("lift"),
         )
     )
-
-
-REGISTRY["t_pmi_collocations"].oracle = REGISTRY[
-    "t_pmi_collocations"
-].oracle.replace("__TOKS3__", _NV_TOKS)
 
 
 # ---------------------------------------------------------------------------

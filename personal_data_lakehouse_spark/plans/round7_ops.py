@@ -19,6 +19,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.plans.registry import query, t
+from personal_data_lakehouse_spark.plans.similarity_ops import (
+    _CELLS_SQL,
+    _CENTROID_IDS,
+    _cos,
+    _N_QUERIES,
+    _NEARDUP_THRESHOLD,
+)
 
 # --- shared DuckDB fragments (mirror functions.text exactly) ---------------
 _NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
@@ -229,7 +236,7 @@ def _stream_spans_oracle() -> str:
     """
 
 
-@query("q_stream_substring_spans", oracle=None)  # oracle injected below
+@query("q_stream_substring_spans", oracle=_stream_spans_oracle())
 def q_stream_substring_spans(spark, sf_dir):
     """STREAMING exact-substring dedup probe proven batch-equal under the
     driver's hash: every 10th document arrives as a LIVE STREAM
@@ -292,16 +299,6 @@ def q_stream_substring_spans(spark, sf_dir):
     return spans_from_anchors(anchors).withColumnRenamed(
         "batch_id", "doc_id"
     )
-
-
-def _inject_stream_spans_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-
-    REGISTRY["q_stream_substring_spans"].oracle = _stream_spans_oracle()
-
-
-_inject_stream_spans_oracle()
-
 
 # ---------------------------------------------------------------------------
 # JSONL corpus on-ramp, proven end-to-end (parse + quarantine + metadata)
@@ -442,60 +439,9 @@ def jsonl_intake_rollup(proj):
 # SemDeDup-style semantic dedup decision over the embedding corpus
 
 
-@query("t_semdedup_clusters", oracle=None)  # oracle injected below
-def t_semdedup_clusters(spark, sf_dir):
-    """SEMANTIC dedup decision (the SemDeDup shape, Abbas et al. 2023):
-    cluster the embedding space coarsely (IVF cells as the k-means
-    stand-in), generate exact-cosine near-dup pairs ONLY within a cell,
-    close them transitively, and keep one representative per semantic
-    cluster — one row per corpus vector with its cluster id, the
-    keep/drop flag (`is_canonical` = min vec_id of the component), and
-    the cluster size. This is the embedding-space sibling of
-    `t_dedup_clusters` exactly as `t_embed_neardup` is of
-    `t_minhash_lsh_pairs` — pair generation and closure both reused
-    unchanged, so the three dedup families (lexical LSH, semantic
-    embedding, exact substring) all end in the same canonicalization
-    contract.
-
-    Scale: pair generation is cell-local (Σ|cell|², parallel per cell,
-    never corpus²); the label-propagation closure shuffles only the
-    edge-incident subgraph (two hops per materialized round); the corpus
-    is touched once by the final labeling join. The oracle computes the
-    identical closure with a recursive CTE over the same cell/cosine SQL
-    the t_embed_neardup oracle uses — inject-time composition, so the
-    pair predicate cannot drift between the two queries."""
-    from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CENTROID_IDS,
-        _N_QUERIES,
-        _NEARDUP_THRESHOLD,
-    )
-    from personal_data_lakehouse_spark.similarity.ivf import (
-        ivf_blocked_neardup,
-        pick_centroids,
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    candidates = emb.filter(F.col("vec_id") >= _N_QUERIES)
-    cents = pick_centroids(emb, _CENTROID_IDS)
-    pairs = ivf_blocked_neardup(
-        candidates, cents, threshold=_NEARDUP_THRESHOLD
-    ).select("id_a", "id_b")
-    return dedup_clusters(
-        candidates.select("vec_id"), pairs, id_col="vec_id"
-    ).select("vec_id", "cluster_id", "is_canonical", "cluster_size")
-
-
-def _inject_semdedup_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CELLS_SQL,
-        _cos,
-        _N_QUERIES,
-        _NEARDUP_THRESHOLD,
-    )
-
-    REGISTRY["t_semdedup_clusters"].oracle = f"""
+@query(
+    "t_semdedup_clusters",
+    oracle=f"""
     WITH RECURSIVE {_CELLS_SQL},
     edges AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -517,7 +463,41 @@ def _inject_semdedup_oracle() -> None:
            vec_id = cluster_id AS is_canonical,
            COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
     FROM cc
-    """
+    """,
+)
+def t_semdedup_clusters(spark, sf_dir):
+    """SEMANTIC dedup decision (the SemDeDup shape, Abbas et al. 2023):
+    cluster the embedding space coarsely (IVF cells as the k-means
+    stand-in), generate exact-cosine near-dup pairs ONLY within a cell,
+    close them transitively, and keep one representative per semantic
+    cluster — one row per corpus vector with its cluster id, the
+    keep/drop flag (`is_canonical` = min vec_id of the component), and
+    the cluster size. This is the embedding-space sibling of
+    `t_dedup_clusters` exactly as `t_embed_neardup` is of
+    `t_minhash_lsh_pairs` — pair generation and closure both reused
+    unchanged, so the three dedup families (lexical LSH, semantic
+    embedding, exact substring) all end in the same canonicalization
+    contract.
 
+    Scale: pair generation is cell-local (Σ|cell|², parallel per cell,
+    never corpus²); the label-propagation closure shuffles only the
+    edge-incident subgraph (two hops per materialized round); the corpus
+    is touched once by the final labeling join. The oracle computes the
+    identical closure with a recursive CTE over the same cell/cosine SQL
+    the t_embed_neardup oracle uses — composed at decoration, so the
+    pair predicate cannot drift between the two queries."""
+    from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
+    from personal_data_lakehouse_spark.similarity.ivf import (
+        ivf_blocked_neardup,
+        pick_centroids,
+    )
 
-_inject_semdedup_oracle()
+    emb = t(spark, sf_dir, "embeddings")
+    candidates = emb.filter(F.col("vec_id") >= _N_QUERIES)
+    cents = pick_centroids(emb, _CENTROID_IDS)
+    pairs = ivf_blocked_neardup(
+        candidates, cents, threshold=_NEARDUP_THRESHOLD
+    ).select("id_a", "id_b")
+    return dedup_clusters(
+        candidates.select("vec_id"), pairs, id_col="vec_id"
+    ).select("vec_id", "cluster_id", "is_canonical", "cluster_size")

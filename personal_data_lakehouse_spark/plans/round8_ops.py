@@ -21,86 +21,28 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-# round7_ops must be registered first: the streaming intake pair shares
-# its batch oracles verbatim (inject-time composition), and importing
+# round7_ops must be registered first: the streaming intake pair reads
+# its batch oracles verbatim from REGISTRY at decoration, and importing
 # this module standalone (tests, tools) must not depend on
 # __spark_entry__'s import order
 import personal_data_lakehouse_spark.plans.round7_ops  # noqa: F401
-from personal_data_lakehouse_spark.plans.registry import query, t
+from personal_data_lakehouse_spark.plans.registry import (
+    REGISTRY,
+    query,
+    read_parquet_cached,
+    t,
+)
+from personal_data_lakehouse_spark.plans.similarity_ops import (
+    _CELLS_SQL,
+    _CENTROID_IDS,
+    _cos,
+    _N_QUERIES,
+    _NEARDUP_THRESHOLD,
+)
 
 # ---------------------------------------------------------------------------
 # End-to-end corpus pipeline rollup (intake → dedup → rebalance → split →
 # pack), hashed as one query
-
-
-@query("t_corpus_pipeline_e2e", oracle=None)  # oracle composed + injected below
-def t_corpus_pipeline_e2e(spark, sf_dir):
-    """END-TO-END training-corpus pipeline (``corpus.py``) proven as ONE
-    driver-hashed query: the exact stage functions the managed-table
-    pipeline runs — intake gates (length / language / token-count) →
-    exact dedup (min-id per md5 fingerprint) → MinHash-LSH near-dup
-    canonicalization (verified Jaccard ≥ 0.5, transitive closure, keep
-    cluster-min) → temperature-α=0.5 domain rebalance (md5 coin vs
-    floor(65536·√(min_n/n_s))) → deterministic 80/10/10 split (md5 coin)
-    → per-(source, split) sequence packing — composed lazily and rolled
-    up to one row per (source, split): surviving docs, whitespace-token
-    mass, packed-bin count, and a 40-bit-md5 id-set fingerprint. Every
-    stage decision moves the hash: a doc wrongly kept/dropped shifts
-    n_docs AND id_fp; a packing drift shifts n_bins.
-
-    The oracle recomputes the full funnel in DuckDB, composed at inject
-    time from the SAME fragments the per-stage oracles use
-    (``cluster_ops._lsh_ctes`` for the LSH index/pairs, ``text_ops``
-    norm/token fragments), so pipeline and stage proofs cannot drift —
-    the ``t_semdedup_clusters`` composition technique applied to a
-    six-stage chain. This catches inter-stage CONTRACT drift (column
-    renames, filter reordering, a stage fed the wrong predecessor)
-    that ten individually-green stage queries never see.
-
-    Scale: inherits each stage's audited shape — map-side gates first,
-    one fingerprint shuffle, banded LSH (id-only candidates, never
-    corpus²), sparse-label closure, broadcast rebalance thresholds,
-    coin split map-side, per-slice packing window (the sharded two-pass
-    ``t_pack_sequences_sharded`` is the skew path and composes here
-    unchanged); the final rollup is one groupBy on (source, split).
-    Cross-engine float discipline: the only float is √(min_n/n_s) —
-    IEEE-correctly-rounded sqrt of an exact ratio, multiplied and
-    floored identically on both engines; everything hashed is integer.
-
-    Reference parity: pipelines/daily_pipeline composition
-    (run_pipeline.py) — the corpus DAG is its LLM-data counterpart;
-    SURVEY.md §2 G1/G4 + the §2-extension dedup/mixing/packing family.
-    """
-    from personal_data_lakehouse_spark.corpus import (
-        dedup_exact_stage,
-        dedup_near_stage,
-        intake,
-        packed_docs,
-        pipeline_rollup,
-        rebalance_stage,
-        split_stage,
-    )
-
-    docs = t(spark, sf_dir, "documents")
-    # r12 optimization (guide §1.2/§2.4/§5): persist the two survivor
-    # frames each consumed by several downstream branches — without the
-    # caches Catalyst re-executes the whole upstream subtree once per
-    # branch (measured on the before-plan: 12 documents FileScans in one
-    # invocation, i.e. the corpus text re-gated/re-fingerprinted ~12×
-    # per run; after: the intake→exact and near-dedup subtrees execute
-    # once each). ``kept`` feeds the LSH index build, the closure's node
-    # set and the canonical join-back; ``near`` feeds the rebalance
-    # count/threshold branches and the keep join. At 100 TB these are
-    # exactly the stage tables the managed pipeline (corpus_pipeline)
-    # writes between stages — the persist is the lazy-composition form
-    # of that written intermediate (SCALE.md §13 precedent).
-    kept = dedup_exact_stage(intake(docs)).persist()
-    near = dedup_near_stage(kept).persist()
-    staged = split_stage(rebalance_stage(near))
-    # the rollup (40-bit md5 id fingerprint + doc/token/bin counts) is the
-    # shared corpus.pipeline_rollup — expression-identical to the r8 plan,
-    # now also the incremental query's hashed surface
-    return pipeline_rollup(packed_docs(staged))
 
 
 def corpus_pipeline_oracle(
@@ -210,20 +152,83 @@ def corpus_pipeline_oracle(
     """
 
 
-def _inject_corpus_pipeline_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
+@query("t_corpus_pipeline_e2e", oracle=corpus_pipeline_oracle())
+def t_corpus_pipeline_e2e(spark, sf_dir):
+    """END-TO-END training-corpus pipeline (``corpus.py``) proven as ONE
+    driver-hashed query: the exact stage functions the managed-table
+    pipeline runs — intake gates (length / language / token-count) →
+    exact dedup (min-id per md5 fingerprint) → MinHash-LSH near-dup
+    canonicalization (verified Jaccard ≥ 0.5, transitive closure, keep
+    cluster-min) → temperature-α=0.5 domain rebalance (md5 coin vs
+    floor(65536·√(min_n/n_s))) → deterministic 80/10/10 split (md5 coin)
+    → per-(source, split) sequence packing — composed lazily and rolled
+    up to one row per (source, split): surviving docs, whitespace-token
+    mass, packed-bin count, and a 40-bit-md5 id-set fingerprint. Every
+    stage decision moves the hash: a doc wrongly kept/dropped shifts
+    n_docs AND id_fp; a packing drift shifts n_bins.
 
-    REGISTRY["t_corpus_pipeline_e2e"].oracle = corpus_pipeline_oracle()
+    The oracle recomputes the full funnel in DuckDB, composed at
+    decoration from the SAME fragments the per-stage oracles use
+    (``cluster_ops._lsh_ctes`` for the LSH index/pairs, ``text_ops``
+    norm/token fragments), so pipeline and stage proofs cannot drift —
+    the ``t_semdedup_clusters`` composition technique applied to a
+    six-stage chain. This catches inter-stage CONTRACT drift (column
+    renames, filter reordering, a stage fed the wrong predecessor)
+    that ten individually-green stage queries never see.
 
+    Scale: inherits each stage's audited shape — map-side gates first,
+    one fingerprint shuffle, banded LSH (id-only candidates, never
+    corpus²), sparse-label closure, broadcast rebalance thresholds,
+    coin split map-side, per-slice packing window (the sharded two-pass
+    ``t_pack_sequences_sharded`` is the skew path and composes here
+    unchanged); the final rollup is one groupBy on (source, split).
+    Cross-engine float discipline: the only float is √(min_n/n_s) —
+    IEEE-correctly-rounded sqrt of an exact ratio, multiplied and
+    floored identically on both engines; everything hashed is integer.
 
-_inject_corpus_pipeline_oracle()
+    Reference parity: pipelines/daily_pipeline composition
+    (run_pipeline.py) — the corpus DAG is its LLM-data counterpart;
+    SURVEY.md §2 G1/G4 + the §2-extension dedup/mixing/packing family.
+    """
+    from personal_data_lakehouse_spark.corpus import (
+        dedup_exact_stage,
+        dedup_near_stage,
+        intake,
+        packed_docs,
+        pipeline_rollup,
+        rebalance_stage,
+        split_stage,
+    )
+
+    docs = t(spark, sf_dir, "documents")
+    # r12 optimization (guide §1.2/§2.4/§5): persist the two survivor
+    # frames each consumed by several downstream branches — without the
+    # caches Catalyst re-executes the whole upstream subtree once per
+    # branch (measured on the before-plan: 12 documents FileScans in one
+    # invocation, i.e. the corpus text re-gated/re-fingerprinted ~12×
+    # per run; after: the intake→exact and near-dedup subtrees execute
+    # once each). ``kept`` feeds the LSH index build, the closure's node
+    # set and the canonical join-back; ``near`` feeds the rebalance
+    # count/threshold branches and the keep join. At 100 TB these are
+    # exactly the stage tables the managed pipeline (corpus_pipeline)
+    # writes between stages — the persist is the lazy-composition form
+    # of that written intermediate (SCALE.md §13 precedent).
+    kept = dedup_exact_stage(intake(docs)).persist()
+    near = dedup_near_stage(kept).persist()
+    staged = split_stage(rebalance_stage(near))
+    # the rollup (40-bit md5 id fingerprint + doc/token/bin counts) is the
+    # shared corpus.pipeline_rollup — expression-identical to the r8 plan,
+    # now also the incremental query's hashed surface
+    return pipeline_rollup(packed_docs(staged))
 
 
 # ---------------------------------------------------------------------------
 # Streaming JSONL intake (quarantine contract across micro-batches)
 
 
-@query("q_stream_jsonl_intake", oracle=None)  # oracle shared with batch, below
+# byte-identical input directory + identical projection/rollup ⇒ the
+# batch oracle IS the streaming oracle (no-drift composition)
+@query("q_stream_jsonl_intake", oracle=REGISTRY["q_jsonl_intake"].oracle)
 def q_stream_jsonl_intake(spark, sf_dir):
     """STREAMING JSONL corpus intake proven batch-equal under the
     driver's hash: the SAME fixture directory ``q_jsonl_intake`` reads
@@ -274,20 +279,8 @@ def q_stream_jsonl_intake(spark, sf_dir):
     return jsonl_intake_rollup(drained)
 
 
-def _inject_stream_jsonl_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-
-    # byte-identical input directory + identical projection/rollup ⇒ the
-    # batch oracle IS the streaming oracle (no-drift composition)
-    REGISTRY["q_stream_jsonl_intake"].oracle = REGISTRY[
-        "q_jsonl_intake"
-    ].oracle
-
-
-_inject_stream_jsonl_oracle()
-
-
-@query("q_stream_text_intake", oracle=None)  # oracle shared with batch, below
+# same input directory and funnel as q_text_intake ⇒ the same oracle
+@query("q_stream_text_intake", oracle=REGISTRY["q_text_intake"].oracle)
 def q_stream_text_intake(spark, sf_dir):
     """STREAMING raw-text corpus intake proven batch-equal under the
     driver's hash — completing the intake streaming PAIR (the JSONL
@@ -335,167 +328,24 @@ def q_stream_text_intake(spark, sf_dir):
     return text_intake_rollup(drained)
 
 
-def _inject_stream_text_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-
-    # byte-identical input directory + identical projection/rollup ⇒ the
-    # batch oracle IS the streaming oracle (no-drift composition)
-    REGISTRY["q_stream_text_intake"].oracle = REGISTRY[
-        "q_text_intake"
-    ].oracle
-
-
-_inject_stream_text_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Online semantic-dedup admission (streaming SemDeDup)
 
 # Stream/corpus split for the admission parity: centroid ids (8..15) stay
 # corpus-side by the >= 16 bound, so the static cell index is intact.
 _SEM_STREAM_PRED = "vec_id >= 16 AND vec_id % 10 = 3"
+# the shared cell-assignment CTE, restricted to the corpus split (keeps
+# the cell/cosine SQL single-source)
+_SEM_CORPUS_CELLS_SQL = _CELLS_SQL.replace(
+    f"WHERE vec_id >= {_N_QUERIES}",
+    f"WHERE vec_id >= {_N_QUERIES} AND NOT ({_SEM_STREAM_PRED})",
+)
 
 
-@query("q_stream_semdedup_admit", oracle=None)  # oracle injected below
-def q_stream_semdedup_admit(spark, sf_dir):
-    """ONLINE semantic-dedup admission (streaming SemDeDup) — the third
-    dedup family's streaming sibling, completing the triad: lexical
-    MinHash has ``neardup_candidate_stream``, exact-substring has
-    ``q_stream_substring_spans``, and this is the embedding-space form.
-    A LIVE STREAM of embedding vectors is probed against the STATIC
-    corpus artifacts (IVF cell index + closed semantic clusters from
-    ``t_semdedup_clusters``' exact pipeline over the non-stream split):
-    each arriving vector is assigned its nearest cell statelessly
-    (literal-injected centroids, bit-identical to batch ``assign_cells``
-    — the zero-norm → -inf guard included), scored against its
-    cell-mates, and ADMITTED iff no corpus neighbor reaches the near-dup
-    threshold; rejected vectors are assigned the min cluster id among
-    their matches. One row per streamed vector: (vec_id, admitted,
-    cluster_id, n_matches).
-
-    Must hash-equal the pure-batch SQL over the same stream/corpus
-    split — cell argmax, rounded-cosine threshold, corpus closure and
-    the admit/assign decision are all differentially checked.
-
-    Scale: per-event work is O(dim · k_cells) map-side + one
-    stream-static join against the cell index (broadcast when it fits);
-    state stays EMPTY at any stream length (pinned by
-    ``test_stream_semdedup_probe_is_stateless``). The corpus-side
-    artifacts (cell index + cluster labels) are materialized ONCE per
-    (sf, process) as parquet — exactly what a production deployment
-    keeps on disk and maintains incrementally — so warm invocations
-    measure the online probe + admit assembly, not a from-scratch corpus
-    re-clustering; the final labeling join is candidate-bounded, never
-    corpus-sized.
-
-    Reference parity: the online form of ingest_stocks.py:84-100's
-    dedup-before-append MERGE, applied to the SemDeDup decision
-    (BASELINE.json north star); sibling of round7_ops.py:207-264.
-    """
-    from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CENTROID_IDS,
-        _N_QUERIES,
-        _NEARDUP_THRESHOLD,
-    )
-    from personal_data_lakehouse_spark.similarity.ivf import (
-        ann_candidate_stream,
-        assign_cells,
-        ivf_blocked_neardup,
-        pick_centroids,
-    )
-    from personal_data_lakehouse_spark.streaming.windows import (
-        drain_stream_to_parquet,
-        source_fixture_dir,
-        stream_work_dir,
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    cand = emb.filter(F.col("vec_id") >= _N_QUERIES)
-    pred = F.expr(_SEM_STREAM_PRED)
-    corpus = cand.filter(~pred)
-    arrivals = cand.filter(pred)
-    cents = pick_centroids(emb, _CENTROID_IDS)
-
-    # Static corpus artifacts — the cell index and the closed semantic
-    # clusters — are MATERIALIZED once per (sf, process) as parquet:
-    # exactly the artifacts a production deployment keeps on disk and
-    # maintains incrementally, so the timed region measures the ONLINE
-    # PROBE, not a from-scratch corpus re-clustering per invocation (the
-    # same honesty split as the r8 source-fixture change). Pure
-    # functions of the fixture tables ⇒ a stale complete artifact is
-    # byte-identical; _SUCCESS gates completeness.
-    npart = spark.sparkContext.defaultParallelism
-    cells_dir, cells_ready = source_fixture_dir("semadmit_cells", sf_dir)
-    if not cells_ready:
-        assign_cells(corpus, cents, "vec_id", "embedding", n=1).coalesce(
-            npart
-        ).write.mode("overwrite").parquet(cells_dir)
-    cells = spark.read.parquet(cells_dir)
-    labels_dir, labels_ready = source_fixture_dir("semadmit_labels", sf_dir)
-    if not labels_ready:
-        pairs = ivf_blocked_neardup(
-            corpus, cents, threshold=_NEARDUP_THRESHOLD
-        ).select("id_a", "id_b")
-        dedup_clusters(
-            corpus.select("vec_id"), pairs, id_col="vec_id"
-        ).select("vec_id", "cluster_id").coalesce(npart).write.mode(
-            "overwrite"
-        ).parquet(labels_dir)
-    labels = spark.read.parquet(labels_dir).select(
-        F.col("vec_id").alias("corpus_id"), "cluster_id"
-    )
-
-    work = stream_work_dir("semadmit")
-    src, ready = source_fixture_dir("semadmit_src", sf_dir)
-    if not ready:
-        arrivals.select("vec_id", "embedding").write.mode(
-            "overwrite"
-        ).parquet(src)
-    stream_vecs = spark.readStream.schema(
-        "vec_id bigint, embedding array<float>"
-    ).parquet(src)
-
-    drained = drain_stream_to_parquet(
-        ann_candidate_stream(stream_vecs, cells, cents, nprobe=1), work
-    )
-    matches = (
-        drained.filter(F.col("cosine") >= F.lit(_NEARDUP_THRESHOLD))
-        .join(labels, drained.cand_id == labels.corpus_id)
-        .groupBy("qid")
-        .agg(
-            F.min("cluster_id").alias("_mcl"),
-            F.count(F.lit(1)).cast("long").alias("_nm"),
-        )
-    )
-    roster = arrivals.select("vec_id")
-    return roster.join(
-        matches, roster.vec_id == matches.qid, "left"
-    ).select(
-        "vec_id",
-        F.col("_mcl").isNull().alias("admitted"),
-        F.coalesce(F.col("_mcl"), F.col("vec_id")).alias("cluster_id"),
-        F.coalesce(F.col("_nm"), F.lit(0)).cast("long").alias("n_matches"),
-    )
-
-
-def _inject_stream_semdedup_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.registry import REGISTRY
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CELLS_SQL,
-        _cos,
-        _N_QUERIES,
-        _NEARDUP_THRESHOLD,
-    )
-
-    # the shared cell-assignment CTE, restricted to the corpus split (the
-    # inject-time composition that keeps the cell/cosine SQL single-source)
-    cells_sql = _CELLS_SQL.replace(
-        f"WHERE vec_id >= {_N_QUERIES}",
-        f"WHERE vec_id >= {_N_QUERIES} AND NOT ({_SEM_STREAM_PRED})",
-    )
-    REGISTRY["q_stream_semdedup_admit"].oracle = f"""
-    WITH RECURSIVE {cells_sql},
+@query(
+    "q_stream_semdedup_admit",
+    oracle=f"""
+    WITH RECURSIVE {_SEM_CORPUS_CELLS_SQL},
     edges AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM cells a JOIN cells b
@@ -536,7 +386,120 @@ def _inject_stream_semdedup_oracle() -> None:
            COALESCE(m.mcl, s.qid) AS cluster_id,
            COALESCE(m.nm, 0) AS n_matches
     FROM strm s LEFT JOIN m ON s.qid = m.qid
+    """,
+)
+def q_stream_semdedup_admit(spark, sf_dir):
+    """ONLINE semantic-dedup admission (streaming SemDeDup) — the third
+    dedup family's streaming sibling, completing the triad: lexical
+    MinHash has ``neardup_candidate_stream``, exact-substring has
+    ``q_stream_substring_spans``, and this is the embedding-space form.
+    A LIVE STREAM of embedding vectors is probed against the STATIC
+    corpus artifacts (IVF cell index + closed semantic clusters from
+    ``t_semdedup_clusters``' exact pipeline over the non-stream split):
+    each arriving vector is assigned its nearest cell statelessly
+    (literal-injected centroids, bit-identical to batch ``assign_cells``
+    — the zero-norm → -inf guard included), scored against its
+    cell-mates, and ADMITTED iff no corpus neighbor reaches the near-dup
+    threshold; rejected vectors are assigned the min cluster id among
+    their matches. One row per streamed vector: (vec_id, admitted,
+    cluster_id, n_matches).
+
+    Must hash-equal the pure-batch SQL over the same stream/corpus
+    split — cell argmax, rounded-cosine threshold, corpus closure and
+    the admit/assign decision are all differentially checked.
+
+    Scale: per-event work is O(dim · k_cells) map-side + one
+    stream-static join against the cell index (broadcast when it fits);
+    state stays EMPTY at any stream length (pinned by
+    ``test_stream_semdedup_probe_is_stateless``). The corpus-side
+    artifacts (cell index + cluster labels) are materialized ONCE per
+    (sf, process) as parquet — exactly what a production deployment
+    keeps on disk and maintains incrementally — so warm invocations
+    measure the online probe + admit assembly, not a from-scratch corpus
+    re-clustering; the final labeling join is candidate-bounded, never
+    corpus-sized.
+
+    Reference parity: the online form of ingest_stocks.py:84-100's
+    dedup-before-append MERGE, applied to the SemDeDup decision
+    (BASELINE.json north star); sibling of round7_ops.py:207-264.
     """
+    from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
+    from personal_data_lakehouse_spark.similarity.ivf import (
+        ann_candidate_stream,
+        assign_cells,
+        ivf_blocked_neardup,
+        pick_centroids,
+    )
+    from personal_data_lakehouse_spark.streaming.windows import (
+        drain_stream_to_parquet,
+        source_fixture_dir,
+        stream_work_dir,
+    )
 
+    emb = t(spark, sf_dir, "embeddings")
+    cand = emb.filter(F.col("vec_id") >= _N_QUERIES)
+    pred = F.expr(_SEM_STREAM_PRED)
+    corpus = cand.filter(~pred)
+    arrivals = cand.filter(pred)
+    cents = pick_centroids(emb, _CENTROID_IDS)
 
-_inject_stream_semdedup_oracle()
+    # Static corpus artifacts — the cell index and the closed semantic
+    # clusters — are MATERIALIZED once per (sf, process) as parquet:
+    # exactly the artifacts a production deployment keeps on disk and
+    # maintains incrementally, so the timed region measures the ONLINE
+    # PROBE, not a from-scratch corpus re-clustering per invocation (the
+    # same honesty split as the r8 source-fixture change). Pure
+    # functions of the fixture tables ⇒ a stale complete artifact is
+    # byte-identical; _SUCCESS gates completeness.
+    npart = spark.sparkContext.defaultParallelism
+    cells_dir, cells_ready = source_fixture_dir("semadmit_cells", sf_dir)
+    if not cells_ready:
+        assign_cells(corpus, cents, "vec_id", "embedding", n=1).coalesce(
+            npart
+        ).write.mode("overwrite").parquet(cells_dir)
+    cells = read_parquet_cached(spark, cells_dir)
+    labels_dir, labels_ready = source_fixture_dir("semadmit_labels", sf_dir)
+    if not labels_ready:
+        pairs = ivf_blocked_neardup(
+            corpus, cents, threshold=_NEARDUP_THRESHOLD
+        ).select("id_a", "id_b")
+        dedup_clusters(
+            corpus.select("vec_id"), pairs, id_col="vec_id"
+        ).select("vec_id", "cluster_id").coalesce(npart).write.mode(
+            "overwrite"
+        ).parquet(labels_dir)
+    labels = read_parquet_cached(spark, labels_dir).select(
+        F.col("vec_id").alias("corpus_id"), "cluster_id"
+    )
+
+    work = stream_work_dir("semadmit")
+    src, ready = source_fixture_dir("semadmit_src", sf_dir)
+    if not ready:
+        arrivals.select("vec_id", "embedding").write.mode(
+            "overwrite"
+        ).parquet(src)
+    stream_vecs = spark.readStream.schema(
+        "vec_id bigint, embedding array<float>"
+    ).parquet(src)
+
+    drained = drain_stream_to_parquet(
+        ann_candidate_stream(stream_vecs, cells, cents, nprobe=1), work
+    )
+    matches = (
+        drained.filter(F.col("cosine") >= F.lit(_NEARDUP_THRESHOLD))
+        .join(labels, drained.cand_id == labels.corpus_id)
+        .groupBy("qid")
+        .agg(
+            F.min("cluster_id").alias("_mcl"),
+            F.count(F.lit(1)).cast("long").alias("_nm"),
+        )
+    )
+    roster = arrivals.select("vec_id")
+    return roster.join(
+        matches, roster.vec_id == matches.qid, "left"
+    ).select(
+        "vec_id",
+        F.col("_mcl").isNull().alias("admitted"),
+        F.coalesce(F.col("_mcl"), F.col("vec_id")).alias("cluster_id"),
+        F.coalesce(F.col("_nm"), F.lit(0)).cast("long").alias("n_matches"),
+    )

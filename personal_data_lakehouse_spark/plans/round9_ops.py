@@ -20,11 +20,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-# round8_ops must be imported FIRST: this module shares its composed
-# e2e-pipeline oracle verbatim (inject-time composition)
+# round8_ops must be imported FIRST: this module reads its composed
+# e2e-pipeline oracle from REGISTRY at decoration
 import personal_data_lakehouse_spark.plans.round8_ops  # noqa: F401
 from personal_data_lakehouse_spark.plans.registry import (
     REGISTRY,
+    _path_mtime,
     query,
     read_parquet_cached,
     t,
@@ -36,22 +37,22 @@ from personal_data_lakehouse_spark.plans.registry import (
 # Base/batch split for the parity query: the batch is the TOP ~20% of the
 # doc_id RANGE — the append-only id invariant corpus_incremental requires
 # (new docs arrive with ids above everything already ingested, exactly
-# the reference's monotonically-growing ingest keys). Collected once per
-# (sf_dir, process): an O(1) min/max agg, cached so warm plan builds run
-# zero eager jobs.
-_INC_T: dict[str, int] = {}
+# the reference's monotonically-growing ingest keys). An O(1) min/max agg,
+# cached per sf_dir so warm plan builds run zero eager jobs; the entry
+# carries documents.parquet's mtime and is REPLACED when it changes, so a
+# corpus rewritten at the same path gets a fresh threshold.
+_INC_T: dict[str, tuple[float, int]] = {}
 
 
 def _inc_threshold(spark, sf_dir, docs) -> int:
-    thr = _INC_T.get(sf_dir)
-    if thr is None:
+    mt = _path_mtime(f"{sf_dir}/documents.parquet")
+    if _INC_T.get(sf_dir, (None,))[0] != mt:
         row = docs.agg(
             F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
         ).first()
         lo, hi = int(row["lo"]), int(row["hi"])
-        thr = hi - (hi - lo) // 5
-        _INC_T[sf_dir] = thr
-    return thr
+        _INC_T[sf_dir] = (mt, hi - (hi - lo) // 5)
+    return _INC_T[sf_dir][1]
 
 
 def _materialized_base_state(
@@ -101,7 +102,14 @@ def _materialized_base_state(
     return CorpusState({n: read_parquet_cached(spark, dirs[n]) for n in names})
 
 
-@query("t_corpus_pipeline_incremental", oracle=None)  # shared with e2e below
+# base ∪ batch = documents, and the merged end state must equal the full
+# recompute — so the e2e composed oracle IS the incremental oracle, shared
+# VERBATIM (the no-drift composition: the two parity queries cannot
+# diverge in what they claim).
+@query(
+    "t_corpus_pipeline_incremental",
+    oracle=REGISTRY["t_corpus_pipeline_e2e"].oracle,
+)
 def t_corpus_pipeline_incremental(spark, sf_dir):
     """INCREMENTAL corpus-pipeline run, driver-hashed equal to a FULL
     RECOMPUTE: the base corpus (bottom ~80% of the doc_id range) is a
@@ -144,19 +152,6 @@ def t_corpus_pipeline_incremental(spark, sf_dir):
     batch = docs.filter(F.col("doc_id") >= thr)
     state = _materialized_base_state(spark, sf_dir, base)
     return state_rollup(apply_increment(state, batch).state).rollup
-
-
-def _inject_incremental_oracle() -> None:
-    # base ∪ batch = documents, and the merged end state must equal the
-    # full recompute — so the e2e composed oracle IS the incremental
-    # oracle, shared VERBATIM (the no-drift composition: the two parity
-    # queries cannot diverge in what they claim).
-    REGISTRY["t_corpus_pipeline_incremental"].oracle = REGISTRY[
-        "t_corpus_pipeline_e2e"
-    ].oracle
-
-
-_inject_incremental_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -385,137 +380,7 @@ def online_semdedup_admit(
     )
 
 
-@query("q_stream_semdedup_admit_v2", oracle=None)  # oracle injected below
-def q_stream_semdedup_admit_v2(spark, sf_dir):
-    """ONLINE semantic-dedup admission WITH INDEX MAINTENANCE — the closed
-    loop r8's ``q_stream_semdedup_admit`` deliberately left open (its
-    contract was stream-vs-corpus only, so two near-identical stream
-    vectors were BOTH admitted): here every micro-batch's ADMITTED
-    vectors are appended to the cell index inside ``foreachBatch`` BEFORE
-    the next batch probes, and SAME-batch arrivals resolve sequentially
-    per cell (a per-cell ``applyInPandas`` greedy scan in vec_id order) —
-    so a stream near-dup of an earlier admit is REJECTED and assigned the
-    admit's cluster, the true online-dedup contract and the streaming
-    form of the reference's MERGE-maintained dedup key set
-    (ingest_stocks.py:84-100, the index IS the merged table).
-
-    Arrivals are processed in STRICT vec_id order: the source fixture is
-    four id-range files with staggered mtimes and
-    ``maxFilesPerTrigger=1`` (the file source takes oldest-first), and
-    intra-batch order is the greedy scan — together exactly the global
-    sequential contract the oracle replays with a linear recursive CTE
-    (one row per arrival, carrying the admitted set as a list of
-    (id, cell, vector) structs). Every decision is differentially
-    hashed: (vec_id, admitted, cluster_id, n_matches) where matches
-    count corpus members AND earlier admits in the probe cell at
-    ≥ {thr} rounded cosine, and cluster_id is the minimum matched
-    cluster (an admit's cluster is itself).
-
-    Split/threshold are v2-specific (wider stream slice, lower bound) so
-    intra-stream rejections occur NATURALLY at both gate SFs — measured
-    7 same-cell stream pairs ≥ 0.3 at sf0.01 — rather than only in the
-    synthetic duplicate pytest (tests/test_streaming.py pins two
-    identical arrivals → one admit).
-
-    Scale: per-batch work is O(batch · (cell members + admits-so-far))
-    map-side joins + a per-cell pandas scan over BATCH rows only; the
-    admitted index grows by O(admits) parquet appends (exactly what a
-    production deployment maintains); state stays EMPTY at any stream
-    length (foreachBatch owns all side effects). The sequential contract
-    costs nothing distributed: batches are serial anyway, and the
-    per-cell scan touches only same-batch same-cell arrivals.
-
-    Reference parity: the online form of ingest_stocks.py:84-100 with
-    the dedup KEY SET itself maintained per batch; supersedes the
-    admission half of round8_ops.py:331 (kept registered — its
-    stateless stream-vs-corpus contract is the bootstrap phase).
-    """
-    from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
-    from personal_data_lakehouse_spark.plans.similarity_ops import (
-        _CENTROID_IDS,
-        _N_QUERIES,
-    )
-    from personal_data_lakehouse_spark.similarity.ivf import (
-        assign_cells,
-        ivf_blocked_neardup,
-        pick_centroids,
-    )
-    from personal_data_lakehouse_spark.streaming.windows import (
-        source_fixture_dir,
-        stream_work_dir,
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    cand = emb.filter(F.col("vec_id") >= _N_QUERIES)
-    pred = F.expr(_V2_STREAM_PRED)
-    corpus = cand.filter(~pred)
-    arrivals = cand.filter(pred)
-    cents = pick_centroids(emb, _CENTROID_IDS)
-    npart = spark.sparkContext.defaultParallelism
-
-    # static corpus artifact at the v2 split/threshold (the r8 honesty
-    # split: production keeps this on disk; warm runs time the stream).
-    # ONE pre-joined index table — cell assignment + cluster label per
-    # corpus vector — so each micro-batch reads a single parquet dir
-    # instead of re-joining cells×labels per batch (plan noise a real
-    # deployment would never pay: the stored index IS the join).
-    idx_dir, idx_ready = source_fixture_dir("semadmit2_index", sf_dir)
-    if not idx_ready:
-        cells_df = assign_cells(corpus, cents, "vec_id", "embedding", n=1)
-        pairs = ivf_blocked_neardup(
-            corpus, cents, threshold=_V2_THRESHOLD
-        ).select("id_a", "id_b")
-        labels_df = dedup_clusters(
-            corpus.select("vec_id"), pairs, id_col="vec_id"
-        ).select("vec_id", "cluster_id")
-        cells_df.join(labels_df, "vec_id").select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("ce_v"),
-            F.col("_vn").alias("_cn"),
-            "cell",
-            "cluster_id",
-        ).coalesce(npart).write.mode("overwrite").parquet(idx_dir)
-    idx_static = read_parquet_cached(spark, idx_dir)
-
-    # ordered stream source: four id-range files, staggered mtimes, so
-    # maxFilesPerTrigger=1 yields batches in global vec_id order
-    src, src_ready = source_fixture_dir("semadmit2_src", sf_dir)
-    if not src_ready:
-        import glob
-        import os
-        import shutil
-
-        from pyspark.sql import Window
-
-        tagged = arrivals.select("vec_id", "embedding").withColumn(
-            "b", F.ntile(4).over(Window.orderBy("vec_id"))
-        )
-        os.makedirs(src, exist_ok=True)
-        base_t = 1_600_000_000  # any fixed instant; only the ORDER matters
-        for i in range(1, 5):
-            tmp = f"{src}__tmp{i}"
-            tagged.filter(F.col("b") == i).drop("b").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(src, f"b{i}.parquet")
-            shutil.copyfile(part, dst)
-            os.utime(dst, (base_t + 60 * i, base_t + 60 * i))
-            shutil.rmtree(tmp, ignore_errors=True)
-        open(os.path.join(src, "_SUCCESS"), "w").close()
-
-    work = stream_work_dir("semadmit2")
-    stream_vecs = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    return online_semdedup_admit(
-        spark, stream_vecs, idx_static, cents, work, _V2_THRESHOLD
-    )
-
-
-def _inject_stream_semdedup_v2_oracle() -> None:
+def _stream_semdedup_v2_oracle() -> str:
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CELLS_SQL,
         _cos,
@@ -553,7 +418,7 @@ def _inject_stream_semdedup_v2_oracle() -> None:
         f"ROUND({_dot_pair('u.e', 'f.qe')} / (u.n * f.qn), 6) >= {thr})"
     )
     big = 9223372036854775807
-    REGISTRY["q_stream_semdedup_admit_v2"].oracle = f"""
+    return f"""
     WITH RECURSIVE {cells_sql},
     edges AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -638,7 +503,116 @@ def _inject_stream_semdedup_v2_oracle() -> None:
     """
 
 
-_inject_stream_semdedup_v2_oracle()
+@query("q_stream_semdedup_admit_v2", oracle=_stream_semdedup_v2_oracle())
+def q_stream_semdedup_admit_v2(spark, sf_dir):
+    """ONLINE semantic-dedup admission WITH INDEX MAINTENANCE — the closed
+    loop r8's ``q_stream_semdedup_admit`` deliberately left open (its
+    contract was stream-vs-corpus only, so two near-identical stream
+    vectors were BOTH admitted): here every micro-batch's ADMITTED
+    vectors are appended to the cell index inside ``foreachBatch`` BEFORE
+    the next batch probes, and SAME-batch arrivals resolve sequentially
+    per cell (a per-cell ``applyInPandas`` greedy scan in vec_id order) —
+    so a stream near-dup of an earlier admit is REJECTED and assigned the
+    admit's cluster, the true online-dedup contract and the streaming
+    form of the reference's MERGE-maintained dedup key set
+    (ingest_stocks.py:84-100, the index IS the merged table).
+
+    Arrivals are processed in STRICT vec_id order: the source fixture is
+    four id-range files with staggered mtimes and
+    ``maxFilesPerTrigger=1`` (the file source takes oldest-first), and
+    intra-batch order is the greedy scan — together exactly the global
+    sequential contract the oracle replays with a linear recursive CTE
+    (one row per arrival, carrying the admitted set as a list of
+    (id, cell, vector) structs). Every decision is differentially
+    hashed: (vec_id, admitted, cluster_id, n_matches) where matches
+    count corpus members AND earlier admits in the probe cell at
+    ≥ {thr} rounded cosine, and cluster_id is the minimum matched
+    cluster (an admit's cluster is itself).
+
+    Split/threshold are v2-specific (wider stream slice, lower bound) so
+    intra-stream rejections occur NATURALLY at both gate SFs — measured
+    7 same-cell stream pairs ≥ 0.3 at sf0.01 — rather than only in the
+    synthetic duplicate pytest (tests/test_streaming.py pins two
+    identical arrivals → one admit).
+
+    Scale: per-batch work is O(batch · (cell members + admits-so-far))
+    map-side joins + a per-cell pandas scan over BATCH rows only; the
+    admitted index grows by O(admits) parquet appends (exactly what a
+    production deployment maintains); state stays EMPTY at any stream
+    length (foreachBatch owns all side effects). The sequential contract
+    costs nothing distributed: batches are serial anyway, and the
+    per-cell scan touches only same-batch same-cell arrivals.
+
+    Reference parity: the online form of ingest_stocks.py:84-100 with
+    the dedup KEY SET itself maintained per batch; supersedes the
+    admission half of round8_ops.py:331 (kept registered — its
+    stateless stream-vs-corpus contract is the bootstrap phase).
+    """
+    from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
+    from personal_data_lakehouse_spark.plans.similarity_ops import (
+        _CENTROID_IDS,
+        _N_QUERIES,
+    )
+    from personal_data_lakehouse_spark.similarity.ivf import (
+        assign_cells,
+        ivf_blocked_neardup,
+        pick_centroids,
+    )
+    from personal_data_lakehouse_spark.streaming.windows import (
+        source_fixture_dir,
+        stream_work_dir,
+        write_ordered_parts,
+    )
+
+    emb = t(spark, sf_dir, "embeddings")
+    cand = emb.filter(F.col("vec_id") >= _N_QUERIES)
+    pred = F.expr(_V2_STREAM_PRED)
+    corpus = cand.filter(~pred)
+    arrivals = cand.filter(pred)
+    cents = pick_centroids(emb, _CENTROID_IDS)
+    npart = spark.sparkContext.defaultParallelism
+
+    # static corpus artifact at the v2 split/threshold (the r8 honesty
+    # split: production keeps this on disk; warm runs time the stream).
+    # ONE pre-joined index table — cell assignment + cluster label per
+    # corpus vector — so each micro-batch reads a single parquet dir
+    # instead of re-joining cells×labels per batch (plan noise a real
+    # deployment would never pay: the stored index IS the join).
+    idx_dir, idx_ready = source_fixture_dir("semadmit2_index", sf_dir)
+    if not idx_ready:
+        cells_df = assign_cells(corpus, cents, "vec_id", "embedding", n=1)
+        pairs = ivf_blocked_neardup(
+            corpus, cents, threshold=_V2_THRESHOLD
+        ).select("id_a", "id_b")
+        labels_df = dedup_clusters(
+            corpus.select("vec_id"), pairs, id_col="vec_id"
+        ).select("vec_id", "cluster_id")
+        cells_df.join(labels_df, "vec_id").select(
+            F.col("vec_id").alias("cand_id"),
+            F.col("embedding").alias("ce_v"),
+            F.col("_vn").alias("_cn"),
+            "cell",
+            "cluster_id",
+        ).coalesce(npart).write.mode("overwrite").parquet(idx_dir)
+    idx_static = read_parquet_cached(spark, idx_dir)
+
+    # ordered stream source: four id-range files, staggered mtimes, so
+    # maxFilesPerTrigger=1 yields batches in global vec_id order
+    src, src_ready = source_fixture_dir("semadmit2_src", sf_dir)
+    if not src_ready:
+        write_ordered_parts(
+            arrivals.select("vec_id", "embedding"), "vec_id", 4, "b", src
+        )
+
+    work = stream_work_dir("semadmit2")
+    stream_vecs = (
+        spark.readStream.schema("vec_id bigint, embedding array<float>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    return online_semdedup_admit(
+        spark, stream_vecs, idx_static, cents, work, _V2_THRESHOLD
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -648,7 +622,69 @@ _MEDIA_GRID = 8
 _MEDIA_THRESHOLD = 0.98  # 18 cell-local pairs >= thr at sf0.01, 2294 at sf0.1
 
 
-@query("m_media_neardup", oracle=None)  # oracle composed below
+def _media_neardup_oracle() -> str:
+    from personal_data_lakehouse_spark.plans.similarity_ops import _cos
+
+    g = _MEDIA_GRID
+    thr = _MEDIA_THRESHOLD
+    # the synthetic decode, replayed in SQL: raster[y, x] = byte[(y*w + x)
+    # % L], sampled at ys[r] = (r*h)//g, xs[c] = (c*w)//g, flattened —
+    # char codes are payload bytes under the ASCII guard
+    pos = (
+        f"((((i // {g}) * h) // {g}) * w + (((i % {g}) * w) // {g})) % L + 1"
+    )
+    feat = (
+        f"list_transform(range(0, {g * g}), "
+        f"i -> CAST(ascii(substr(text, {pos}, 1)) AS DOUBLE))"
+    )
+    return f"""
+    WITH RECURSIVE feats AS (
+        SELECT doc_id AS media_id, {feat} AS fe
+        FROM (SELECT doc_id, text, length(text) AS L,
+                     length(text) % 1024 + 64 AS w,
+                     length(text) % 768 + 64 AS h
+              FROM documents
+              WHERE length(text) >= 1
+                AND length(text) = octet_length(encode(text)))
+    ), cents AS (
+        SELECT media_id AS cid, fe AS ce FROM feats
+        ORDER BY media_id LIMIT 8
+    ), asg AS (
+        SELECT media_id, fe, cid, {_cos('fe', 'ce')} AS csim
+        FROM feats, cents
+    ), cells AS (
+        SELECT media_id, fe, cid AS cell FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY media_id
+                ORDER BY csim DESC, cid) AS crnk FROM asg)
+        WHERE crnk = 1
+    ), edges AS (
+        SELECT a.media_id AS id_a, b.media_id AS id_b
+        FROM cells a JOIN cells b
+          ON a.cell = b.cell AND a.media_id < b.media_id
+        WHERE ROUND({_cos('a.fe', 'b.fe')}, 6) >= {thr}
+    ), symm AS (
+        SELECT id_a AS a, id_b AS b FROM edges
+        UNION
+        SELECT id_b AS a, id_a AS b FROM edges
+    ), reach(rsrc, rdst) AS (
+        SELECT media_id, media_id FROM feats
+        UNION
+        SELECT r.rsrc, s.b FROM reach r JOIN symm s ON r.rdst = s.a
+    ), cc AS (
+        SELECT rsrc AS media_id, MIN(rdst) AS cluster_id
+        FROM reach GROUP BY 1
+    ), sizes AS (
+        SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS csz
+        FROM cc GROUP BY 1
+    )
+    SELECT cc.media_id, cc.cluster_id,
+           cc.media_id = cc.cluster_id AS is_canonical,
+           sizes.csz AS cluster_size
+    FROM cc JOIN sizes USING (cluster_id)
+    """
+
+
+@query("m_media_neardup", oracle=_media_neardup_oracle())
 def m_media_neardup(spark, sf_dir):
     """MEDIA near-duplicate DECISION — the multimodal kernels composed
     with the similarity stack in one driver-hashed query (the two
@@ -725,71 +761,6 @@ def m_media_neardup(spark, sf_dir):
     )
 
 
-def _inject_media_neardup_oracle() -> None:
-    from personal_data_lakehouse_spark.plans.similarity_ops import _cos
-
-    g = _MEDIA_GRID
-    thr = _MEDIA_THRESHOLD
-    # the synthetic decode, replayed in SQL: raster[y, x] = byte[(y*w + x)
-    # % L], sampled at ys[r] = (r*h)//g, xs[c] = (c*w)//g, flattened —
-    # char codes are payload bytes under the ASCII guard
-    pos = (
-        f"((((i // {g}) * h) // {g}) * w + (((i % {g}) * w) // {g})) % L + 1"
-    )
-    feat = (
-        f"list_transform(range(0, {g * g}), "
-        f"i -> CAST(ascii(substr(text, {pos}, 1)) AS DOUBLE))"
-    )
-    REGISTRY["m_media_neardup"].oracle = f"""
-    WITH RECURSIVE feats AS (
-        SELECT doc_id AS media_id, {feat} AS fe
-        FROM (SELECT doc_id, text, length(text) AS L,
-                     length(text) % 1024 + 64 AS w,
-                     length(text) % 768 + 64 AS h
-              FROM documents
-              WHERE length(text) >= 1
-                AND length(text) = octet_length(encode(text)))
-    ), cents AS (
-        SELECT media_id AS cid, fe AS ce FROM feats
-        ORDER BY media_id LIMIT 8
-    ), asg AS (
-        SELECT media_id, fe, cid, {_cos('fe', 'ce')} AS csim
-        FROM feats, cents
-    ), cells AS (
-        SELECT media_id, fe, cid AS cell FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY media_id
-                ORDER BY csim DESC, cid) AS crnk FROM asg)
-        WHERE crnk = 1
-    ), edges AS (
-        SELECT a.media_id AS id_a, b.media_id AS id_b
-        FROM cells a JOIN cells b
-          ON a.cell = b.cell AND a.media_id < b.media_id
-        WHERE ROUND({_cos('a.fe', 'b.fe')}, 6) >= {thr}
-    ), symm AS (
-        SELECT id_a AS a, id_b AS b FROM edges
-        UNION
-        SELECT id_b AS a, id_a AS b FROM edges
-    ), reach(rsrc, rdst) AS (
-        SELECT media_id, media_id FROM feats
-        UNION
-        SELECT r.rsrc, s.b FROM reach r JOIN symm s ON r.rdst = s.a
-    ), cc AS (
-        SELECT rsrc AS media_id, MIN(rdst) AS cluster_id
-        FROM reach GROUP BY 1
-    ), sizes AS (
-        SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS csz
-        FROM cc GROUP BY 1
-    )
-    SELECT cc.media_id, cc.cluster_id,
-           cc.media_id = cc.cluster_id AS is_canonical,
-           sizes.csz AS cluster_size
-    FROM cc JOIN sizes USING (cluster_id)
-    """
-
-
-_inject_media_neardup_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Streaming corpus increments: the capstone pipeline as a LIVE DELTA STREAM
 
@@ -806,6 +777,7 @@ def delta_stream(spark, sf_dir, batch_docs):
     replay the IDENTICAL delivery."""
     from personal_data_lakehouse_spark.streaming.windows import (
         source_fixture_dir,
+        write_ordered_parts,
     )
 
     src, src_ready = source_fixture_dir("corpinc_stream_src", sf_dir)
@@ -814,28 +786,13 @@ def delta_stream(spark, sf_dir, batch_docs):
         "source string"
     )
     if not src_ready:
-        import glob
-        import os
-        import shutil
-
-        from pyspark.sql import Window
-
-        tagged = batch_docs.select(
-            "doc_id", "text", "lang", "n_chars", "source"
-        ).withColumn("b", F.ntile(3).over(Window.orderBy("doc_id")))
-        os.makedirs(src, exist_ok=True)
-        base_t = 1_600_000_000
-        for i in range(1, 4):
-            tmp = f"{src}__tmp{i}"
-            tagged.filter(F.col("b") == i).drop("b").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(src, f"d{i}.parquet")
-            shutil.copyfile(part, dst)
-            os.utime(dst, (base_t + 60 * i, base_t + 60 * i))
-            shutil.rmtree(tmp, ignore_errors=True)
-        open(os.path.join(src, "_SUCCESS"), "w").close()
+        write_ordered_parts(
+            batch_docs.select("doc_id", "text", "lang", "n_chars", "source"),
+            "doc_id",
+            3,
+            "d",
+            src,
+        )
     return (
         spark.readStream.schema(doc_schema)
         .option("maxFilesPerTrigger", 1)
@@ -843,7 +800,10 @@ def delta_stream(spark, sf_dir, batch_docs):
     )
 
 
-@query("t_stream_corpus_increments", oracle=None)  # e2e oracle shared below
+# base + the streamed deltas = all documents, and chained increments must
+# land on the rebuild end state — the e2e full-recompute oracle, shared
+# verbatim (three parity queries, one claim, zero drift)
+@query("t_stream_corpus_increments", oracle=REGISTRY["t_corpus_pipeline_e2e"].oracle)
 def t_stream_corpus_increments(spark, sf_dir):
     """The corpus pipeline run as a LIVE STREAM OF DELTAS — the fusion of
     this round's two marquee pieces and the production shape of the
@@ -901,15 +861,3 @@ def t_stream_corpus_increments(spark, sf_dir):
         step,
     )
     return state_rollup(final).rollup
-
-
-def _inject_stream_corpus_oracle() -> None:
-    # base + the streamed deltas = all documents, and chained increments
-    # must land on the rebuild end state — the e2e full-recompute oracle,
-    # shared verbatim (three parity queries, one claim, zero drift)
-    REGISTRY["t_stream_corpus_increments"].oracle = REGISTRY[
-        "t_corpus_pipeline_e2e"
-    ].oracle
-
-
-_inject_stream_corpus_oracle()

@@ -256,6 +256,36 @@ def source_fixture_dir(name: str, sf_dir: str) -> tuple[str, bool]:
     return d, os.path.exists(os.path.join(d, "_SUCCESS"))
 
 
+def write_ordered_parts(
+    df: DataFrame, order_col: str, n_files: int, prefix: str, dst: str
+) -> None:
+    """Write *df* into *dst* as *n_files* single-file parquet parts
+    ``{prefix}1.parquet`` … holding ascending *order_col* ranges (ntile),
+    with mtimes staggered 60 s apart in the same order, then ``_SUCCESS``.
+    A file stream read with ``maxFilesPerTrigger=1`` takes the oldest
+    mtime first, so its batches arrive in global *order_col* order."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.sql import Window
+
+    tagged = df.withColumn("b", F.ntile(n_files).over(Window.orderBy(order_col)))
+    os.makedirs(dst, exist_ok=True)
+    base_t = 1_600_000_000  # any fixed instant; only the ORDER matters
+    for i in range(1, n_files + 1):
+        tmp = f"{dst}__tmp{i}"
+        tagged.filter(F.col("b") == i).drop("b").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        out = os.path.join(dst, f"{prefix}{i}.parquet")
+        shutil.copyfile(part, out)
+        os.utime(out, (base_t + 60 * i, base_t + 60 * i))
+        shutil.rmtree(tmp, ignore_errors=True)
+    open(os.path.join(dst, "_SUCCESS"), "w").close()
+
+
 def watermark_flush_events(
     spark: SparkSession, like: DataFrame, work_dir: str
 ) -> DataFrame:

@@ -55,6 +55,32 @@ def test_distributed_bpe_matches_sequential_reference(spark):
     assert any(len(left) > 1 or len(right) > 1 for left, right, _ in got)
 
 
+def test_bpe_merge_memo_follows_a_rewritten_corpus(spark, tmp_path):
+    """The merge-table memo is stamped with documents.parquet's mtime: a
+    corpus rewritten at the SAME path is retrained, not served the first
+    corpus's merges."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from personal_data_lakehouse_spark.plans.training_ops import bpe_merges_for
+
+    sf = str(tmp_path)
+    path = f"{sf}/documents.parquet"
+    got = []
+    for word, stamp in (("aaaa", 1_000_000), ("bbbb", 2_000_000)):
+        pq.write_table(
+            pa.table({"doc_id": [0, 1, 2], "text": [f"{word} {word}"] * 3}),
+            path,
+        )
+        # explicit stamps: two writes inside one filesystem tick must not
+        # look like the same file
+        os.utime(path, (stamp, stamp))
+        got.append(bpe_merges_for(spark, sf, n_merges=1))
+    assert got == [[("a", "a", 18)], [("b", "b", 18)]]
+
+
 def _ref_encode(word: str, merges) -> int:
     s = list(word)
     for left, right, _c in merges:

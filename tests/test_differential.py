@@ -3,6 +3,8 @@ match DuckDB exactly on the fixture tables (mirrors the driver's t2 gate)."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -11,6 +13,16 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 
 ORACLE_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
 ROWS_ONLY_QUERIES = sorted(name for name, q in REGISTRY.items() if not q.oracle)
+
+# Engine-specific sketch outputs with no SQL equivalent (value correctness
+# bounded in tests/test_advanced.py) — the only rows-only queries. r12: the
+# three BPE queries left this set — the wrapped-symbol replace-chain oracle
+# (plans/training_ops.py) hashes them exactly now.
+ROWS_ONLY_WIRED = {
+    "q_hll_mv",
+    "q_approx_distinct",
+    "q_approx_percentile",
+}
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
@@ -39,23 +51,28 @@ def test_registry_size_floor():
     assert len(REGISTRY) >= 127
 
 
+def test_rows_only_set_is_exactly_the_wired_sketches():
+    """Across the WHOLE registry, not just the 50-slot priority window: a
+    query whose oracle went missing would otherwise fall back to the
+    weaker rows-only check without failing anything."""
+    assert set(ROWS_ONLY_QUERIES) == ROWS_ONLY_WIRED
+
+
+def test_registered_oracles_are_frozen():
+    """An oracle is set only by its @query; a later assignment raises."""
+    name = next(iter(REGISTRY))
+    with pytest.raises(dataclasses.FrozenInstanceError):
+        REGISTRY[name].oracle = "SELECT 1"
+
+
 def test_priority_prefix_is_oracle_backed():
     """The driver may hash-check only the first 50 queries() entries; every
     one of those slots must carry an oracle, EXCEPT the explicitly wired
     rows-only sketch/tokenizer queries (VERDICT r3 item 8: a rows_match row
     is still signal for ops whose output is non-SQL-expressible — they get
     a slot once, this round)."""
-    # Engine-specific sketch outputs with no SQL equivalent (value
-    # correctness bounded in tests/test_advanced.py). r12: the three BPE
-    # queries left this set — the wrapped-symbol replace-chain oracle
-    # (plans/round12_ops.py) hashes them exactly now.
-    rows_only_wired = {
-        "q_hll_mv",
-        "q_approx_distinct",
-        "q_approx_percentile",
-    }
     names = entry_mod._ordered_names()[:50]
     for n in names:
-        if n in rows_only_wired:
+        if n in ROWS_ONLY_WIRED:
             continue
         assert REGISTRY[n].oracle is not None, n

@@ -133,6 +133,33 @@ def test_decontaminate_incremental_reads_only_batch_text(spark):
     assert saw_doc_scan, "expected exactly the batch-side documents scan"
 
 
+def test_inc_threshold_follows_a_rewritten_corpus(spark, tmp_path):
+    """The threshold memo is stamped with documents.parquet's mtime: a
+    corpus rewritten at the SAME path gets its own 80/20 split instead of
+    the first corpus's cached threshold."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from personal_data_lakehouse_spark.plans.round9_ops import _inc_threshold
+    from personal_data_lakehouse_spark.plans.registry import t as t_
+
+    sf = str(tmp_path)
+    path = f"{sf}/documents.parquet"
+    thresholds = []
+    for n, stamp in ((100, 1_000_000), (200, 2_000_000)):
+        pq.write_table(
+            pa.table({"doc_id": list(range(n)), "text": ["a b"] * n}), path
+        )
+        # explicit stamps: two writes inside one filesystem tick must not
+        # look like the same file
+        os.utime(path, (stamp, stamp))
+        docs = t_(spark, sf, "documents")
+        thresholds.append(_inc_threshold(spark, sf, docs))
+    assert thresholds == [99 - 99 // 5, 199 - 199 // 5]
+
+
 # ---------------------------------------------------------------------------
 # Chunk-ANN recall
 

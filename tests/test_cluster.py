@@ -5,10 +5,11 @@ graphs, plus a hypothesis differential against a sequential union-find
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from personal_data_lakehouse_spark.dedup import cluster
 from personal_data_lakehouse_spark.dedup.cluster import (
     connected_components,
     dedup_clusters,
@@ -84,23 +85,10 @@ def test_nonconvergence_raises(spark):
         connected_components(e, max_iter=1, driver_edge_cap=0)
 
 
-@_CAPS
-@settings(max_examples=8, deadline=None)
-@given(
-    pairs=st.lists(
-        st.tuples(st.integers(0, 9), st.integers(0, 9)),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_random_graphs_match_union_find(spark, cap, pairs):
-    """BOTH execution strategies must reach the same unique fixpoint
-    (min node id per component) as a sequential union-find on ANY edge
-    list — including self-loops, duplicate/reversed edges, and the chain
-    shapes that need the most rounds. Guards the fused round structure
-    and its hop-2-only convergence test against off-by-one-hop early
-    exits, and the driver union-find against min-root drift."""
-    parent = list(range(10))
+def _union_find(pairs, n=10):
+    """Sequential reference: component root (min id) of each of 0..n-1;
+    an edge with a null endpoint joins nothing."""
+    parent = list(range(n))
 
     def find(x):
         while parent[x] != x:
@@ -109,13 +97,47 @@ def test_random_graphs_match_union_find(spark, cap, pairs):
         return x
 
     for a, b in pairs:
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = {n for e in pairs for n in e}
-    want = {n: find(n) for n in nodes}
+    return [find(x) for x in range(n)]
 
-    e = _edges(spark, [(a, b) for a, b in pairs])
+
+# Random edge lists over ids 0..9: self-loops, duplicate and reversed
+# edges arise naturally; None stands for a null endpoint.
+_PAIRS = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(0, 9)),
+        st.one_of(st.none(), st.integers(0, 9)),
+    ),
+    min_size=1,
+    max_size=12,
+)
+# a self-loop, duplicate and reversed edges and null endpoints, run on
+# every property below besides the drawn lists
+_EVERY_SHAPE = [
+    (1, 1), (2, 3), (3, 2), (2, 3), (3, 7), (None, 4), (5, None), (None, None)
+]
+
+
+@_CAPS
+@settings(max_examples=8, deadline=None)
+@given(pairs=_PAIRS)
+@example(pairs=_EVERY_SHAPE)
+def test_random_graphs_match_union_find(spark, cap, pairs):
+    """BOTH execution strategies must reach the same unique fixpoint
+    (min node id per component) as a sequential union-find on ANY edge
+    list — including self-loops, duplicate/reversed edges, null endpoints
+    and the chain shapes that need the most rounds. Guards the fused
+    round structure and its hop-2-only convergence test against
+    off-by-one-hop early exits, and the driver union-find against
+    min-root drift. Every non-null endpoint is a node."""
+    root = _union_find(pairs)
+    want = {n: root[n] for e in pairs for n in e if n is not None}
+
+    e = _edges(spark, pairs)
     got = {
         r.node: r.label
         for r in connected_components(e, driver_edge_cap=cap).collect()
@@ -123,25 +145,97 @@ def test_random_graphs_match_union_find(spark, cap, pairs):
     assert got == want
 
 
+def _jobs(spark, group, action):
+    """Number of Spark jobs *action* runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_driver_path_runs_bounded_eager_jobs(spark):
     """The adaptive closure's whole point is SCHEDULER-JOB economy: the
     loop path ran ~30 eager checkpoint/AQE jobs even on a 3-edge graph.
-    Pin the driver path to a small constant of eager jobs (adjacency
-    checkpoint + the bounded collect, each possibly split by AQE) so a
-    refactor that silently re-introduces per-round materialization fails
-    here instead of waiting for a bench regression."""
+    Pin the driver path to its measured eager jobs (the raw edge
+    checkpoint + the bounded limit(cap+1) collect) so a refactor that
+    silently re-introduces per-round materialization fails here instead
+    of waiting for a bench regression."""
     e = _edges(spark, [(1, 2), (2, 3), (10, 11)])
-    sc = spark.sparkContext
-    sc.setJobGroup("cc-probe", "cc-probe")
-    try:
-        connected_components(e)  # labels DF built, NOT consumed
-        jobs = len(sc.statusTracker().getJobIdsForGroup("cc-probe"))
-    finally:
-        sc.setJobGroup(None, None)
-    assert jobs <= 6, (
+    # labels DF built, NOT consumed
+    jobs = _jobs(spark, "cc-probe", lambda: connected_components(e))
+    assert jobs <= 2, (
         f"driver-path closure ran {jobs} eager jobs — the bounded-collect "
-        "contract (adjacency checkpoint + limit(cap+1) collect) is broken"
+        "contract (edge checkpoint + limit(cap+1) collect) is broken"
     )
+
+
+@pytest.mark.parametrize("cap", [None, 0], ids=["driver", "loop"])
+@settings(max_examples=6, deadline=None)
+@given(pairs=_PAIRS)
+@example(pairs=_EVERY_SHAPE)
+def test_dedup_clusters_random_graphs_match_union_find(spark, cap, pairs):
+    """dedup_clusters on both paths (the loop forced by a zero cap) against
+    a sequential union-find over the 10-doc corpus: cluster id, canonical
+    flag and cluster size of every doc, null endpoints dropped."""
+    root = _union_find(pairs)
+    want = {
+        d: (root[d], root[d] == d, root.count(root[d])) for d in range(10)
+    }
+    docs = spark.range(10).withColumnRenamed("id", "doc_id")
+    with pytest.MonkeyPatch.context() as mp:
+        if cap is not None:
+            mp.setattr(cluster, "DRIVER_EDGE_CAP", cap)
+        out = dedup_clusters(
+            docs, spark.createDataFrame(pairs, "id_a long, id_b long")
+        ).collect()
+    got = {
+        r.doc_id: (r.cluster_id, r.is_canonical, r.cluster_size) for r in out
+    }
+    assert got == want
+
+
+def test_driver_path_returns_local_labels_consumed_in_two_jobs(spark):
+    """Under the cap the returned plan is docs ⋈ broadcast(LocalRelation):
+    no RDD-backed leaf (a LogicalRDD made the label broadcast a 0.3 s job
+    of its own), and consuming it runs at most two jobs."""
+    docs = spark.range(1, 7).withColumnRenamed("id", "doc_id")
+    pairs = spark.createDataFrame([(2, 4), (4, 6)], "id_a long, id_b long")
+    out = dedup_clusters(docs, pairs)
+    qe = out._jdf.queryExecution()
+    for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in qe.executedPlan().toString()
+    rows = []
+    jobs = _jobs(spark, "dedup-consume", lambda: rows.extend(out.collect()))
+    assert len(rows) == 6
+    assert jobs <= 2, f"driver-path labels consumed in {jobs} jobs"
+
+
+def test_over_cap_path_runs_the_edge_plan_once(spark):
+    """Over the cap, the bounded probe and the propagation loop both read
+    the one raw-edge checkpoint: the edge-producing plan (here a Python
+    UDF that counts the rows it sees) runs once per edge row in total."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    tick_udf = F.udf(tick, "long")
+    chain = [(i, i + 1) for i in range(5)]
+    pairs = spark.createDataFrame(chain, "id_a long, id_b long").select(
+        tick_udf("id_a").alias("id_a"), "id_b"
+    )
+    docs = spark.range(6).withColumnRenamed("id", "doc_id")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "DRIVER_EDGE_CAP", 2)
+        rows = dedup_clusters(docs, pairs).collect()
+    assert {r.cluster_id for r in rows} == {0}
+    assert seen.value == len(chain)
 
 
 def test_cap_boundary_falls_through_to_loop(spark):

@@ -45,6 +45,22 @@ def test_read_csv_sanitized(spark, tmp_path):
     assert row.preco_r == 10.5
 
 
+def test_local_frame_is_a_local_relation_with_exact_types(spark):
+    from personal_data_lakehouse_spark.io.readers import local_frame
+
+    df = local_frame(
+        spark,
+        [(1, 2**40, "a"), (None, None, None)],
+        "i int, big long, s string",
+    )
+    assert "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+    assert df.schema.simpleString() == "struct<i:int,big:bigint,s:string>"
+    assert [tuple(r) for r in df.collect()] == [(1, 2**40, "a"), (None, None, None)]
+    assert local_frame(spark, [], "i int").count() == 0
+    with pytest.raises(Exception):
+        local_frame(spark, [(2**40,)], "i int")  # does not fit an int
+
+
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     from personal_data_lakehouse_spark.io.readers import read_orc, write_orc
 

@@ -134,7 +134,9 @@ GOLDEN_EXTRA = [
     # (q_text_intake / q_stream_substring_spans / q_jsonl_intake are in
     # HEADLINE and pinnable — normalize_plan strips the work-dir paths;
     # t_semdedup_clusters is HEADLINE too but golden-EXCLUDED below: its
-    # labels come from loop-checkpointed RDDs, the t_dedup_clusters /
+    # labels are computed at build (a local relation of label rows under
+    # the closure's edge cap, loop-checkpointed RDDs over it), the
+    # t_dedup_clusters /
     # m_pagerank_top20 precedent — pinned by the differential gate +
     # plan lint instead.)
 ]
@@ -149,7 +151,7 @@ _GOLDEN_SF = "/root/testdata/sf0.001"
 # generator's clearCache); dict.fromkeys dedupes HEADLINE∩GOLDEN_EXTRA.
 # r8: t_corpus_pipeline_e2e and q_stream_semdedup_admit join HEADLINE but
 # stay golden-excluded — both embed the dedup_clusters closure, whose
-# labels come from loop-checkpointed RDDs (the t_dedup_clusters /
+# labels are computed at build (the t_dedup_clusters /
 # t_semdedup_clusters precedent); pinned by the differential gate + plan
 # lint instead. q_stream_jsonl_intake IS pinned (sink-scan + rollup,
 # work-dir paths normalized like q_stream_substring_spans).

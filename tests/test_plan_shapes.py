@@ -121,15 +121,11 @@ def test_headline_exchange_budgets(spark):
         # json scan -> map -> one exchange (the jsonl fixture write is
         # eager, outside the plan)
         "q_jsonl_intake": 1,
-        # 7 textual = the final corpus-labeling join's two exchanges +
-        # the label-size aggregate + its join + the runtime bloom's
-        # scalar SinglePartition + TWO BroadcastExchange of the
-        # driver-union-find label table (a LocalTableScan of the sparse
-        # edge-incident labels, printed once per cc consumer — sizes and
-        # labeling; bytes ≤ driver_edge_cap by construction). Down from
-        # the loop era EXECUTED cost: the adaptive closure replaced ~30
-        # eager checkpoint/AQE jobs with one bounded collect (r8).
-        "t_semdedup_clusters": 7,
+        # 1 = the BroadcastExchange of the driver-union-find label table
+        # (node, cluster_id, cluster_size — a LocalTableScan of the
+        # sparse edge-incident labels, sizes counted on the driver; rows
+        # ≤ the edge cap by construction)
+        "t_semdedup_clusters": 1,
         # 34 textual (r12 optimization: was 39) = the six composed
         # stages' exchanges with the exact-kept and near-kept survivor
         # frames now persisted — the upstream intake/dedup subtree prints
@@ -137,8 +133,10 @@ def test_headline_exchange_budgets(spark):
         # (and EXECUTES once instead of ~6×: documents FileScans in the
         # sf0.1 plan dropped 12 → 2, plans/r12/); rebalance's min now
         # rides a global window over the |sources|-row count table
-        # (one tiny exchange) instead of a second counts branch
-        "t_corpus_pipeline_e2e": 34,
+        # (one tiny exchange) instead of a second counts branch; the
+        # closure is one local label table broadcast (sizes counted on
+        # the driver)
+        "t_corpus_pipeline_e2e": 24,
         # 1 = the language-bucket rollup over the streaming sink read-back
         "q_stream_jsonl_intake": 1,
         # 10 textual = cell-assign window exchange re-printed per cached
@@ -148,9 +146,9 @@ def test_headline_exchange_budgets(spark):
         # 57 textual = the batch-side funnel (fingerprint anti-join +
         # batch-min aggregate, batch LSH index re-printed per cached
         # join side, candidate dedups + verify joins) + the insert-only
-        # MERGE anti-joins per stage table + closure label/size
-        # aggregates (the driver-union-find label broadcast re-printed
-        # per consumer) + rebalance/split/pack/rollup — the corpus side
+        # MERGE anti-joins per stage table + the closure's local label
+        # broadcast (sizes counted on the driver) +
+        # rebalance/split/pack/rollup — the corpus side
         # reads the five materialized state tables, so EXECUTED cost is
         # O(batch text) + sparse-state joins (see the query docstring)
         # (r12: 57 → 70 textual — the three increment caches (anti-joined
@@ -160,39 +158,38 @@ def test_headline_exchange_budgets(spark):
         # REMOVING executed re-runs of the merge subtree: documents/fp/
         # skeleton scans in the sf0.1 plan dropped 12/12/12 → 2/2/4,
         # plans/r12/ — the standing 'textual up, executed down' class)
-        "t_corpus_pipeline_incremental": 70,
+        "t_corpus_pipeline_incremental": 60,
         # 0 = the returned plan reads the decisions file sink back; all
         # per-batch work (assign, probe, greedy, append) ran inside
         # foreachBatch during the availableNow drain
         "q_stream_semdedup_admit_v2": 0,
-        # 70 textual — SAME count as the v1 incremental (and the same
+        # 60 textual — SAME count as the v1 incremental (and the same
         # r12 textual-up/executed-down trade, see above): the semantic stage's extra
         # exchanges (batch cell window, stored-index probe,
         # cells/sem_edges MERGE anti-joins, the edge-union distinct) all
         # feed the sparse edge table, which the adaptive closure COLLECTS
         # at plan build (driver union-find → broadcast LocalTableScan), so
         # they execute eagerly and never print in the returned plan; the
-        # 70 that do print are the v1 lexical funnel + derived stages
-        "t_corpus_pipeline_incremental_v2": 70,
+        # 60 that do print are the v1 lexical funnel + derived stages
+        "t_corpus_pipeline_incremental_v2": 60,
         # 7 textual = the persisted cell frame's assignment-window
         # exchange re-printed per self-join reference (the
         # t_embed_neardup pattern) + the pair-stage shuffle + the
         # single-partition global aggregate's exchange
         "s_ivf_auto_codebook": 7,
-        # 7 textual = the feature-frame persist boundary re-printed per
-        # consumer (codebook pick + pair self-join sides) + pair
-        # aggregate + closure label/size aggregates + the final roster
-        # labeling join; the Python decode (MapInPandas) sits inside the
-        # cached relation, executed exactly once
-        "m_media_neardup": 7,
-        # 18 textual (r12 optimization: was 27) = the final increment's
+        # 1 = the local label table's BroadcastExchange (the
+        # t_semdedup_clusters shape): the feature frame, codebook pick
+        # and pair generation all ran at build inside the closure's edge
+        # checkpoint, so none of their exchanges print here
+        "m_media_neardup": 1,
+        # 8 textual (r12 optimization: was 27) = the final increment's
         # derived-decision stages over the CHECKPOINTED carried state
-        # (closure label/size aggregates + label broadcast per consumer,
+        # (the closure's local label broadcast,
         # rebalance count/global-min window, packing window sort, final
         # rollup) — the per-batch funnel ran inside foreachBatch; the
         # r12 canonical-survivor persist stops the checkpointed-skeleton
         # subtree re-printing (and re-executing) per derived branch
-        "t_stream_corpus_increments": 18,
+        "t_stream_corpus_increments": 8,
     }
     assert set(budget) == set(HEADLINE)
     for name, allowed in budget.items():

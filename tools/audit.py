@@ -42,9 +42,10 @@ SF = os.environ.get("AUDIT_SF_DIR", "/root/testdata/sf0.01")
 
 # Documented construction-time work (warm-build eager-job budgets).
 # Families, with the design decision each rides on:
-#  - closure consumers: adjacency checkpoint + the bounded limit(cap+1)
-#    collect of the adaptive closure (dedup/cluster.py) — O(K) by
-#    construction; AQE may split the checkpoint into a few jobs.
+#  - closure consumers: the raw-edge checkpoint + the bounded
+#    limit(cap+1) collect of the adaptive closure (dedup/cluster.py) —
+#    O(K) by construction; AQE splits the checkpoint of a shuffling edge
+#    plan into one job per stage.
 #  - iterative algorithms: k-means / PageRank / BPE run their loops at
 #    build time (each round is a checkpoint or a driver fold) — the
 #    loop IS the operator; counts scale with the fixed iteration count,
@@ -54,8 +55,8 @@ SF = os.environ.get("AUDIT_SF_DIR", "/root/testdata/sf0.01")
 #    accepted collects (VERDICT r7), now counted.
 #  - streaming-in-query: the availableNow run + sentinel/read-back jobs.
 #  - maintenance/versioned-table ops: O(files) manifest work.
-# Budgets sit just above the 2026-08-15 measured warm counts (in
-# parens). Known instrument limit: Structured Streaming executes on its
+# Budgets sit just above the measured warm counts (in parens; closure
+# consumers re-measured 2026-10-17 at sf0.01, budget = count + 2). Known instrument limit: Structured Streaming executes on its
 # own threads, which do NOT inherit the driver thread's job group — the
 # q_stream_* counts here cover only driver-thread jobs (fixture probes,
 # sentinel read-backs); the stream's own micro-batch jobs are measured
@@ -65,27 +66,27 @@ SF = os.environ.get("AUDIT_SF_DIR", "/root/testdata/sf0.01")
 # refactor moves one to build time this audit flags it for
 # re-adjudication.
 EAGER_ALLOW: dict[str, int] = {
-    # --- adaptive-closure consumers: adjacency checkpoint (AQE may
-    #     split it) + the bounded limit(cap+1) collect ---
-    "t_dedup_clusters": 8,  # (7)
-    "t_dedup_cluster_stats": 10,  # (7)
-    "t_dedup_keep_best": 8,  # (7)
-    "t_semdedup_clusters": 6,  # (4)
-    "t_corpus_pipeline_e2e": 12,  # (9)
+    # --- adaptive-closure consumers: the raw-edge checkpoint (one job
+    #     per edge-plan stage) + the bounded limit(cap+1) collect ---
+    "t_dedup_clusters": 8,  # (6)
+    "t_dedup_cluster_stats": 8,  # (6)
+    "t_dedup_keep_best": 8,  # (6)
+    "t_semdedup_clusters": 5,  # (3)
+    "t_corpus_pipeline_e2e": 8,  # (6)
     # the incremental run pays the SAME closure-family build jobs over
-    # the merged edge table (adjacency checkpoint + bounded collect),
-    # plus the O(1) threshold agg on the first build of a process
-    "t_corpus_pipeline_incremental": 16,  # (13)
+    # the merged edge table (edge checkpoint + bounded collect), plus the
+    # O(1) threshold agg on the first build of a process
+    "t_corpus_pipeline_incremental": 11,  # (9)
     # r10 v2 (semantic) family: the same closure-family build jobs, now
     # over the merged lexical∪semantic edge table, plus the semantic
     # edge-union the adaptive closure collects at build; the incremental
     # flavor adds the stored-index probe materializations
-    "t_corpus_pipeline_sem_e2e": 14,  # (11)
-    "t_corpus_pipeline_incremental_v2": 20,  # (17)
-    # closure consumer over media-feature pairs (adjacency checkpoint +
+    "t_corpus_pipeline_sem_e2e": 10,  # (8)
+    "t_corpus_pipeline_incremental_v2": 15,  # (13)
+    # closure consumer over media-feature pairs (edge checkpoint +
     # bounded collect); the Python decode itself is lazy (persist
     # materializes at consumption)
-    "m_media_neardup": 6,  # (4)
+    "m_media_neardup": 5,  # (3)
     # --- iterative algorithms: per-process-cached loop outputs make the
     #     warm build cheap; the loop itself is the cold build ---
     "m_kmeans_centroids": 4,  # (1)
@@ -102,10 +103,10 @@ EAGER_ALLOW: dict[str, int] = {
     # the delta stream runs at build; its foreachBatch increments run on
     # stream threads (not job-group-attributed, see note above) — the
     # measured driver-thread jobs are the final rollup's closure build
-    "t_stream_corpus_increments": 8,  # (3)
+    "t_stream_corpus_increments": 4,  # (2)
     # the v2 sibling: same delta stream at build (stream threads escape
     # attribution), driver-thread jobs are the v2 rollup's closure build
-    "t_stream_corpus_increments_v2": 8,  # (4)
+    "t_stream_corpus_increments_v2": 5,  # (3)
     "q_stream_session_agg": 8,
     "q_stream_sliding_agg": 8,
     "q_stream_static_enrich": 8,

@@ -61,7 +61,7 @@ function that appends cannot retro-flip at the STAGE-TABLE level:
 Work per increment: O(batch text) for gates/fingerprints/shingles,
 O(batch vectors) for cell assignment, O(new candidate pairs) for
 verification, O(total edges) for the closure (the adaptive
-``connected_components`` — edges are the sparse edge-incident subgraph,
+``dedup_clusters`` closure — edges are the sparse edge-incident subgraph,
 not the corpus), O(survivor ids) for rebalance/split/pack. The 100 TB
 corpus' TEXT and vectors are touched exactly once per document, at the
 increment that ingested it.

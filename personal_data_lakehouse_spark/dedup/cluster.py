@@ -2,10 +2,10 @@
 
 Pair-producing dedup ops (MinHash-LSH, SimHash, embedding-cosine) emit
 *edges*; an actual dedup pipeline must then pick ONE representative per
-transitive duplicate cluster.  That closure step is this module: given an
-edge list, label every node with its component's minimum id (a stable,
-deterministic canonical id), so `keep = (doc_id == cluster_id)` is the
-dedup decision.
+transitive duplicate cluster.  That closure step is this module's
+``dedup_clusters``: given a corpus and an edge list, label every document
+with its component's minimum id (a stable, deterministic canonical id),
+so `keep = (doc_id == cluster_id)` is the dedup decision.
 
 The raw edge rows are materialized ONCE (one checkpoint of the
 edge-producing plan, e.g. the whole MinHash-LSH pipeline), and one of two
@@ -13,8 +13,8 @@ strategies closes them — both reach the same min-reachable-id fixpoint:
 
 - **Small graph** (at most ``DRIVER_EDGE_CAP`` edge rows, the common
   late-pipeline case): a bounded ``limit(cap+1)`` collect, a min-root
-  union-find on the driver, and — for ``dedup_clusters`` — the cluster
-  sizes counted there too. The labels go back to Spark as a Catalyst
+  union-find on the driver, and the cluster sizes counted there too. The
+  labels go back to Spark as a Catalyst
   ``LocalRelation`` (``io.readers.local_frame``), so labeling the corpus
   is one broadcast join whose build side needs no job over an RDD.
 - **Large graph**: iterative min-label propagation expressed as DataFrame
@@ -30,7 +30,9 @@ strategies closes them — both reach the same min-reachable-id fixpoint:
   components with very large diameters are expected (chain-shaped
   graphs), which LSH output is not.  Lineage is truncated every round
   with ``localCheckpoint`` so the plan does not grow with iterations
-  (Spark's iterative-algorithm pitfall).
+  (Spark's iterative-algorithm pitfall).  This path stores the edge list
+  twice while it runs: the raw-row checkpoint (which the bounded probe
+  needed) and the symmetrized adjacency the rounds join against.
 
 The reference has no dedup beyond MERGE-on-key (SURVEY §2.3 J1,
 `pipelines/stock_api/ingest_stocks.py:84-100`); this is north-star
@@ -128,61 +130,17 @@ def _driver_roots(raw: DataFrame, cap: int) -> dict | None:
     return {n: _find(n) for n in parent}
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 25,
-    driver_edge_cap: int = DRIVER_EDGE_CAP,
-) -> DataFrame:
-    """Label each node with the minimum node id reachable via edges.
-
-    Returns ``DataFrame[node, label]`` — `label` is the component id.
-    With ``nodes=None`` the node set is every non-null edge endpoint;
-    pass an explicit superset to also emit isolated nodes, which keep
-    their own id.  Deterministic: the fixpoint is unique regardless of
-    execution order — and regardless of WHICH execution strategy runs: up
-    to ``driver_edge_cap`` edge rows the closure is a driver union-find
-    (labels returned as a local relation), above it the iterative
-    min-label propagation loop; both compute the identical
-    min-reachable-id fixpoint (pinned by the
-    ``test_random_graphs_match_union_find`` property on both paths).
-    Pass ``driver_edge_cap=0`` to force the distributed loop.
+def _propagate(raw: DataFrame, max_iter: int = 25) -> DataFrame:
+    """The distributed closure over the edge checkpoint *raw* (``a``,
+    ``b``): ``DataFrame[node, label]`` for every non-null endpoint, the
+    label being the minimum id reachable from it, by two-hop min-label
+    propagation.
 
     Raises ``RuntimeError`` if not converged within ``max_iter`` rounds;
     each round materializes TWO propagation hops, so the cap allows
     component diameters up to 2·max_iter (a real near-dup corpus
     converges in ≤ 3 rounds; hitting the cap means the edge list is
-    chain-shaped and the large-star/small-star variant should be used).
-    """
-    raw = _edge_checkpoint(edges, src_col, dst_col)
-    roots = _driver_roots(raw, driver_edge_cap)
-    if roots is None:
-        return _propagate(raw, nodes, node_col, max_iter)
-    ntype = raw.schema["a"].dataType
-    lab = local_frame(
-        edges.sparkSession,
-        list(roots.items()),
-        T.StructType(
-            [T.StructField("node", ntype), T.StructField("label", ntype)]
-        ),
-    )
-    if nodes is None:
-        return lab
-    return (
-        nodes.select(F.col(node_col).alias("node"))
-        .join(F.broadcast(lab.withColumnRenamed("label", "_lab")), "node", "left")
-        .select("node", F.coalesce(F.col("_lab"), F.col("node")).alias("label"))
-    )
-
-
-def _propagate(
-    raw: DataFrame, nodes: DataFrame | None, node_col: str, max_iter: int = 25
-) -> DataFrame:
-    """The distributed closure over the edge checkpoint *raw* (``a``,
-    ``b``): ``DataFrame[node, label]`` by two-hop min-label propagation."""
+    chain-shaped and the large-star/small-star variant should be used)."""
     npart = raw.sparkSession.sparkContext.defaultParallelism
     # Symmetrize + SELF-LOOP by EXPLODING out of one pass rather than
     # unioning branches. Self-loops (v, v) for every node make each
@@ -206,15 +164,6 @@ def _propagate(
     sym = raw.select(F.explode(F.array(*orient)).alias("e")).select(
         "e.a", "e.b"
     )
-    if nodes is not None:
-        # explicit roster (isolated nodes included): their self-loops join
-        # the same adjacency; distinct() below absorbs the overlap with
-        # the edge-derived loops
-        sym = sym.unionByName(
-            nodes.select(
-                F.col(node_col).alias("a"), F.col(node_col).alias("b")
-            )
-        )
     # a null endpoint joins nothing: drop the orientations that carry one
     # (the non-null end keeps its self row), as the driver path does
     adj = (
@@ -223,23 +172,16 @@ def _propagate(
         .coalesce(npart)
         .localCheckpoint()
     )
-    node_set = (
-        adj.filter(F.col("a") == F.col("b")).select(
-            F.col("a").alias(node_col)
-        )
-        if nodes is None
-        else nodes
-    )
     # The labels checkpoint keeps round 1's plan shape identical to later
     # rounds (checkpoint-scan input), so the loop compiles ONE codegen
     # plan reused every round.
     labels = (
-        node_set.select(
-            F.col(node_col).alias("node"), F.col(node_col).alias("label")
-        )
+        adj.filter(F.col("a") == F.col("b"))
+        .select(F.col("a").alias("node"), F.col("a").alias("label"))
         .coalesce(npart)
         .localCheckpoint()
     )
+
     def _hop(lab: DataFrame) -> DataFrame:
         return (
             adj.join(lab, adj.b == lab.node)
@@ -281,7 +223,7 @@ def _propagate(
         labels = stepped.drop("_chg")
         if not changed:
             return labels
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    raise RuntimeError(f"dedup closure: no fixpoint in {max_iter} rounds")
 
 
 def dedup_clusters(
@@ -324,7 +266,7 @@ def dedup_clusters(
     raw = _edge_checkpoint(pairs, id_a, id_b)
     roots = _driver_roots(raw, DRIVER_EDGE_CAP)
     if roots is None:
-        cc = _propagate(raw, None, "node")
+        cc = _propagate(raw)
         sizes = cc.groupBy("label").agg(F.count(F.lit(1)).alias("_csz"))
         labeled = cc.join(sizes, "label").select(
             "node", F.col("label").alias("_cl"), "_csz"

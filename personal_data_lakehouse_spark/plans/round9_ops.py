@@ -136,7 +136,7 @@ def t_corpus_pipeline_incremental(spark, sf_dir):
     Scale: the batch's text is the only text read — gates, fingerprints,
     shingles, minhashes are O(batch); candidate verification is O(new
     band collisions); the closure runs the adaptive
-    ``connected_components`` over the merged sparse EDGE table (never
+    ``dedup_clusters`` closure over the merged sparse EDGE table (never
     the corpus); rebalance/split/pack run on the id+int survivor
     skeleton. A daily 0.1% delta into a 100 TB corpus costs ~0.1% of the
     full-rebuild text work plus sparse-state maintenance.

@@ -1,6 +1,7 @@
-"""Connected-components dedup clustering: unit semantics on hand-built
-graphs, plus a hypothesis differential against a sequential union-find
-(the differential gate covers the LSH-fed query end-to-end)."""
+"""Connected-components dedup clustering: ``dedup_clusters`` on hand-built
+graphs and on both closure paths, plus a hypothesis differential against a
+sequential union-find (the differential gate covers the LSH-fed queries
+end-to-end)."""
 
 from __future__ import annotations
 
@@ -10,57 +11,58 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.dedup import cluster
-from personal_data_lakehouse_spark.dedup.cluster import (
-    connected_components,
-    dedup_clusters,
-)
+from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 
 
-def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "src long, dst long")
+def _clusters(spark, docs, pairs, cap=cluster.DRIVER_EDGE_CAP):
+    """``{doc_id: (cluster_id, is_canonical, cluster_size)}`` of
+    ``dedup_clusters`` over the ids *docs* and the edges *pairs*, with
+    ``DRIVER_EDGE_CAP`` set to *cap* (0 forces the propagation loop)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "DRIVER_EDGE_CAP", cap)
+        out = dedup_clusters(
+            spark.createDataFrame([(d,) for d in docs], "doc_id long"),
+            spark.createDataFrame(pairs, "id_a long, id_b long"),
+        ).collect()
+    return {
+        r.doc_id: (r.cluster_id, r.is_canonical, r.cluster_size) for r in out
+    }
 
 
 # Every shape test runs on BOTH execution strategies: the driver
-# union-find (default cap) and the distributed propagation loop
-# (driver_edge_cap=0) — the adaptive gate must be invisible in results.
-_CAPS = pytest.mark.parametrize("cap", [65536, 0], ids=["driver", "loop"])
+# union-find (default cap) and the distributed propagation loop (cap 0) —
+# the adaptive gate must be invisible in results.
+_CAPS = pytest.mark.parametrize(
+    "cap", [cluster.DRIVER_EDGE_CAP, 0], ids=["driver", "loop"]
+)
 
 
 @_CAPS
 def test_two_components_and_chain(spark, cap):
     # {1,2,3} dense triangle, {10,11,12,13} a chain — min-label must cross
     # the whole chain (exercises multi-round propagation).
-    e = _edges(spark, [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13)])
-    got = {
-        (r.node, r.label)
-        for r in connected_components(e, driver_edge_cap=cap).collect()
+    pairs = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13)]
+    got = _clusters(spark, [1, 2, 3, 10, 11, 12, 13], pairs, cap)
+    assert got == {
+        1: (1, True, 3), 2: (1, False, 3), 3: (1, False, 3),
+        10: (10, True, 4), 11: (10, False, 4), 12: (10, False, 4),
+        13: (10, False, 4),
     }
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10), (13, 10)}
 
 
 @_CAPS
 def test_edge_orientation_irrelevant(spark, cap):
-    # Same component regardless of (src, dst) order.
-    got = {
-        (r.node, r.label)
-        for r in connected_components(
-            _edges(spark, [(5, 2), (2, 9)]), driver_edge_cap=cap
-        ).collect()
-    }
-    assert got == {(2, 2), (5, 2), (9, 2)}
+    # Same component regardless of (id_a, id_b) order.
+    got = _clusters(spark, [2, 5, 9], [(5, 2), (2, 9)], cap)
+    assert got == {2: (2, True, 3), 5: (2, False, 3), 9: (2, False, 3)}
 
 
 @_CAPS
 def test_explicit_node_superset_keeps_isolated(spark, cap):
-    nodes = spark.createDataFrame([(1,), (2,), (99,)], "node long")
-    e = _edges(spark, [(1, 2)])
-    got = {
-        (r.node, r.label)
-        for r in connected_components(
-            e, nodes=nodes, driver_edge_cap=cap
-        ).collect()
-    }
-    assert got == {(1, 1), (2, 1), (99, 99)}
+    # the corpus is a superset of the edge endpoints: a doc with no pair
+    # keeps its own id as a singleton cluster
+    got = _clusters(spark, [1, 2, 99], [(1, 2)], cap)
+    assert got == {1: (1, True, 2), 2: (1, False, 2), 99: (99, True, 1)}
 
 
 def test_dedup_clusters_full_corpus_labeling(spark):
@@ -78,11 +80,12 @@ def test_dedup_clusters_full_corpus_labeling(spark):
 
 def test_nonconvergence_raises(spark):
     # max_iter=1 (= 2 propagation hops) cannot close a 4-node chain.
-    # driver_edge_cap=0 forces the loop (the tiny chain would otherwise
-    # take the union-find path and never iterate)
-    e = _edges(spark, [(10, 11), (11, 12), (12, 13)])
+    e = spark.createDataFrame(
+        [(10, 11), (11, 12), (12, 13)], "id_a long, id_b long"
+    )
+    raw = cluster._edge_checkpoint(e, "id_a", "id_b")
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(e, max_iter=1, driver_edge_cap=0)
+        cluster._propagate(raw, max_iter=1)
 
 
 def _union_find(pairs, n=10):
@@ -127,22 +130,19 @@ _EVERY_SHAPE = [
 @given(pairs=_PAIRS)
 @example(pairs=_EVERY_SHAPE)
 def test_random_graphs_match_union_find(spark, cap, pairs):
-    """BOTH execution strategies must reach the same unique fixpoint
-    (min node id per component) as a sequential union-find on ANY edge
-    list — including self-loops, duplicate/reversed edges, null endpoints
-    and the chain shapes that need the most rounds. Guards the fused
-    round structure and its hop-2-only convergence test against
-    off-by-one-hop early exits, and the driver union-find against
-    min-root drift. Every non-null endpoint is a node."""
+    """BOTH execution strategies must reach the same unique fixpoint as a
+    sequential union-find on ANY edge list over the 10-doc corpus —
+    including self-loops, duplicate/reversed edges, null endpoints and the
+    chain shapes that need the most rounds: cluster id (min id of the
+    component), canonical flag and cluster size of every doc. Guards the
+    fused round structure and its hop-2-only convergence test against
+    off-by-one-hop early exits, and the driver union-find against min-root
+    drift."""
     root = _union_find(pairs)
-    want = {n: root[n] for e in pairs for n in e if n is not None}
-
-    e = _edges(spark, pairs)
-    got = {
-        r.node: r.label
-        for r in connected_components(e, driver_edge_cap=cap).collect()
+    want = {
+        d: (root[d], root[d] == d, root.count(root[d])) for d in range(10)
     }
-    assert got == want
+    assert _clusters(spark, range(10), pairs, cap) == want
 
 
 def _jobs(spark, group, action):
@@ -164,38 +164,16 @@ def test_driver_path_runs_bounded_eager_jobs(spark):
     checkpoint + the bounded limit(cap+1) collect) so a refactor that
     silently re-introduces per-round materialization fails here instead
     of waiting for a bench regression."""
-    e = _edges(spark, [(1, 2), (2, 3), (10, 11)])
+    docs = spark.range(1, 12).withColumnRenamed("id", "doc_id")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
     # labels DF built, NOT consumed
-    jobs = _jobs(spark, "cc-probe", lambda: connected_components(e))
+    jobs = _jobs(spark, "cc-probe", lambda: dedup_clusters(docs, pairs))
     assert jobs <= 2, (
         f"driver-path closure ran {jobs} eager jobs — the bounded-collect "
         "contract (edge checkpoint + limit(cap+1) collect) is broken"
     )
-
-
-@pytest.mark.parametrize("cap", [None, 0], ids=["driver", "loop"])
-@settings(max_examples=6, deadline=None)
-@given(pairs=_PAIRS)
-@example(pairs=_EVERY_SHAPE)
-def test_dedup_clusters_random_graphs_match_union_find(spark, cap, pairs):
-    """dedup_clusters on both paths (the loop forced by a zero cap) against
-    a sequential union-find over the 10-doc corpus: cluster id, canonical
-    flag and cluster size of every doc, null endpoints dropped."""
-    root = _union_find(pairs)
-    want = {
-        d: (root[d], root[d] == d, root.count(root[d])) for d in range(10)
-    }
-    docs = spark.range(10).withColumnRenamed("id", "doc_id")
-    with pytest.MonkeyPatch.context() as mp:
-        if cap is not None:
-            mp.setattr(cluster, "DRIVER_EDGE_CAP", cap)
-        out = dedup_clusters(
-            docs, spark.createDataFrame(pairs, "id_a long, id_b long")
-        ).collect()
-    got = {
-        r.doc_id: (r.cluster_id, r.is_canonical, r.cluster_size) for r in out
-    }
-    assert got == want
 
 
 def test_driver_path_returns_local_labels_consumed_in_two_jobs(spark):
@@ -239,19 +217,20 @@ def test_over_cap_path_runs_the_edge_plan_once(spark):
 
 
 def test_cap_boundary_falls_through_to_loop(spark):
-    """A graph whose undirected edge count exceeds the cap must take the
-    distributed loop and still produce the exact fixpoint — pins the
-    limit(cap+1) probe's fall-through arithmetic (an off-by-one that
-    collected a TRUNCATED edge list would silently under-merge)."""
-    e = _edges(spark, [(i, i + 1) for i in range(5)])  # 5-edge chain
-    got = {
-        r.node: r.label
-        for r in connected_components(e, driver_edge_cap=4).collect()
-    }
-    assert got == {i: 0 for i in range(6)}
-    # and exactly at the cap the driver path must still merge everything
-    got = {
-        r.node: r.label
-        for r in connected_components(e, driver_edge_cap=5).collect()
-    }
-    assert got == {i: 0 for i in range(6)}
+    """A graph whose edge rows exceed the cap must take the distributed
+    loop and still produce the exact fixpoint — pins the limit(cap+1)
+    probe's fall-through arithmetic (an off-by-one that collected a
+    TRUNCATED edge list would silently under-merge). The path taken shows
+    in the returned plan: only the loop's labels are an RDD checkpoint."""
+    docs = spark.range(6).withColumnRenamed("id", "doc_id")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
+    )  # 5-edge chain
+    for cap, loop in ((4, True), (5, False)):  # over, and exactly at, the cap
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cluster, "DRIVER_EDGE_CAP", cap)
+            out = dedup_clusters(docs, pairs)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("LogicalRDD" in plan) == loop, (cap, plan)
+        got = {r.doc_id: (r.cluster_id, r.cluster_size) for r in out.collect()}
+        assert got == {i: (0, 6) for i in range(6)}

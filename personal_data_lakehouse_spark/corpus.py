@@ -80,6 +80,9 @@ def rebalance_stage(docs: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
+    # The unpartitioned window below is the one Spark logs as "No Partition
+    # Defined for Window operation": it sees one row per source, so its
+    # single partition is bounded by the number of sources, not the corpus.
     thr = counts.select(
         "source",
         "n_s",

@@ -270,6 +270,11 @@ def write_ordered_parts(
 
     from pyspark.sql import Window
 
+    # A global ntile: Spark warns that it moves every row to one partition.
+    # It cuts the rows of a manufactured replay stream once per process
+    # (callers gate it on _SUCCESS), so only a query's first build pays
+    # it; a production stream's files arrive from outside and never take
+    # this path.
     tagged = df.withColumn("b", F.ntile(n_files).over(Window.orderBy(order_col)))
     os.makedirs(dst, exist_ok=True)
     base_t = 1_600_000_000  # any fixed instant; only the ORDER matters

@@ -172,19 +172,6 @@ def test_stream_stream_attribution_join(spark, tmp_path):
     assert streamed == batch
 
 
-def test_transform_with_state_guard(spark, events_stream):
-    """The Spark-4 StatefulProcessor path degrades with a clear error when
-    the worker protocol deps (protobuf) are absent, pointing at the
-    applyInPandasWithState fallback; full equivalence tests live in
-    test_stateful_v2.py and activate wherever protobuf exists."""
-    from personal_data_lakehouse_spark.streaming import stateful_v2
-
-    if stateful_v2.transform_with_state_available():
-        pytest.skip("protobuf present — covered by test_stateful_v2.py")
-    with pytest.raises(RuntimeError, match="protobuf"):
-        stateful_v2.rolling_features_stream(events_stream)
-
-
 def test_python_datasource_streaming_stock_rest(spark, tmp_path):
     """Streaming stock_rest: day-indexed offsets produce one micro-batch
     per trading day; the drained table equals the batch source's rows."""

@@ -1,5 +1,6 @@
-"""The instrument scripts under tools/: importable without running, and the
-registry audit's job-group counting on synthetic callables."""
+"""The instrument scripts under tools/ and bench.py: importable without
+running, and the registry audit's job-group counting on synthetic
+callables."""
 
 from __future__ import annotations
 
@@ -21,12 +22,14 @@ TOOLS = sorted(
 
 
 def test_tools_import_without_side_effects():
-    # A fresh interpreter: importing every tool must print nothing, start
-    # no SparkContext, leave the stray argv unparsed, and expose main().
+    # A fresh interpreter: importing every tool and bench must print
+    # nothing, start no SparkContext, leave the stray argv unparsed, and
+    # expose main().
+    modules = ["tools." + name for name in TOOLS] + ["bench"]
     probe = (
         "import importlib, pyspark\n"
-        f"for name in {TOOLS!r}:\n"
-        "    mod = importlib.import_module('tools.' + name)\n"
+        f"for name in {modules!r}:\n"
+        "    mod = importlib.import_module(name)\n"
         "    assert callable(getattr(mod, 'main', None)), name\n"
         "assert pyspark.SparkContext._active_spark_context is None\n"
     )

@@ -1,13 +1,12 @@
 """Isolated per-query timing + formatted-plan capture.
 
 Times ONE OR MORE registered queries in a fresh engine session through
-``bench.warm_sweep`` — the bench methodology: a cold build/execute split,
-three-or-more warm plan-build + noop-sink runs (re-run while they spread
-wider than ``bench.SPREAD_RETRY``), canary probes, cache cleared between
-queries — so a change can be judged against host noise minutes after its
-"before" without paying for a full bench.py sweep. Optionally writes
-``df.explain("formatted")`` to a file per query (plan evidence,
-<DIR>/<q>_{before,after}.txt).
+``bench.warm_sweep``, one pass of the bench protocol: a cold build/execute
+split, ``bench.WARM_RUNS`` warm plan-build + noop-sink runs summarized as
+median, p90 and n, cache cleared between queries. A change can so be timed
+minutes after its "before" without paying for a full bench.py run.
+Optionally writes ``df.explain("formatted")`` to a file per query (plan
+evidence, <DIR>/<q>_{before,after}.txt).
 
 Usage:
     python tools/qtime.py [--explain DIR --suffix before] q1 q2 ...
@@ -23,7 +22,6 @@ import io
 import json
 import os
 import sys
-from collections import defaultdict
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -63,13 +61,12 @@ def main() -> None:
             spark.catalog.clearCache()
     if args.explain_only:
         return
-    cold = defaultdict(dict)
-    sweep = warm_sweep(spark, qs, args.queries, sf_dir, cold_out=cold)
-    for name in args.queries:
-        print(f"{name:40s} median={sweep['timings'][name]:7.3f}  "
-              f"cold={cold['cold_queries'][name]:7.3f}  "
-              f"runs={sweep['warm_runs'][name]}", flush=True)
-    print(json.dumps({"sf_dir": sf_dir, "cold": cold, **sweep}))
+    sweep = warm_sweep(spark, qs, args.queries, sf_dir, cold=True)
+    for name, rec in sweep.items():
+        print(f"{name:40s} median={rec['median']:7.3f}  p90={rec['p90']:7.3f}  "
+              f"n={rec['n']}  cold={rec['cold_plan'] + rec['cold_exec']:7.3f}",
+              flush=True)
+    print(json.dumps({"sf_dir": sf_dir, "queries": sweep}))
 
 
 if __name__ == "__main__":

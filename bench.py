@@ -155,15 +155,16 @@ def warm_sweep(spark, qs, names, sf_dir, cold=False) -> dict[str, dict]:
     return out
 
 
-def span_jobs(spark, tracer: Tracer) -> dict[str, tuple[float, int]]:
-    """Wall seconds and Spark job count of each span *tracer* recorded.
+def span_jobs(spark, tracer: Tracer) -> dict[str, tuple[float, list[int]]]:
+    """Wall seconds and Spark job ids of each span *tracer* recorded.
 
     Jobs are attributed by submission time to the span whose window holds
     them (``perfbench.spans.attribute``), so jobs submitted from threads
-    that do not inherit the caller's job group count too. The tracer is
-    attached only now, so the spans themselves sampled no cache sizes.
-    Spark keeps only its most recent jobs (spark.ui.retainedJobs); if no
-    retained job predates the first span, the oldest span jobs may be gone.
+    that do not inherit the caller's job group (stream micro-batches) count
+    too. The tracer is attached only now, so the spans themselves sampled
+    no cache sizes. Spark keeps only its most recent jobs
+    (spark.ui.retainedJobs); if no retained job predates the first span,
+    the oldest span jobs may be gone, so run one job before tracing.
     """
     tracer.attach(spark)
     jobs = tracer.collect()["jobs"]
@@ -172,7 +173,10 @@ def span_jobs(spark, tracer: Tracer) -> dict[str, tuple[float, int]]:
         raise RuntimeError("Spark evicted job records of the traced spans")
     by_span = attribute(tracer.spans, jobs)
     return {
-        s["name"]: (round(s["end"] - s["start"], 3), len(by_span[s["id"]]))
+        s["name"]: (
+            round(s["end"] - s["start"], 3),
+            sorted(j["jobId"] for j in by_span[s["id"]]),
+        )
         for s in tracer.spans
     }
 
@@ -289,8 +293,8 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
             "increment_sec": inc_sec,
             "rebuild_sec": rb_sec,
             "wall_ratio": round(inc_sec / rb_sec, 3),
-            "jobs_increment": inc_jobs,
-            "jobs_rebuild": rb_jobs,
+            "jobs_increment": len(inc_jobs),
+            "jobs_rebuild": len(rb_jobs),
         }
 
     # text_rows_*, vec_rows_*, sem_edges_added and jobs_* are the

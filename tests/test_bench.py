@@ -41,5 +41,5 @@ def test_span_jobs_count_jobs_of_plain_threads(spark):
         sc.setJobGroup(None, None)
     assert not th.is_alive()
     sec, jobs = bench.span_jobs(spark, tracer)["block"]
-    assert jobs == 1 and sec > 0
+    assert len(jobs) == 1 and sec > 0
     assert list(sc.statusTracker().getJobIdsForGroup("test-bench-thread")) == []

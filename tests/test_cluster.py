@@ -10,6 +10,8 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+import bench
+from perfbench.spans import Tracer
 from personal_data_lakehouse_spark.dedup import cluster
 from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 
@@ -145,16 +147,13 @@ def test_random_graphs_match_union_find(spark, cap, pairs):
     assert _clusters(spark, range(10), pairs, cap) == want
 
 
-def _jobs(spark, group, action):
-    """Number of Spark jobs *action* runs, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
+def _jobs(spark, action):
+    """Number of Spark jobs *action* runs, counted by submission time."""
+    spark.sparkContext.parallelize([0]).count()
+    tracer = Tracer(enabled=True)
+    with tracer.span("action"):
         action()
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(bench.span_jobs(spark, tracer)["action"][1])
 
 
 def test_driver_path_runs_bounded_eager_jobs(spark):
@@ -169,7 +168,7 @@ def test_driver_path_runs_bounded_eager_jobs(spark):
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
     # labels DF built, NOT consumed
-    jobs = _jobs(spark, "cc-probe", lambda: dedup_clusters(docs, pairs))
+    jobs = _jobs(spark, lambda: dedup_clusters(docs, pairs))
     assert jobs <= 2, (
         f"driver-path closure ran {jobs} eager jobs — the bounded-collect "
         "contract (edge checkpoint + limit(cap+1) collect) is broken"
@@ -188,7 +187,7 @@ def test_driver_path_returns_local_labels_consumed_in_two_jobs(spark):
         assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
     assert "LocalTableScan" in qe.executedPlan().toString()
     rows = []
-    jobs = _jobs(spark, "dedup-consume", lambda: rows.extend(out.collect()))
+    jobs = _jobs(spark, lambda: rows.extend(out.collect()))
     assert len(rows) == 6
     assert jobs <= 2, f"driver-path labels consumed in {jobs} jobs"
 

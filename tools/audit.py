@@ -1,7 +1,11 @@
-"""Registry audit: per registered query, the eager Spark jobs its callable
-runs while BUILDING the plan, and the task counts of the stages its
-consumption runs. One vanilla session (``driver_sim.vanilla_session``),
-one sweep, both read from StatusTracker by job group.
+"""Registry audit: per registered query, the Spark jobs its callable
+runs while BUILDING the plan, the jobs and stage task counts of its
+consumption, and the wall seconds of each. One vanilla session
+(``driver_sim.vanilla_session``), one sweep. Jobs are counted by
+``bench.span_jobs``: each job belongs to the span (cold build, warm
+build, consume) whose window holds its submission time, so the
+micro-batch jobs a streaming-in-query build runs on the stream's own
+threads count too.
 
 Build: a registry callable is supposed to return a lazy plan — execution
 happens when the consumer acts. An eager job at construction time is
@@ -26,6 +30,9 @@ exchange inside a cached block" grep flagged six queries of which five
 were false positives. Run this after any change that adds persist() sites
 or build-time work.
 
+Each line prints every span's seconds next to its job count, so one line
+per query reads build time against consume time.
+
 Usage: python tools/audit.py [query ...]   (default: every query)
 Env: AUDIT_SF_DIR (default: the sf0.01 fixture).
 Exit 1 if any query errors or exceeds either budget.
@@ -37,6 +44,9 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import span_jobs  # noqa: E402
+from perfbench.spans import Tracer  # noqa: E402
 
 SF = os.environ.get("AUDIT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -55,16 +65,12 @@ SF = os.environ.get("AUDIT_SF_DIR", "/root/testdata/sf0.01")
 #    accepted collects (VERDICT r7), now counted.
 #  - streaming-in-query: the availableNow run + sentinel/read-back jobs.
 #  - maintenance/versioned-table ops: O(files) manifest work.
-# Budgets sit just above the measured warm counts (in parens; closure
-# consumers re-measured 2026-10-17 at sf0.01, budget = count + 2). Known instrument limit: Structured Streaming executes on its
-# own threads, which do NOT inherit the driver thread's job group — the
-# q_stream_* counts here cover only driver-thread jobs (fixture probes,
-# sentinel read-backs); the stream's own micro-batch jobs are measured
-# by the differential/bench harnesses instead. Several documented O(K)
-# collects (PQ codebooks, waterfill caps, MV manifests) measured ZERO at
-# build time — they fire at consumption — so they carry no entry; if a
-# refactor moves one to build time this audit flags it for
-# re-adjudication.
+# Budgets sit just above the measured warm counts (in parens; measured
+# at sf0.01 by span_jobs, budget = count + 2, the largest count where
+# runs differ). Several documented O(K) collects (PQ codebooks,
+# waterfill caps, MV manifests) measured ZERO at build time — they fire
+# at consumption — so they carry no entry; if a refactor moves one to
+# build time this audit flags it for re-adjudication.
 EAGER_ALLOW: dict[str, int] = {
     # --- adaptive-closure consumers: the raw-edge checkpoint (one job
     #     per edge-plan stage) + the bounded limit(cap+1) collect ---
@@ -77,10 +83,10 @@ EAGER_ALLOW: dict[str, int] = {
     # the merged edge table (edge checkpoint + bounded collect), plus the
     # O(1) threshold agg on the first build of a process
     "t_corpus_pipeline_incremental": 11,  # (9)
-    # r10 v2 (semantic) family: the same closure-family build jobs, now
-    # over the merged lexical∪semantic edge table, plus the semantic
-    # edge-union the adaptive closure collects at build; the incremental
-    # flavor adds the stored-index probe materializations
+    # the semantic family: the same closure-family build jobs, over the
+    # merged lexical∪semantic edge table, plus the semantic edge-union
+    # the adaptive closure collects at build; the incremental flavor adds
+    # the stored-index probe materializations
     "t_corpus_pipeline_sem_e2e": 10,  # (8)
     "t_corpus_pipeline_incremental_v2": 15,  # (13)
     # closure consumer over media-feature pairs (edge checkpoint +
@@ -89,97 +95,80 @@ EAGER_ALLOW: dict[str, int] = {
     "m_media_neardup": 5,  # (3)
     # --- iterative algorithms: per-process-cached loop outputs make the
     #     warm build cheap; the loop itself is the cold build ---
-    "m_kmeans_centroids": 4,  # (1)
-    "m_pagerank_top20": 4,  # (0 warm / 2 cold — cache build)
+    "m_kmeans_centroids": 3,  # (1)
+    "m_pagerank_top20": 2,  # (0 warm / 2 cold — cache build)
     # --- documented O(files) manifest work at build ---
     "q_time_travel_diff": 6,  # (4)
-    # --- streaming-in-query driver-thread jobs (see note above) ---
-    "q_stream_dedup": 8,
-    "q_stream_jsonl_intake": 8,
-    "q_stream_semdedup_admit": 8,  # (3)
-    # warm build = the empty decisions-sink seed write (one job); the
-    # foreachBatch micro-batches run on stream threads (see note above)
-    "q_stream_semdedup_admit_v2": 3,  # (1)
-    # the delta stream runs at build; its foreachBatch increments run on
-    # stream threads (not job-group-attributed, see note above) — the
-    # measured driver-thread jobs are the final rollup's closure build
-    "t_stream_corpus_increments": 4,  # (2)
-    # the v2 sibling: same delta stream at build (stream threads escape
-    # attribution), driver-thread jobs are the v2 rollup's closure build
-    "t_stream_corpus_increments_v2": 5,  # (3)
-    "q_stream_session_agg": 8,
-    "q_stream_sliding_agg": 8,
-    "q_stream_static_enrich": 8,
-    "q_stream_stream_join": 8,
-    "q_stream_substring_spans": 8,
-    "q_stream_text_intake": 8,
-    "q_stream_tumbling_agg": 8,  # (2)
-}
-
-# Streaming-in-query entries run micro-batch jobs whose stage counts are
-# batch-size artifacts; their consumption is not stage-audited.
-STAGE_SKIP = {
-    "q_stream_dedup",
-    "q_stream_jsonl_intake",
-    "q_stream_semdedup_admit",
-    "q_stream_session_agg",
-    "q_stream_sliding_agg",
-    "q_stream_static_enrich",
-    "q_stream_stream_join",
-    "q_stream_substring_spans",
-    "q_stream_text_intake",
-    "q_stream_tumbling_agg",
+    # --- streaming-in-query: the availableNow run's micro-batch jobs
+    #     (on the stream's own threads) + sentinel/read-back jobs ---
+    "q_stream_dedup": 5,  # (3)
+    "q_stream_jsonl_intake": 5,  # (3)
+    "q_stream_semdedup_admit": 5,  # (3)
+    "q_stream_session_agg": 6,  # (4)
+    "q_stream_sliding_agg": 6,  # (4)
+    "q_stream_static_enrich": 5,  # (3)
+    "q_stream_stream_join": 6,  # (4)
+    "q_stream_substring_spans": 4,  # (2)
+    "q_stream_text_intake": 5,  # (3)
+    "q_stream_tumbling_agg": 6,  # (4)
+    # the empty decisions-sink seed write, then one foreachBatch per
+    # micro-batch: the admit probe against the earlier epochs' index
+    "q_stream_semdedup_admit_v2": 23,  # (21)
+    # the delta stream runs at build: each foreachBatch increment merges
+    # into the carried corpus state and checkpoints it, then the final
+    # rollup runs the closure build
+    "t_stream_corpus_increments": 102,  # (100)
+    # the semantic sibling: the same stream over the seven-table state.
+    # Its count varies by a few jobs (146-149) from build to build, in
+    # AQE stage jobs and carried-state localCheckpoint jobs.
+    "t_stream_corpus_increments_v2": 151,  # (149)
+    # the decontamination spine's delta stream runs at build: each
+    # micro-batch merges into the carried spine and checkpoints both
+    # carried frames
+    "t_stream_decontaminate": 14,  # (12)
 }
 
 # Inspected, DELIBERATE over-budget caches (reported but not counted as
 # failures): m_pagerank_top20's 200-partition edge cache carries
 # hashpartitioning(src) that every iteration's join REUSES — coalescing
 # it would trade task-count overhead for extra edge-list shuffles per
-# iteration and lose at scale. Full-registry audit 2026-08-15: 201
-# queries, this was the ONLY over-budget entry.
+# iteration and lose at scale. In the full-registry audit (230 queries,
+# sf0.01) it is the ONLY over-budget entry.
 STAGE_ALLOW = {"m_pagerank_top20"}
 
 
-def run_in_group(sc, group: str, action) -> list[int]:
-    """Run ``action()`` under job group *group*; return the group's job ids."""
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setJobGroup(None, None)
-    # the status store is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group) or [])
-
-
 def stages_of(sc, job_ids) -> list[tuple[int, int]]:
-    """(stage id, task count) of every stage of the given jobs."""
+    """(stage id, task count) of every stage of the given jobs that Spark
+    still retains: past spark.ui.retainedStages it drops skipped stages
+    first, and a skipped stage runs no tasks."""
     tracker = sc.statusTracker()
     ids = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
-    return [(s, tracker.getStageInfo(s).numTasks) for s in sorted(ids)]
+    infos = ((s, tracker.getStageInfo(s)) for s in sorted(ids))
+    return [(s, info.numTasks) for s, info in infos if info is not None]
 
 
-def audit_query(spark, name: str, fn, sf_dir, consume: bool = True):
-    """Build ``fn(spark, sf_dir)`` twice and, if *consume*, count the warm
-    build once. Returns (cold build jobs, warm build jobs, consumption
-    stages as (id, tasks), or None when not consumed)."""
-    sc = spark.sparkContext
+def audit_query(spark, fn, sf_dir) -> dict[str, tuple[float, list[int]]]:
+    """Build ``fn(spark, sf_dir)`` twice, then count the warm build once,
+    each inside its own span; return ``bench.span_jobs`` of the spans
+    "cold", "warm" and "consume"."""
+    tracer = Tracer(enabled=True)
     built = []
-    cold, warm = (
-        len(run_in_group(sc, f"build:{name}:{rep}",
-                         lambda: built.append(fn(spark, sf_dir))))
-        for rep in range(2)
-    )
-    if not consume:
-        return cold, warm, None
-    return cold, warm, stages_of(sc, run_in_group(sc, f"consume:{name}", built[-1].count))
+    for rep in ("cold", "warm"):
+        with tracer.span(rep):
+            built.append(fn(spark, sf_dir))
+    with tracer.span("consume"):
+        built[-1].count()
+    return span_jobs(spark, tracer)
 
 
 def main() -> int:
     from tools.driver_sim import vanilla_session
 
     spark = vanilla_session()
-    budget = spark.sparkContext.defaultParallelism * 2
+    sc = spark.sparkContext
+    budget = sc.defaultParallelism * 2
+    # span_jobs needs a retained job older than the first query's spans
+    sc.parallelize([0]).count()
 
     import __spark_entry__  # noqa: F401 — populates REGISTRY
     from personal_data_lakehouse_spark.plans.registry import REGISTRY
@@ -189,28 +178,30 @@ def main() -> int:
     for name in sorted(names):
         spark.catalog.clearCache()
         try:
-            cold, warm, stages = audit_query(
-                spark, name, REGISTRY[name].fn, SF, name not in STAGE_SKIP
-            )
+            spans = audit_query(spark, REGISTRY[name].fn, SF)
         except Exception as e:  # noqa: BLE001 — report, keep sweeping
             print(f"{name:32s} ERROR {type(e).__name__}: {e}")
             errors += 1
             continue
         allowed = EAGER_ALLOW.get(name, 0)
-        eager = "OK" if warm <= allowed else "OVER"
+        eager = "OK" if len(spans["warm"][1]) <= allowed else "OVER"
         over_eager += eager == "OVER"
-        big = [st for st in stages or [] if st[1] > budget]
-        if stages is None:
-            stage = "SKIP"
-        elif not big:
+        stages = stages_of(sc, spans["consume"][1])
+        big = [st for st in stages if st[1] > budget]
+        if not big:
             stage = "OK"
         elif name in STAGE_ALLOW:
             stage = "ALLOWED"
         else:
             stage = "OVER"
             over_stage += 1
-        print(f"{name:32s} eager {eager:4s} cold={cold:3d} warm={warm:3d} "
-              f"budget={allowed:2d}  stages {stage}{' ' + str(big) if big else ''}")
+        counts = "  ".join(
+            f"{k}={len(ids):3d} {sec:6.2f}s" for k, (sec, ids) in spans.items()
+        )
+        peak = max((tasks for _, tasks in stages), default=0)
+        print(f"{name:32s} eager {eager:4s} budget={allowed:3d}  {counts}  "
+              f"stages {stage} peak={peak}{' ' + str(big) if big else ''}",
+              flush=True)
     print(f"\n{len(names)} queries audited: {over_eager} over eager budget, "
           f"{over_stage} over stage budget ({budget} tasks/stage), {errors} errors")
     return 1 if over_eager or over_stage or errors else 0

@@ -647,8 +647,7 @@ def t_countmin_heavyhitters(spark, sf_dir):
     # AQE exchange reuse only deduped one). COALESCE first: a cached
     # plan keeps its shuffle partitioning and AQE cannot re-coalesce
     # it, so a vanilla 200-partition driver session would otherwise pay
-    # 200 near-empty tasks per downstream stage (the q_anomaly_mad
-    # lesson)
+    # 200 near-empty tasks per downstream stage
     vocab = (
         _token_vocab(t(spark, sf_dir, "documents"))
         .coalesce(spark.sparkContext.defaultParallelism)

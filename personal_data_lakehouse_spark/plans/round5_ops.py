@@ -813,8 +813,7 @@ def m_triangle_count(spark, sf_dir):
     # coalesce before persist: the cached edge list keeps its shuffle
     # partitioning (AQE cannot re-coalesce a cached plan), so without this
     # every downstream join stage inherits one task per shuffle partition
-    # — 200 near-empty tasks per stage under a default session (same
-    # measured fix as q_anomaly_mad's histogram chain).
+    # — 200 near-empty tasks per stage under a default session.
     edges = (
         cap_out_degree(
             simhash_neardup_pairs(
@@ -1869,17 +1868,19 @@ def q_anomaly_mad(spark, sf_dir):
     comparison is between exactly-representable doubles, so the outlier
     COUNT is bit-stable across engines.
 
-    Scale: ONE pass over the raw events builds the (event_type, cents)
+    Shape: ONE pass over the raw events builds the (event_type, cents)
     value histogram (map-side combined, bounded by |types| × the cents
-    domain); the entire median → deviation → MAD → outlier chain then
-    runs on histogram rows via WEIGHTED percentiles (F.percentile's
-    frequency argument) — the naive formulation re-scans the corpus four
-    times (median pass, deviation build, MAD pass, final count; caught
-    by tools/plan_audit.py). The deviation histogram re-group and both
-    |types|-row percentile tables are histogram-sized; the medians
-    broadcast back. Weighted type-7 interpolation over the histogram is
-    value-identical to row-level percentiles, so the oracle keeps the
-    row-level form."""
+    domain). One shuffle by event_type then carries the whole chain: a
+    WEIGHTED median window (F.percentile's frequency argument) over the
+    type's histogram rows, the per-row deviation, a weighted MAD window
+    over the same partition, and a final per-type aggregate that reuses
+    the window's partitioning — two exchanges, no cache, no join.
+
+    Scale: each window partition is one type's histogram, which a
+    grouped percentile also holds in one buffer, so per-type memory is
+    the cents domain, never the type's event count. Weighted type-7
+    interpolation over the histogram is value-identical to row-level
+    percentiles, so the oracle keeps the row-level form."""
     e = (
         t(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -1887,54 +1888,21 @@ def q_anomaly_mad(spark, sf_dir):
             "event_type", F.floor(F.col("value") * 100).cast("long").alias("cents")
         )
     )
-    # one corpus scan: value histogram per type. Persisted because FOUR
-    # downstream branches (median, deviation build, MAD, final count)
-    # consume it — without the persist Catalyst re-derives it from the
-    # scan per branch (4 corpus scans; caught by plan_audit). The cache
-    # is histogram-sized (|types| × cents domain), not corpus-sized;
-    # CacheManager lifecycle per the standing in-query persist policy.
-    # coalesce before persist: the histogram is tiny, but a cached plan
-    # keeps its shuffle partitioning (AQE cannot re-coalesce it), so
-    # without this every downstream stage inherits one task per shuffle
-    # partition — 200 near-empty tasks under a default session.
-    par = spark.sparkContext.defaultParallelism
-    h = (
-        e.groupBy("event_type", "cents")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .coalesce(par)
-        .persist()
+    h = e.groupBy("event_type", "cents").agg(F.count(F.lit(1)).alias("cnt"))
+    by_type = Window.partitionBy("event_type")
+    dev = h.withColumn(
+        "med", F.percentile("cents", F.lit(0.5), F.col("cnt")).over(by_type)
+    ).withColumn("dev", F.abs(F.col("cents") - F.col("med")))
+    mad = dev.withColumn(
+        "mad", F.percentile("dev", F.lit(0.5), F.col("cnt")).over(by_type)
     )
-    med = h.groupBy("event_type").agg(
-        F.percentile("cents", F.lit(0.5), F.col("cnt")).alias("med")
-    )
-    # deviation histogram (histogram-sized input AND output)
-    hd = (
-        h.join(F.broadcast(med), "event_type")
-        .select(
-            "event_type",
-            "med",
-            F.abs(F.col("cents") - F.col("med")).alias("dev"),
-            "cnt",
-        )
-        .groupBy("event_type", "med", "dev")
-        .agg(F.sum("cnt").alias("cnt"))
-        .coalesce(par)
-        .persist()
-    )
-    mad = hd.groupBy("event_type").agg(
-        F.percentile("dev", F.lit(0.5), F.col("cnt")).alias("mad")
-    )
-    return (
-        hd.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.sum("cnt").alias("n"),
-            F.max("med").alias("med_cents"),
-            F.max("mad").alias("mad_cents"),
-            F.sum(
-                F.when(F.col("dev") > 3 * F.col("mad"), F.col("cnt")).otherwise(0)
-            ).alias("n_outliers"),
-        )
+    return mad.groupBy("event_type").agg(
+        F.sum("cnt").alias("n"),
+        F.max("med").alias("med_cents"),
+        F.max("mad").alias("mad_cents"),
+        F.sum(
+            F.when(F.col("dev") > 3 * F.col("mad"), F.col("cnt")).otherwise(0)
+        ).alias("n_outliers"),
     )
 
 
@@ -2443,7 +2411,8 @@ def q_rolling_active_users(spark, sf_dir):
     # The grid is |users|·|active days| — the whole point of dedup-first is
     # that it's orders of magnitude smaller than the event log. Coalesced
     # so the cached plan doesn't pin one near-empty task per shuffle
-    # partition under a default session (same rationale as q_anomaly_mad).
+    # partition under a default session (AQE cannot re-coalesce a cached
+    # plan).
     ud = (
         t(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())

@@ -17,6 +17,19 @@ Scale notes
 - ``maxPartitionBytes`` kept at the 128 MB default: at 100 TB that yields
   ~800k input splits, which is the right granularity for a 1000-executor
   cluster.
+
+Plan construction
+-----------------
+``spark.python.sql.dataFrameDebugging.enabled`` is off. With it on (Spark's
+default) PySpark wraps every DataFrame and Column call so that it records
+the Python call site: it reads a conf over py4j, sets and clears the JVM's
+``PySparkCurrentOrigin``, and walks the Python stack, per call. That is
+most of the driver-to-JVM round trips of building a plan (one
+``q01_pricing_summary`` build: 725 with capture, 175 without). Errors keep
+their class, message and SQL context; they lose only the Python
+``file:line`` fragment. PySpark reads the flag once, at the first API call
+of the process, and keeps it, so it must be set here when the session is
+built: setting it on a running session changes nothing.
 """
 
 from __future__ import annotations
@@ -81,6 +94,8 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no per-call Python call-site capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)

@@ -96,10 +96,10 @@ def test_headline_exchange_budgets(spark):
         # 4 = gram-dedup exchange (textually once per cached join side) +
         # the pair aggregate
         "t_crossdoc_spans": 4,
-        # 13 textual = the one histogram exchange re-printed per cached
-        # reference (InMemoryRelation child plans) + the tiny med/mad/final
-        # aggregates; executed: 1 corpus histogram + histogram-sized aggs
-        "q_anomaly_mad": 13,
+        # 2 = the (type, cents) histogram aggregate + the event_type
+        # shuffle that the median window, the MAD window and the final
+        # per-type aggregate all share
+        "q_anomaly_mad": 2,
         # 6 textual = the (user, day) grid distinct re-printed per cached
         # branch + the DAU/WAU aggregates + the explode re-group
         "q_rolling_active_users": 6,

@@ -33,6 +33,7 @@ def vanilla_session():
         .appName("driver-sim")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # call-site capture stays at Spark's default, as in the driver's session
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -18,6 +18,10 @@ The timing protocol is fixed, so every run takes the same samples:
   median, and BENCH_LATEST.json adds the p90 and the sample count. A
   pooled median moves only when most samples move, so one contended run
   cannot pass for a plan regression; the p90 shows how far the rest spread.
+- Each sweep also records how many classes Janino compiled during it and
+  the seconds that took ("codegen_compiles"). Warm sweeps find their
+  generated code in Spark's codegen cache and compile almost nothing (a
+  few classes when AQE re-plans a query).
 
 A run does not try to certify that the host was quiet: CPU steal on a
 shared VM is invisible to probes inside the process. Speed changes are
@@ -35,7 +39,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from perfbench.spans import Tracer, attribute  # noqa: E402
-from personal_data_lakehouse_spark.session import get_spark  # noqa: E402
+from personal_data_lakehouse_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 # Headline set: one query per operator family, each a distinct plan shape.
 # R1_BASELINE is the frozen 17-query set the 16.848 s first baseline was
@@ -153,6 +160,18 @@ def warm_sweep(spark, qs, names, sf_dir, cold=False) -> dict[str, dict]:
         out[name] = {**rec, **summary(runs)}
         spark.catalog.clearCache()
     return out
+
+
+def sweeps(spark, qs, names, sf_dir) -> tuple[list[dict], list[dict]]:
+    """SWEEPS passes of ``warm_sweep``, the first one cold, and the Janino
+    compiles of each pass: {"count": classes, "s": seconds}."""
+    out, compiles = [], []
+    for i in range(SWEEPS):
+        n0, s0 = codegen_compiles(spark)
+        out.append(warm_sweep(spark, qs, names, sf_dir, cold=i == 0))
+        n1, s1 = codegen_compiles(spark)
+        compiles.append({"count": n1 - n0, "s": round(s1 - s0, 3)})
+    return out, compiles
 
 
 def span_jobs(spark, tracer: Tracer) -> dict[str, tuple[float, list[int]]]:
@@ -331,12 +350,11 @@ def main() -> None:
     # JVM/codegen warmup on a trivial plan so the first query isn't
     # charged for startup
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    sweeps = [warm_sweep(spark, qs, names, sf_dir, cold=True)]
-    sweeps += [warm_sweep(spark, qs, names, sf_dir) for _ in range(SWEEPS - 1)]
-    warm = {n: summary([r for s in sweeps for r in s[n]["runs"]]) for n in names}
+    passes, compiles = sweeps(spark, qs, names, sf_dir)
+    warm = {n: summary([r for s in passes for r in s[n]["runs"]]) for n in names}
     timings = {n: w["median"] for n, w in warm.items()}
     cold = {
-        k: {n: sweeps[0][n][k] for n in names}
+        k: {n: passes[0][n][k] for n in names}
         for k in ("cold_plan", "cold_plan2", "cold_exec")
     }
     cold["cold_queries"] = {
@@ -374,15 +392,19 @@ def main() -> None:
         incremental=incremental_vs_rebuild(spark, sf_dir),
         warm=warm,
         sweep_baseline17=[
-            baseline17({n: s[n]["median"] for n in names}) for s in sweeps
+            baseline17({n: s[n]["median"] for n in names}) for s in passes
         ],
+        codegen_compiles=compiles,
         **cold,
         notes=(
             "queries = per-query median of the warm runs of all "
             f"{SWEEPS} sweeps pooled ({WARM_RUNS} runs each); 'warm' adds "
             "each query's p90 and sample count n and keeps the samples; "
             "sweep_baseline17 is baseline17 per sweep, to show drift "
-            "within the run. cold_plan is DataFrame construction "
+            "within the run. codegen_compiles is the classes Janino "
+            "compiled in each sweep and the seconds it took; a warm sweep "
+            "that compiles means the codegen cache is smaller than the "
+            "working set. cold_plan is DataFrame construction "
             "(Catalyst analysis + any driver-side setup) and cold_exec "
             "the first noop-sink execution, both from sweep 1; "
             "cold_plan2 is a second build in the same process, so "

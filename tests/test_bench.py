@@ -4,6 +4,7 @@ trivial callables (no fixture data)."""
 from __future__ import annotations
 
 import threading
+import time
 
 import bench
 from perfbench.spans import Tracer
@@ -21,6 +22,18 @@ def test_warm_sweep_records_samples_quantiles_and_cold_split(spark):
         assert min(rec["runs"]) <= rec["median"] <= rec["p90"] <= max(rec["runs"])
         assert {"cold_plan", "cold_exec", "cold_plan2"} <= set(rec)
     assert "cold_plan" not in bench.warm_sweep(spark, qs, ["a"], None)["a"]
+
+
+def test_sweeps_record_codegen_compiles_per_sweep(spark):
+    # A literal unique to this run makes a class no earlier plan compiled;
+    # the later sweeps find it in the codegen cache.
+    k = time.time_ns() % 1_000_003
+    qs = {"a": lambda spark, _sf: spark.range(50).selectExpr(f"id * {k} AS v")}
+    sweeps, compiles = bench.sweeps(spark, qs, ["a"], None)
+    assert len(sweeps) == len(compiles) == bench.SWEEPS
+    assert "cold_plan" in sweeps[0]["a"] and "cold_plan" not in sweeps[1]["a"]
+    assert compiles[0]["count"] > 0 and compiles[0]["s"] > 0
+    assert [c["count"] for c in compiles[1:]] == [0] * (bench.SWEEPS - 1)
 
 
 def test_span_jobs_count_jobs_of_plain_threads(spark):

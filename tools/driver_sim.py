@@ -33,7 +33,8 @@ def vanilla_session():
         .appName("driver-sim")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
-        # call-site capture stays at Spark's default, as in the driver's session
+        # call-site capture and the codegen cache size stay at Spark's
+        # defaults, as in the driver's session
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
